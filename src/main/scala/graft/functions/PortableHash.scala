@@ -112,10 +112,6 @@ object PortableHash {
 
   // ------------------------------------------------- DuckDB SQL emitters
 
-  /** DuckDB twin of md5Window/familyHash. `expr` is a VARCHAR expression. */
-  def duckFamilyHash(i: Int, expr: String): String =
-    s"substr(md5('${i / 4}:' || $expr), ${1 + 8 * (i % 4)}, 8)"
-
   /** DuckDB twin of familyHashLong (exact BIGINT arithmetic). */
   def duckFamilyHashLong(i: Int, expr: String): String =
     s"((${affineA(i)} * ${duckMd5Long48(expr)} + $i) & ${Mask48})"

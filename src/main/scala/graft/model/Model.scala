@@ -24,13 +24,6 @@ final case class DepParse(
     words.indices.map(i => Tok(words(i), heads(i), deprels(i)))
 }
 
-object DepParse {
-  def fromToks(toks: Seq[Tok]): DepParse =
-    DepParse(toks.map(_.word).toIndexedSeq,
-             toks.map(_.head).toIndexedSeq,
-             toks.map(_.deprel).toIndexedSeq)
-}
-
 /** One argument slot of a raw extractor relation: (token index from 0,
   * surface string). Reference shape `[S_id, S]` (extract.py:131). */
 final case class Arg(idx: Int, surface: String)

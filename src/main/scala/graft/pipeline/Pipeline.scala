@@ -259,26 +259,91 @@ object Pipeline {
                         saltBuckets: Int = 8): DataFrame =
     edgesFromCapped(cappedPairPred(pairPred, maxPredsPerPair, saltBuckets))
 
-  /** the pairwise expansion + final edge aggregation over an
-    * already-capped pair-pred table: a local flatMap over the grouped
-    * list — never a self-join — so per-group work is bounded at k². */
-  private[graft] def edgesFromCapped(capped: DataFrame): DataFrame = {
-    val spark = capped.sparkSession
-    import spark.implicits._
-    val grouped = capped
-      .groupBy($"arg_s", $"arg_o")
-      .agg(collect_list(struct($"pred", $"support")).as("preds"))
-      .select($"preds")
-      .as[Seq[(String, Long)]]
-    grouped.flatMap { preds =>
-      val sorted = preds.sortBy(p => (p._1, p._2))
-      for {
-        i <- sorted.indices.iterator
-        j <- (i + 1) until sorted.length
-      } yield (sorted(i)._1, sorted(j)._1, math.min(sorted(i)._2, sorted(j)._2))
-    }.toDF("pred_src", "pred_dst", "pair_weight")
-      .groupBy($"pred_src", $"pred_dst")
-      .agg(sum($"pair_weight").as("weight"), count(lit(1)).as("n_arg_pairs"))
+  /** THE shared-argument-pair evidence core behind every edge and weight
+    * surface. `slice` names the graph-key columns of the capped table:
+    * Nil for the untyped graph, (type_s, type_o) for the per-type-pair
+    * graphs. For every unordered predicate pair (pred_a < pred_b) that
+    * co-occurs on at least one capped argument pair of a slice:
+    *
+    *   - `shared_pairs`  |pairs(a) ∩ pairs(b)|
+    *   - `w_min`         Σ_shared min(support_a, support_b)
+    *   - `w_a`/`w_b`     Σ_shared support_a / support_b
+    *
+    * Plan: one grouped shuffle on slice ++ (arg_s, arg_o), one local
+    * flatMap over each group's (pred, support)-sorted list with i < j —
+    * never a self-join, so per-group work is bounded at k² — and one
+    * aggregation. The capped table holds one row per (arg pair, pred). */
+  private def sharedEvidence(capped: DataFrame, slice: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val keys = slice.map(col)
+    val k = slice.length
+    val pairRows = StructType(slice.map(capped.schema(_)) ++ Seq(
+      StructField("pred_a", StringType), StructField("pred_b", StringType),
+      StructField("s_a", LongType), StructField("s_b", LongType)))
+    capped
+      .groupBy(keys ++ Seq(col("arg_s"), col("arg_o")): _*)
+      .agg(collect_list(struct(col("pred"), col("support"))).as("preds"))
+      .select(keys :+ col("preds"): _*)
+      .flatMap { row =>
+        val key = (0 until k).map(row.get)
+        val preds = row.getSeq[Row](k).map(p => (p.getString(0), p.getLong(1))).sorted
+        for { i <- preds.indices.iterator; j <- (i + 1) until preds.length }
+          yield Row.fromSeq(key ++ Seq(preds(i)._1, preds(j)._1, preds(i)._2, preds(j)._2))
+      }(org.apache.spark.sql.Encoders.row(pairRows))
+      .groupBy(keys ++ Seq(col("pred_a"), col("pred_b")): _*)
+      .agg(count(lit(1)).as("shared_pairs"),
+           sum(least(col("s_a"), col("s_b"))).as("w_min"),
+           sum(col("s_a")).as("w_a"), sum(col("s_b")).as("w_b"))
+  }
+
+  /** the co-occurrence edge table over an already-capped pair-pred
+    * table: the evidence core's unordered pairs, min-support weight. */
+  private[graft] def edgesFromCapped(capped: DataFrame): DataFrame =
+    sharedEvidence(capped, Nil).select(col("pred_a").as("pred_src"),
+      col("pred_b").as("pred_dst"), col("w_min").as("weight"),
+      col("shared_pairs").as("n_arg_pairs"))
+
+  /** both directions of every evidence-core pair — one narrow `explode`,
+    * shared counts are symmetric, the scores are not — with the
+    * per-(slice, pred) marginals `n_pairs` (argument pairs) and `w_total`
+    * (Σ support) joined on each side. Marginal joins shuffle on pred —
+    * pred-cardinality-sized, AQE broadcasts them when small. */
+  private def directed(capped: DataFrame, slice: Seq[String]): DataFrame = {
+    val keys = slice.map(col)
+    def dir(src: String, dst: String) = struct(col(s"pred_$src").as("pred_src"),
+      col(s"pred_$dst").as("pred_dst"), col(s"w_$src").as("w_src"),
+      col(s"w_$dst").as("w_dst"))
+    val marg = capped.groupBy(keys :+ col("pred"): _*)
+      .agg(count(lit(1)).as("n_pairs"), sum(col("support")).as("w_total"))
+    def side(s: String) = marg.select(keys ++ Seq(col("pred").as(s"pred_$s"),
+      col("n_pairs").as(s"n_${s}_pairs"), col("w_total").as(s"w_${s}_total")): _*)
+    sharedEvidence(capped, slice)
+      .select(keys ++ Seq(col("shared_pairs"),
+        explode(array(dir("a", "b"), dir("b", "a"))).as("d")): _*)
+      .select(keys ++ Seq(col("d.*"), col("shared_pairs")): _*)
+      .join(side("src"), slice :+ "pred_src")
+      .join(side("dst"), slice :+ "pred_dst")
+  }
+
+  /** the count battery (cond_ppm = P(dst | src), log-free PMI ratio) of
+    * [[directed]] rows against the per-slice total of argument pairs.
+    * The totals table is slice-cardinality-sized and broadcast; for the
+    * unsliced graph it is one row, joined as a broadcast crossJoin (the
+    * SimilarityOps codebook pattern). Products ride DECIMAL(38,0). */
+  private def countBattery(capped: DataFrame, slice: Seq[String]): DataFrame = {
+    val keys = slice.map(col)
+    val tot = broadcast(capped.select(keys ++ Seq(col("arg_s"), col("arg_o")): _*)
+      .distinct().groupBy(keys: _*).agg(count(lit(1)).as("total_pairs")))
+    val d = directed(capped, slice)
+    (if (slice.isEmpty) d.crossJoin(tot) else d.join(tot, slice))
+      .select(keys ++ Seq(col("pred_src"), col("pred_dst"), col("shared_pairs"),
+        col("n_src_pairs"), col("n_dst_pairs"),
+        expr("""cast((cast(shared_pairs as decimal(38,0)) * 1000000)
+               |  div n_src_pairs as long)""".stripMargin).as("cond_ppm"),
+        expr("""cast((cast(shared_pairs as decimal(38,0)) * total_pairs * 1000000)
+               |  div (cast(n_src_pairs as decimal(38,0)) * n_dst_pairs) as long)"""
+          .stripMargin).as("pmi_ppm")): _*)
   }
 
   /** the weight derivations fan the capped table out to several
@@ -337,13 +402,11 @@ object Pipeline {
     * non-additive and always recomputed from the merged aggregate, which
     * is triples-sized ÷ dedup factor, a tiny fraction of the corpus.
     *
-    * Plan shape: the capped subtree feeds three consumers (directional
-    * shared counts, per-pred marginals, the one-row total) and is
-    * materialized ONCE by default ([[cappedCheckpointed]],
-    * `materializeCapped = false` restores the pure-lazy plan). The
-    * total-pairs scalar rides a one-row broadcast crossJoin (the
-    * SimilarityOps codebook pattern); marginal joins shuffle on pred —
-    * pred-cardinality-sized, AQE broadcasts them when small. */
+    * Plan shape: [[countBattery]] over the unsliced graph. The capped
+    * subtree feeds three consumers (the evidence core, per-pred
+    * marginals, the one-row total) and is materialized ONCE by default
+    * ([[cappedCheckpointed]], `materializeCapped = false` restores the
+    * pure-lazy plan). */
   def edgeWeightsFromPairPred(pairPred: DataFrame, maxPredsPerPair: Int = 32,
                               saltBuckets: Int = 8,
                               materializeCapped: Boolean = true): DataFrame =
@@ -355,33 +418,8 @@ object Pipeline {
     * ([[graft.streaming.StreamingOps.maintainEdges]]) derive BOTH
     * surfaces from one capped materialization instead of re-running the
     * cap per surface. */
-  private[graft] def edgeWeightsFromCapped(capped: DataFrame): DataFrame = {
-    val spark = capped.sparkSession
-    import spark.implicits._
-    val edges = edgesFromCapped(capped)
-    // both directions of every unordered co-occurrence edge: shared
-    // counts are symmetric, the scores are not
-    val dir = edges
-      .select($"pred_src", $"pred_dst", $"n_arg_pairs".as("shared_pairs"))
-      .unionByName(edges.select($"pred_dst".as("pred_src"),
-        $"pred_src".as("pred_dst"), $"n_arg_pairs".as("shared_pairs")))
-    val marg = capped.groupBy($"pred").agg(count(lit(1)).as("n_pairs"))
-    val tot = capped.select($"arg_s", $"arg_o").distinct()
-      .agg(count(lit(1)).as("total_pairs"))
-    dir
-      .join(marg.select($"pred".as("pred_src"), $"n_pairs".as("n_src_pairs")),
-        Seq("pred_src"))
-      .join(marg.select($"pred".as("pred_dst"), $"n_pairs".as("n_dst_pairs")),
-        Seq("pred_dst"))
-      .crossJoin(broadcast(tot))
-      .select($"pred_src", $"pred_dst", $"shared_pairs", $"n_src_pairs",
-        $"n_dst_pairs",
-        expr("""cast((cast(shared_pairs as decimal(38,0)) * 1000000)
-               |  div n_src_pairs as long)""".stripMargin).as("cond_ppm"),
-        expr("""cast((cast(shared_pairs as decimal(38,0)) * total_pairs * 1000000)
-               |  div (cast(n_src_pairs as decimal(38,0)) * n_dst_pairs) as long)"""
-          .stripMargin).as("pmi_ppm"))
-  }
+  private[graft] def edgeWeightsFromCapped(capped: DataFrame): DataFrame =
+    countBattery(capped, Nil)
 
   /** The SUPPORT-WEIGHTED sibling of [[edgeWeightsFromPairPred]]: the
     * distributional-inclusion score battery downstream EntGraph builds
@@ -405,45 +443,23 @@ object Pipeline {
     * petascale support counts. Same additive-fold contract as the
     * unweighted surface: supports fold by summation in `pairpred`
     * ([[mergePairPred]]); cap, marginals and scores are recomputed from
-    * the merged aggregate. Plan shape: one grouped shuffle + local
-    * ordered-pair flatMap (bounded k² per group, never a self-join),
-    * one pair aggregation, two pred-cardinality marginal joins. */
+    * the merged aggregate. Plan shape: the [[directed]] rows of the
+    * unsliced graph — no scalar, equi-joins only. */
   def edgeWeightsSupport(pairPred: DataFrame, maxPredsPerPair: Int = 32,
                          saltBuckets: Int = 8,
-                         materializeCapped: Boolean = true): DataFrame = {
-    val spark = pairPred.sparkSession
-    import spark.implicits._
-    val capped = cappedCheckpointed(pairPred, maxPredsPerPair, saltBuckets,
-      materializeCapped)
-    val ordered = capped
-      .groupBy($"arg_s", $"arg_o")
-      .agg(collect_list(struct($"pred", $"support")).as("preds"))
-      .select($"preds").as[Seq[(String, Long)]]
-      .flatMap { preds =>
-        for { i <- preds.indices.iterator; j <- preds.indices
-              if i != j && preds(i)._1 != preds(j)._1 }
-          yield (preds(i)._1, preds(j)._1, preds(i)._2, preds(i)._2 + preds(j)._2)
-      }.toDF("pred_src", "pred_dst", "w_src", "w_sum")
-    val sh = ordered.groupBy($"pred_src", $"pred_dst")
-      .agg(count(lit(1)).as("shared_pairs"),
-           sum($"w_src").as("w_shared_src"),
-           sum($"w_sum").as("w_shared_sum"))
-    val marg = capped.groupBy($"pred").agg(sum($"support").as("w_total"))
-    sh
-      .join(marg.select($"pred".as("pred_src"), $"w_total".as("w_src_total")),
-        Seq("pred_src"))
-      .join(marg.select($"pred".as("pred_dst"), $"w_total".as("w_dst_total")),
-        Seq("pred_dst"))
+                         materializeCapped: Boolean = true): DataFrame =
+    directed(cappedCheckpointed(pairPred, maxPredsPerPair, saltBuckets,
+        materializeCapped), Nil)
       .withColumn("weeds_ppm",
-        expr("""cast((cast(w_shared_src as decimal(38,0)) * 1000000)
+        expr("""cast((cast(w_src as decimal(38,0)) * 1000000)
                |  div w_src_total as long)""".stripMargin))
       .withColumn("lin_ppm",
-        expr("""cast((cast(w_shared_sum as decimal(38,0)) * 1000000)
+        expr("""cast(((cast(w_src as decimal(38,0)) + w_dst) * 1000000)
                |  div (w_src_total + w_dst_total) as long)""".stripMargin))
-      .select($"pred_src", $"pred_dst", $"shared_pairs", $"w_shared_src",
-        $"w_src_total", $"w_dst_total", $"weeds_ppm", $"lin_ppm",
-        graft.ops.TextOps.isqrt($"weeds_ppm" * $"lin_ppm").as("binc_ppm"))
-  }
+      .select(col("pred_src"), col("pred_dst"), col("shared_pairs"),
+        col("w_src").as("w_shared_src"), col("w_src_total"), col("w_dst_total"),
+        col("weeds_ppm"), col("lin_ppm"),
+        graft.ops.TextOps.isqrt(col("weeds_ppm") * col("lin_ppm")).as("binc_ppm"))
 
   // ------------------------------------------- typed entailment subgraphs
   /** one row per NER mention the annotator emits for a sentence — the
@@ -538,17 +554,15 @@ object Pipeline {
     * the cap itself is identical to the untyped surface (same skew
     * contract, same evidence rows); only the marginals and totals are
     * keyed by the slice. Plan shape: the two dimension joins, then the
-    * same one-grouped-shuffle + local bounded k² flatMap as the untyped
-    * battery; the per-slice totals table is type-pair-cardinality-sized
-    * and broadcast. Same fold contract: `pairpred` and the type evidence
+    * untyped battery's [[countBattery]] keyed by (type_s, type_o); the
+    * per-slice totals table is type-pair-cardinality-sized and
+    * broadcast. Same fold contract: `pairpred` and the type evidence
     * fold additively, cap/assignment/marginals recompute from the merged
     * aggregates. */
   def typedEdgeWeights(pairPred: DataFrame, entityTypes: DataFrame,
                        maxPredsPerPair: Int = 32, saltBuckets: Int = 8,
                        materializeCapped: Boolean = true,
                        defaultType: String = "OTHER"): DataFrame = {
-    val spark = pairPred.sparkSession
-    import spark.implicits._
     // the type dimension is joined TWICE in typedPairPred (arg_s and
     // arg_o sides) and the two join subtrees never canonicalize to a
     // shared exchange — without a pin the whole evidence derivation
@@ -559,38 +573,8 @@ object Pipeline {
     // battery re-ran the evidence join 2× per query before this pin).
     val ty = if (materializeCapped) entityTypes.localCheckpoint(eager = false)
              else entityTypes
-    val capped = cappedCheckpointed(
-      typedPairPred(pairPred, ty, defaultType),
-      maxPredsPerPair, saltBuckets, materializeCapped)
-    val sh = capped
-      .groupBy($"type_s", $"type_o", $"arg_s", $"arg_o")
-      .agg(collect_list(struct($"pred", $"support")).as("preds"))
-      .select($"type_s", $"type_o", $"preds")
-      .as[(String, String, Seq[(String, Long)])]
-      .flatMap { case (ts, to, preds) =>
-        for { i <- preds.indices.iterator; j <- preds.indices
-              if i != j && preds(i)._1 != preds(j)._1 }
-          yield (ts, to, preds(i)._1, preds(j)._1)
-      }.toDF("type_s", "type_o", "pred_src", "pred_dst")
-      .groupBy($"type_s", $"type_o", $"pred_src", $"pred_dst")
-      .agg(count(lit(1)).as("shared_pairs"))
-    val marg = capped.groupBy($"type_s", $"type_o", $"pred")
-      .agg(count(lit(1)).as("n_pairs"))
-    val tot = capped.select($"type_s", $"type_o", $"arg_s", $"arg_o").distinct()
-      .groupBy($"type_s", $"type_o").agg(count(lit(1)).as("total_pairs"))
-    sh
-      .join(marg.select($"type_s", $"type_o", $"pred".as("pred_src"),
-              $"n_pairs".as("n_src_pairs")), Seq("type_s", "type_o", "pred_src"))
-      .join(marg.select($"type_s", $"type_o", $"pred".as("pred_dst"),
-              $"n_pairs".as("n_dst_pairs")), Seq("type_s", "type_o", "pred_dst"))
-      .join(broadcast(tot), Seq("type_s", "type_o"))
-      .select($"type_s", $"type_o", $"pred_src", $"pred_dst", $"shared_pairs",
-        $"n_src_pairs", $"n_dst_pairs",
-        expr("""cast((cast(shared_pairs as decimal(38,0)) * 1000000)
-               |  div n_src_pairs as long)""".stripMargin).as("cond_ppm"),
-        expr("""cast((cast(shared_pairs as decimal(38,0)) * total_pairs * 1000000)
-               |  div (cast(n_src_pairs as decimal(38,0)) * n_dst_pairs) as long)"""
-          .stripMargin).as("pmi_ppm"))
+    countBattery(cappedCheckpointed(typedPairPred(pairPred, ty, defaultType),
+      maxPredsPerPair, saltBuckets, materializeCapped), Seq("type_s", "type_o"))
   }
 
   /** the SPARSIFIED consumption surface downstream EntGraph globalization
@@ -599,27 +583,26 @@ object Pipeline {
     * [[edgeWeightsSupport]] battery. Window-rank-per-group — each group
     * sorts locally inside its exchange partition (the per-group
     * TakeOrderedAndProject shape); there is never a global sort. */
-  def edgesTopK(weights: DataFrame, k: Int = 8): DataFrame = {
-    val w = Window.partitionBy(col("pred_src"))
-      .orderBy(col("binc_ppm").desc, col("pred_dst"))
-    weights.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("pred_src"), col("pred_dst"), col("binc_ppm"), col("rank"))
-  }
+  def edgesTopK(weights: DataFrame, k: Int = 8): DataFrame =
+    topK(weights, Seq("pred_src"), "binc_ppm", k)
 
   /** the TYPED twin of [[edgesTopK]]: downstream EntGraph globalization
     * consumes each per-argument-type-pair graph separately, so the
     * sparsification ranks within the (type_s, type_o, pred_src) group of
     * the [[typedEdgeWeights]] surface (by conditional ppm — the typed
-    * battery's directional score — tie-break cond desc, dst asc). Same
-    * per-group window-limit shape, never a global sort. */
-  def typedEdgesTopK(typedWeights: DataFrame, k: Int = 8): DataFrame = {
-    val w = Window.partitionBy(col("type_s"), col("type_o"), col("pred_src"))
-      .orderBy(col("cond_ppm").desc, col("pred_dst"))
-    typedWeights.withColumn("rank", row_number().over(w))
+    * battery's directional score — tie-break cond desc, dst asc). */
+  def typedEdgesTopK(typedWeights: DataFrame, k: Int = 8): DataFrame =
+    topK(typedWeights, Seq("type_s", "type_o", "pred_src"), "cond_ppm", k)
+
+  /** the one top-K window behind both consumption surfaces: rank by
+    * (score desc, pred_dst asc) within `group`, keep ranks ≤ k. */
+  private def topK(weights: DataFrame, group: Seq[String], score: String,
+                   k: Int): DataFrame = {
+    val w = Window.partitionBy(group.map(col): _*)
+      .orderBy(col(score).desc, col("pred_dst"))
+    weights.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-      .select(col("type_s"), col("type_o"), col("pred_src"), col("pred_dst"),
-              col("cond_ppm"), col("rank"))
+      .select((group ++ Seq("pred_dst", score, "rank")).map(col): _*)
   }
 
   // ------------------------------------------------------------- metrics
@@ -986,34 +969,38 @@ object Pipeline {
       else base.unionByName(
         store.runStage("coref_triples", Seq("docs"), bucketCol = Some("doc_id"))(
           corefTriples(docs)))
-    // canonical + edges are DataFrame stages, checkpointed with the same
-    // explicit bucketed layout as the typed stages: canonical by doc_id
-    // (co-located with triples), edges by pred_src — the entailment-graph
-    // consumer reads by predicate, so bucket predicates prune its scans
+    // canonical is a DataFrame stage, checkpointed with the same
+    // explicit bucketed layout as the typed stages (by doc_id, co-located
+    // with triples)
     val dict = aliases.getOrElse(synthAliases(spark))
     val canonBack = store.runStageDF("canonical", Seq("triples"),
       bucketCol = Some("doc_id"))(
       canonicalize(triples, dict))
-    val edgesBack = store.runStageDF("edges", Seq("canonical"),
-      bucketCol = Some("pred_src"))(
-      entailmentEdges(canonBack))
-    // the downstream-EntGraph weight surface, derived from the same
-    // aggregate space (canonBack is a checkpointed parquet read, so the
-    // shared capped subtree's re-scans are cheap)
-    store.runStageDF("edge_weights", Seq("canonical"),
-      bucketCol = Some("pred_src"))(
-      edgeWeightsFromPairPred(pairPredAggregate(canonBack)))
-    // the per-type-pair subgraph surface: type evidence from the
-    // checkpointed sentences (entity-link mentions ⋈ annotator labels),
-    // weights within each typed slice. Derived inline — the fold
-    // maintains the SAME surface from its additive `type_evidence`
-    // aggregate ([[incrementalFold]])
-    store.runStageDF("typed_edge_weights", Seq("canonical"),
-      bucketCol = Some("pred_src"))(
-      typedEdgeWeights(pairPredAggregate(canonBack),
-        entityTypesFromEvidence(entityTypeEvidence(
-          Mentions.detect(sentences, dict), mentionLabelTable(sentences)))))
+    // the graph stages read the checkpointed canonical parquet, so the
+    // shared capped subtree's re-scans are cheap. Type evidence comes
+    // from the checkpointed sentences (entity-link mentions ⋈ annotator
+    // labels), derived inline — the fold maintains the SAME surface from
+    // its additive `type_evidence` aggregate ([[incrementalFold]])
+    val edgesBack = graphStages(store, pairPredAggregate(canonBack),
+      entityTypesFromEvidence(entityTypeEvidence(
+        Mentions.detect(sentences, dict), mentionLabelTable(sentences))))
     RunResult(canonBack, edgesBack, docs)
+  }
+
+  /** the three entailment-graph stages — `edges`, `edge_weights` and
+    * `typed_edge_weights` — derived from one pair-pred aggregate (and
+    * the entity types, built only if the typed stage computes). Shared
+    * by [[runFromDocs]] and [[incrementalFold]]; all three are bucketed
+    * by pred_src — the entailment-graph consumer reads by predicate, so
+    * bucket predicates prune its scans. Returns the edges stage. */
+  private def graphStages(store: CheckpointStore, pairPred: DataFrame,
+                          entityTypes: => DataFrame): DataFrame = {
+    def stage(name: String)(df: => DataFrame) =
+      store.runStageDF(name, Seq("canonical"), bucketCol = Some("pred_src"))(df)
+    val edges = stage("edges")(edgesFromPairPred(pairPred))
+    stage("edge_weights")(edgeWeightsFromPairPred(pairPred))
+    stage("typed_edge_weights")(typedEdgeWeights(pairPred, entityTypes))
+    edges
   }
 
   // ------------------------------------------------------- incremental
@@ -1342,21 +1329,13 @@ object Pipeline {
         store.appendStage(cNew, "canonical", Seq("triples"), bucketCol = Some("doc_id"))
         ppMerged.write.mode("overwrite").parquet(ppPath)
         ev.write.mode("overwrite").parquet(evPath)
-        // re-derive edges from the merged aggregate and overwrite the
-        // stage (runStageDF under THIS fingerprint re-stamps the meta;
-        // the standing marker keeps isComplete false here, which is what
-        // a mutating fold needs anyway — only the no-op branch skips)
-        val e = store.runStageDF("edges", Seq("canonical"),
-          bucketCol = Some("pred_src"))(edgesFromPairPred(ppMerged))
-        // the weight surfaces re-derive from the SAME merged aggregates —
-        // the incremental path maintains them for free (a pre-weights
-        // root simply gains the stages on its first mutating fold)
-        store.runStageDF("edge_weights", Seq("canonical"),
-          bucketCol = Some("pred_src"))(edgeWeightsFromPairPred(ppMerged))
-        store.runStageDF("typed_edge_weights", Seq("canonical"),
-          bucketCol = Some("pred_src"))(
-          typedEdgeWeights(ppMerged, entityTypesFromEvidence(ev)))
-        e
+        // re-derive edges and both weight surfaces from the merged
+        // aggregates and overwrite the stages (runStageDF under THIS
+        // fingerprint re-stamps the meta; the standing marker keeps
+        // isComplete false here, which is what a mutating fold needs
+        // anyway — only the no-op branch skips). A pre-weights root
+        // simply gains the weight stages on its first mutating fold
+        graphStages(store, ppMerged, entityTypesFromEvidence(ev))
       }
     val result = IncrementalResult(
       newDocs = docsNew.select(col("doc_id")).distinct().count(),

@@ -274,25 +274,29 @@ object StreamingOps {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         foldGeneration(batch.sparkSession, aggPath, batchId, runId, lineageTag,
           Pipeline.pairPredAggregate(batch.toDF()), Pipeline.mergePairPred) {
-          merged =>
-            // BOTH derived surfaces share ONE capped materialization —
-            // deriving weights through edgeWeightsFromPairPred would
-            // re-run the cap (window top-k) and the pairwise expansion a
-            // second time per batch
-            val capped = Pipeline.cappedPairPred(merged, 32, 8)
-              .localCheckpoint(eager = false)
-            Pipeline.edgesFromCapped(capped)
-              .write.mode("overwrite").parquet(edgesPath)
-            // the entailment-weight surface rides the SAME merged
-            // aggregate — a stream-fed store maintains weights exactly
-            // like the batch fold does (derivation re-run per batch,
-            // never corpus-scaled)
-            weightsPath.foreach(p =>
-              Pipeline.edgeWeightsFromCapped(capped)
-                .write.mode("overwrite").parquet(p))
+          // the entailment-weight surface rides the SAME merged
+          // aggregate — a stream-fed store maintains weights exactly like
+          // the batch fold does (derivation re-run per batch, never
+          // corpus-scaled)
+          merged => writeEdgeSurfaces(merged, edgesPath, weightsPath)
         }
       }
       .start()
+  }
+
+  /** the untyped edge table (and, given a path, the count battery) of
+    * a merged pair-pred aggregate, overwritten in place. BOTH surfaces
+    * share ONE capped materialization — deriving weights through
+    * edgeWeightsFromPairPred would re-run the cap (window top-k) and the
+    * pairwise expansion a second time per batch. */
+  private def writeEdgeSurfaces(merged: DataFrame, edgesPath: String,
+                                weightsPath: Option[String]): Unit = {
+    import graft.pipeline.Pipeline
+    val capped = Pipeline.cappedPairPred(merged, 32, 8)
+      .localCheckpoint(eager = false)
+    Pipeline.edgesFromCapped(capped).write.mode("overwrite").parquet(edgesPath)
+    weightsPath.foreach(p =>
+      Pipeline.edgeWeightsFromCapped(capped).write.mode("overwrite").parquet(p))
   }
 
   /** ONE committed fold of `delta` into the generation-protocol
@@ -548,12 +552,7 @@ object StreamingOps {
         foldGeneration(spark, aggPath, batchId, runId, lineageTag,
           Pipeline.pairPredAggregate(canonical), Pipeline.mergePairPred) {
           merged =>
-            val capped = Pipeline.cappedPairPred(merged, 32, 8)
-              .localCheckpoint(eager = false)
-            Pipeline.edgesFromCapped(capped)
-              .write.mode("overwrite").parquet(edgesPath)
-            Pipeline.edgeWeightsFromCapped(capped)
-              .write.mode("overwrite").parquet(weightsPath)
+            writeEdgeSurfaces(merged, edgesPath, Some(weightsPath))
             val evGen = committedAggregate(spark, evidencePath).getOrElse(
               sys.error(s"maintainTypedEdges: evidence fold for batch " +
                 s"$batchId left no committed generation at $evidencePath"))

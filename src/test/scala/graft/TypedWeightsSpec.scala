@@ -109,6 +109,92 @@ class TypedWeightsSpec extends SparkSpecBase {
       .as[(String, String, Long)].collect().toSeq == Seq(("e1", "PER", 2L)))
   }
 
+  test("every edge and weight surface equals a brute-force self-join reference on random pair spaces") {
+    // the reference follows the oracle SQL: cap each argument pair at 32
+    // predicates (support desc, pred asc), then self-join the capped
+    // rows on the shared argument pair — x.pred < y.pred for the edge
+    // table, x.pred <> y.pred for the directed surfaces
+    final case class PP(s: String, o: String, p: String, n: Long)
+    val (cap, k) = (32, 3)
+    def isqrt(n: Long) = java.math.BigInteger.valueOf(n).sqrt().longValue
+    def reference(pp: Seq[PP], types: Map[String, String]) = {
+      def ty(e: String) = types.getOrElse(e, "OTHER")
+      val capped = pp.groupBy(r => (r.s, r.o)).values
+        .flatMap(_.sortBy(r => (-r.n, r.p)).take(cap)).toSeq
+      val byPair = capped.groupBy(r => (r.s, r.o)).values.toSeq
+      val directed = for (g <- byPair; x <- g; y <- g if x.p != y.p) yield (x, y)
+      val edges: Set[Seq[Any]] = directed.filter { case (x, y) => x.p < y.p }
+        .groupBy { case (x, y) => (x.p, y.p) }.map { case ((a, b), xs) =>
+          Seq(a, b, xs.map { case (x, y) => math.min(x.n, y.n) }.sum, xs.size.toLong)
+        }.toSet
+      def countBattery(slice: PP => Seq[String]): Set[Seq[Any]] = {
+        val nPairs = capped.groupBy(r => slice(r) :+ r.p).view.mapValues(_.size.toLong).toMap
+        val total = capped.groupBy(slice).view
+          .mapValues(_.map(r => (r.s, r.o)).distinct.size.toLong).toMap
+        directed.groupBy { case (x, y) => (slice(x), x.p, y.p) }.map { case ((sl, a, b), xs) =>
+          val (shared, ns, nd) = (xs.size.toLong, nPairs(sl :+ a), nPairs(sl :+ b))
+          sl ++ Seq(a, b, shared, ns, nd, shared * 1000000 / ns,
+            (BigInt(shared) * total(sl) * 1000000 / (BigInt(ns) * nd)).toLong)
+        }.toSet
+      }
+      val wTotal = capped.groupBy(_.p).view.mapValues(_.map(_.n).sum).toMap
+      val support: Set[Seq[Any]] = directed.groupBy { case (x, y) => (x.p, y.p) }
+        .map { case ((a, b), xs) =>
+          val wShared = xs.map(_._1.n).sum
+          val weeds = wShared * 1000000 / wTotal(a)
+          val lin = xs.map { case (x, y) => x.n + y.n }.sum * 1000000 / (wTotal(a) + wTotal(b))
+          Seq(a, b, xs.size.toLong, wShared, wTotal(a), wTotal(b), weeds, lin,
+            isqrt(weeds * lin))
+        }.toSet
+      // rank by (score desc, pred_dst asc) within the first `group` columns;
+      // pred_dst sits right after them
+      def topK(rows: Set[Seq[Any]], group: Int, score: Int): Set[Seq[Any]] =
+        rows.groupBy(_.take(group)).values.flatMap(_.toSeq
+          .sortBy(r => (-r(score).asInstanceOf[Long], r(group).asInstanceOf[String]))
+          .take(k).zipWithIndex.map { case (r, i) => r.take(group + 1) ++ Seq(r(score), i + 1) })
+          .toSet
+      val typed = countBattery(r => Seq(ty(r.s), ty(r.o)))
+      Seq(edges, countBattery(_ => Nil), support, typed,
+        topK(support, 1, 8), topK(typed, 3, 7))
+    }
+    def surfaces(pp: Seq[PP], types: Map[String, String]) = {
+      val ppDf = pp.map(r => (r.s, r.o, r.p, r.n)).toDF("arg_s", "arg_o", "pred", "support")
+      val tyDf = types.toSeq.toDF("canonical", "ent_type")
+      val sup = Pipeline.edgeWeightsSupport(ppDf)
+      val typed = Pipeline.typedEdgeWeights(ppDf, tyDf)
+      Seq(Pipeline.edgesFromPairPred(ppDf), Pipeline.edgeWeightsFromPairPred(ppDf), sup,
+        typed, Pipeline.edgesTopK(sup, k), Pipeline.typedEdgesTopK(typed, k))
+        .map(_.collect().map(_.toSeq).toSet)
+    }
+    val names = Seq("edges", "count battery", "support battery", "typed battery",
+      "edgesTopK", "typedEdgesTopK")
+    // entities e00-e04 PER, e05-e09 LOC, e10-e14 ORG, e15-e19 unlabeled
+    // (OTHER); three hot argument pairs hold 33-47 predicates (over the
+    // cap) and supports 1-3 tie often, at the cap boundary too
+    val types = (0 until 15).map(i => f"e$i%02d" -> Seq("PER", "LOC", "ORG")(i / 5)).toMap
+    for (seed <- Seq(7L, 8L)) {
+      val rnd = new scala.util.Random(seed)
+      val pairs = Seq.fill(60)((f"e${rnd.nextInt(20)}%02d", f"e${rnd.nextInt(20)}%02d"))
+        .distinct.take(30)
+      val pp = pairs.zipWithIndex.flatMap { case ((s, o), i) =>
+        val n = if (i < 3) 33 + rnd.nextInt(15) else 1 + rnd.nextInt(8)
+        rnd.shuffle((0 until 50).map(j => f"P$j%02d")).take(n)
+          .map(p => PP(s, o, p, 1L + rnd.nextInt(3)))
+      }
+      val want = reference(pp, types)
+      assert(want(3).map(r => (r(0), r(1))).size >= 3 &&
+        want(3).exists(r => r(0) == "OTHER" || r(1) == "OTHER"),
+        s"seed $seed must exercise three or more type slices including OTHER")
+      for (((got, exp), name) <- surfaces(pp, types).zip(want).zip(names)) {
+        assert(exp.nonEmpty, s"seed $seed: empty reference $name")
+        if (got != exp) fail(s"seed $seed: $name diverged: extra " +
+          s"${(got -- exp).take(3)}, missing ${(exp -- got).take(3)}")
+      }
+    }
+    // the empty pair space: every surface empty
+    assert(surfaces(Nil, types).forall(_.isEmpty))
+  }
+
   test("entityTypesFromEvidence: modal label with deterministic (count desc, label asc) tie-break") {
     val ev = Seq(
       ("e1", "PER", 3L), ("e1", "LOC", 3L), ("e1", "ORG", 2L), // tie → LOC (label asc)
