@@ -493,11 +493,13 @@ object Main {
     }
 
     // the reference's merge-stage global stats (merge_parsed_results.py:60-74)
-    val nDocs = result.docsOut.count()
-    // result.edges is the store's schema-fallback-safe read-back — a raw
-    // parquet read here would fail inference on an EMPTY partitioned
-    // edges stage (tiny corpus with no co-occurring argument pairs)
-    writeStats(spark, outDir, nDocs, nEdges = result.edges.count(),
+    // docs and edges are the totals their stage commits recorded; a meta
+    // without one falls back to counting the store's read-back (which,
+    // unlike a raw parquet read, survives an EMPTY partitioned stage)
+    val store = new pipeline.CheckpointStore(outDir, spark)
+    val nDocs = store.recordedRows("docs").getOrElse(result.docsOut.count())
+    writeStats(spark, outDir, nDocs,
+               nEdges = store.recordedRows("edges").getOrElse(result.edges.count()),
                triples = result.triples)
     if (opts.contains("skew-report")) {
       // the pre-salting diagnostic over the edges shuffle key: run it

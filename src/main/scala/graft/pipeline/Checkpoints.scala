@@ -2,7 +2,8 @@ package graft.pipeline
 
 import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Observation, SparkSession}
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Stage checkpointing with per-partition lineage — the sandbox stand-in
   * for Iceberg snapshot-per-stage (no Iceberg jars ship with this image;
@@ -43,34 +44,38 @@ final class CheckpointStore(root: String, spark: SparkSession,
   /** the recorded per-file lineage as a DataFrame (file, rows) — the
     * side table when present, else the legacy json list (bounded by
     * whatever an old root's meta holds). */
-  private def lineageDF(stage: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.lit
+  private def lineageDF(stage: String): DataFrame =
     if (lineageExists(stage)) spark.read.parquet(lineagePath(stage))
     else {
       val legacy = metaFileRows(stage)
-      if (legacy.isEmpty)
-        spark.range(0).select(lit("").as("file"), lit(0L).as("rows")).limit(0)
+      if (legacy.isEmpty) emptyLineage
       else spark.createDataFrame(legacy).toDF("file", "rows")
     }
-  }
 
   private def hasRecordedLineage(stage: String): Boolean =
     lineageExists(stage) || metaFileRows(stage).nonEmpty
 
   /** per-file (file, rows) for the given data files — ONE distributed
     * pass, file name extracted plan-side (no driver mapping). */
-  private def perFileCounts(files: Seq[Path]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    if (files.isEmpty)
-      spark.range(0).select(lit("").as("file"), lit(0L).as("rows")).limit(0)
-    else spark.read.parquet(files.map(_.toString): _*)
-      .groupBy(element_at(split(input_file_name(), "/"), -1).as("file"))
+  private def perFileCounts(files: Seq[Path]): DataFrame =
+    if (files.isEmpty) emptyLineage
+    else perFile(spark.read.parquet(files.map(_.toString): _*))
+
+  /** rows per data file of a stage read. */
+  private def perFile(data: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{count, element_at, input_file_name, lit, split}
+    data.groupBy(element_at(split(input_file_name(), "/"), -1).as("file"))
       .agg(count(lit(1)).as("rows"))
+  }
+
+  private def emptyLineage: DataFrame = {
+    import org.apache.spark.sql.functions.lit
+    spark.range(0).select(lit("").as("file"), lit(0L).as("rows")).limit(0)
   }
 
   /** total rows of a lineage table — a one-row aggregate, the only
     * driver-side read the lineage design allows. */
-  private def lineageTotal(df: org.apache.spark.sql.DataFrame): Long = {
+  private def lineageTotal(df: DataFrame): Long = {
     import org.apache.spark.sql.functions._
     df.agg(coalesce(sum(col("rows")), lit(0L))).collect()(0).getLong(0)
   }
@@ -196,52 +201,59 @@ final class CheckpointStore(root: String, spark: SparkSession,
   }
 
   /** run (or resume) a stage; the dataset is persisted as parquet with a
-    * meta sidecar carrying row count, partition/file lineage, the upstream
-    * stage names and the run fingerprint. `bucketCol` adds an explicit
-    * hash-bucket directory layout (`_bucket=pmod(xxhash64(col), nBuckets)`)
-    * — the plain-parquet analogue of Iceberg's `bucket(N, col)` partition
-    * transform: co-locates rows by key and prunes on bucket predicates.
+    * meta sidecar carrying row count, the upstream stage names and the
+    * run fingerprint, plus its per-file lineage side table. `bucketCol`
+    * adds an explicit hash-bucket directory layout
+    * (`_bucket=pmod(xxhash64(col), nBuckets)`) — the plain-parquet
+    * analogue of Iceberg's `bucket(N, col)` partition transform:
+    * co-locates rows by key and prunes on bucket predicates.
     *
-    * The read-back always supplies the stage's KNOWN schema: an EMPTY
-    * partitionBy write produces zero part files, so schema inference
+    * The stage's KNOWN schema (`enc.schema`) is the resume fallback: an
+    * EMPTY partitionBy write produces zero part files, so schema inference
     * would fail — and a valid pipeline stage may legitimately be empty
     * (e.g. a coref pass over a corpus with no coreferent chains). */
   def runStage[T](stage: String, upstream: Seq[String] = Nil,
                   bucketCol: Option[String] = None, nBuckets: Int = 64)
-                 (compute: => Dataset[T])(implicit enc: Encoder[T]): Dataset[T] = {
-    val storedSchema =
-      if (bucketCol.isDefined) enc.schema.add("_bucket", org.apache.spark.sql.types.LongType)
-      else enc.schema
-    if (!isComplete(stage)) {
-      writeStage(compute.toDF(), stage, bucketCol, nBuckets)
-      markComplete(stage, upstream, Some(storedSchema))
-    }
-    readStage(stage, Some(storedSchema)).drop("_bucket").as[T]
-  }
+                 (compute: => Dataset[T])(implicit enc: Encoder[T]): Dataset[T] =
+    run(stage, upstream, bucketCol, nBuckets)(compute.toDF(), enc.schema).as[T]
 
   /** the DataFrame (dynamic-schema) variant of [[runStage]], same
     * completeness/resume/bucketing semantics. `compute` is only ever
-    * PLANNED on resume (schema fallback for an empty partitioned stage
-    * derives from the lazy plan, no job runs); the `_bucket` column is
-    * dropped from the returned read-back. */
+    * PLANNED on resume, for an empty stage's schema fallback (the lazy
+    * plan's schema — no job runs). */
   def runStageDF(stage: String, upstream: Seq[String] = Nil,
                  bucketCol: Option[String] = None, nBuckets: Int = 64)
-                (compute: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    lazy val computed = compute
-    def stored = bucketCol match {
-      case Some(_) => computed.schema.add("_bucket", org.apache.spark.sql.types.LongType)
-      case None => computed.schema
-    }
-    if (!isComplete(stage)) {
-      writeStage(computed, stage, bucketCol, nBuckets)
-      markComplete(stage, upstream, Some(stored))
-    }
-    readStage(stage, Some(stored)).drop("_bucket")
+                (compute: => DataFrame): DataFrame =
+    run(stage, upstream, bucketCol, nBuckets)(compute, compute.schema)
+
+  /** the one body of both run methods: resume reads the complete stage
+    * back (inference first, `emptySchema` only for a zero-file stage);
+    * a fresh stage is written, then committed from ONE read-back that is
+    * also the returned DataFrame. The `_bucket` column is dropped. */
+  private def run(stage: String, upstream: Seq[String],
+                  bucketCol: Option[String], nBuckets: Int)
+                 (compute: => DataFrame, emptySchema: => StructType): DataFrame = {
+    val back =
+      if (isComplete(stage)) {
+        // readStage may evaluate its by-name fallback more than once;
+        // runStageDF's compute is planned at most once
+        lazy val fallback = withBucket(emptySchema, bucketCol)
+        readStage(stage, Some(fallback))
+      } else {
+        val df = compute
+        writeStage(df, stage, bucketCol, nBuckets)
+        commit(stage, upstream, withBucket(df.schema, bucketCol))
+      }
+    back.drop("_bucket")
   }
+
+  /** the on-disk schema of a stage written from `schema`. */
+  private def withBucket(schema: StructType, bucketCol: Option[String]): StructType =
+    if (bucketCol.isDefined) schema.add("_bucket", LongType) else schema
 
   /** the ONE writer for stage data: plain parquet, or the explicit
     * hash-bucket directory layout when `bucketCol` is set. */
-  private def writeStage(df: org.apache.spark.sql.DataFrame, stage: String,
+  private def writeStage(df: DataFrame, stage: String,
                          bucketCol: Option[String], nBuckets: Int): Unit =
     writeStageMode(df, stage, bucketCol, nBuckets, "overwrite")
 
@@ -252,7 +264,7 @@ final class CheckpointStore(root: String, spark: SparkSession,
     * the bucket key first, so each fold adds ≈ nBuckets files instead of
     * tasks × nBuckets — repeated folds would otherwise grow the file
     * count (and every subsequent fold's read/meta cost) unboundedly. */
-  private def writeStageMode(df: org.apache.spark.sql.DataFrame, stage: String,
+  private def writeStageMode(df: DataFrame, stage: String,
                              bucketCol: Option[String], nBuckets: Int,
                              saveMode: String, clustered: Boolean = false): Unit = {
     import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
@@ -284,7 +296,7 @@ final class CheckpointStore(root: String, spark: SparkSession,
     * history files are never rescanned. (If the prior meta is missing its
     * file list — hand-edited root — it falls back to one full
     * markComplete rescan rather than recording wrong lineage.) */
-  def appendStage(df: org.apache.spark.sql.DataFrame, stage: String,
+  def appendStage(df: DataFrame, stage: String,
                   upstream: Seq[String] = Nil,
                   bucketCol: Option[String] = None, nBuckets: Int = 64): Unit = {
     require(fs.exists(new Path(dataPath(stage), "_SUCCESS")),
@@ -308,11 +320,7 @@ final class CheckpointStore(root: String, spark: SparkSession,
     writeStageMode(df, stage, bucketCol, nBuckets, "append", clustered = true)
     if (stale && before.nonEmpty) {
       // fall back to one full self-healing rescan
-      val stored = bucketCol match {
-        case Some(_) => df.schema.add("_bucket", org.apache.spark.sql.types.LongType)
-        case None => df.schema
-      }
-      markComplete(stage, upstream, Some(stored))
+      markComplete(stage, upstream, Some(withBucket(df.schema, bucketCol)))
     } else {
       // SLICE-SIZED lineage refresh: count the NEW files only, append
       // their rows to the lineage table, bump the meta total by the
@@ -342,7 +350,7 @@ final class CheckpointStore(root: String, spark: SparkSession,
     * `fallback` is by-name: runStageDF's fallback plans its compute, which
     * must stay untouched on the inference happy path. */
   private def readStage(stage: String,
-                        fallback: => Option[org.apache.spark.sql.types.StructType]) =
+                        fallback: => Option[StructType]) =
     // an EMPTY partitioned stage writes zero part files: probe for that
     // explicitly (version-independent) instead of keying only off the
     // AnalysisException condition string — a Spark build that reports a
@@ -373,28 +381,43 @@ final class CheckpointStore(root: String, spark: SparkSession,
     * fold's history reads): a legitimately EMPTY bucketed stage has zero
     * part files, where raw `spark.read.parquet` fails inference. */
   def readData(stage: String,
-               fallback: Option[org.apache.spark.sql.types.StructType]): org.apache.spark.sql.DataFrame =
+               fallback: Option[StructType]): DataFrame =
     readStage(stage, fallback)
 
   /** write the completion meta for a stage whose data was persisted by the
-    * caller (DataFrame stages that don't go through runStage). `schema`
-    * makes the lineage pass robust to zero-file (empty partitioned)
-    * stages where inference has nothing to read. */
+    * caller (DataFrame stages that don't go through runStage, compaction,
+    * a stale append). Reads the stage with inference, as a resume does;
+    * `schema` makes the lineage pass robust to zero-file (empty
+    * partitioned) stages where inference has nothing to read. */
   def markComplete(stage: String, upstream: Seq[String],
-                   schema: Option[org.apache.spark.sql.types.StructType] = None): Unit = {
-    val df = readStage(stage, schema)
-    // per-file lineage: row count per output file, ONE distributed pass
-    // written straight to the lineage side table (never collected); the
-    // stage total is a one-row aggregate of that table, not a second
-    // data scan. Lineage commits BEFORE the meta json — the json's
-    // fingerprint is what marks the stage complete, so a crash between
-    // the two leaves an incomplete stage, never a complete stage with
-    // missing lineage.
-    import org.apache.spark.sql.functions._
-    df.groupBy(element_at(split(input_file_name(), "/"), -1).as("file"))
-      .agg(count(lit(1)).as("rows"))
+                   schema: Option[StructType] = None): Unit =
+    recordLineage(stage, upstream, readStage(stage, schema))
+
+  /** commit a stage [[run]] just wrote: ONE read-back under the schema the
+    * write used — the written DataFrame's own schema, not the encoder's
+    * (a `runStage[Long]` over `spark.range` writes `id`, not `value`) —
+    * so no inference job runs. The lineage is recorded from it and the
+    * caller gets the same DataFrame back instead of re-reading the stage. */
+  private def commit(stage: String, upstream: Seq[String],
+                     written: StructType): DataFrame = {
+    val back = spark.read.schema(written).parquet(dataPath(stage))
+    recordLineage(stage, upstream, back)
+    back
+  }
+
+  /** per-file lineage of `data` (the stage's read-back), written straight
+    * to the lineage side table (never collected); the stage total rides
+    * that write as an `Observation`, so neither the data nor the side
+    * table is read again for it. Lineage commits BEFORE the meta json —
+    * the json's fingerprint is what marks the stage complete, so a crash
+    * between the two leaves an incomplete stage, never a complete stage
+    * with missing lineage. */
+  private def recordLineage(stage: String, upstream: Seq[String], data: DataFrame): Unit = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit, sum}
+    val total = Observation()
+    perFile(data).observe(total, coalesce(sum(col("rows")), lit(0L)).as("rows"))
       .write.mode("overwrite").parquet(lineagePath(stage))
-    writeMeta(stage, upstream, lineageTotal(spark.read.parquet(lineagePath(stage))))
+    writeMeta(stage, upstream, total.get("rows").asInstanceOf[Long])
   }
 
   private def writeMeta(stage: String, upstream: Seq[String],
@@ -409,9 +432,9 @@ final class CheckpointStore(root: String, spark: SparkSession,
     out.close()
   }
 
-  /** the total row count recorded in a stage's meta json (None for a
-    * hand-written meta without one). */
-  private def metaRows(stage: String): Option[Long] =
+  /** the total row count recorded in a stage's meta json (None when the
+    * stage has no meta, or a hand-written one without a count). */
+  def recordedRows(stage: String): Option[Long] =
     readMeta(stage).flatMap(""""rows":(\d+)""".r.findFirstMatchIn(_))
       .map(_.group(1).toLong)
 
@@ -470,7 +493,7 @@ final class CheckpointStore(root: String, spark: SparkSession,
     // else a scan (hand-written meta only)
     val rows =
       if (lineageExists(stage)) lineageTotal(lineageDF(stage))
-      else metaRows(stage).getOrElse(df.count())
+      else recordedRows(stage).getOrElse(df.count())
     val upstream = meta.toSeq.flatMap { m =>
       """"upstream":\[([^\]]*)\]""".r.findFirstMatchIn(m).toSeq.flatMap(
         _.group(1).split(",").toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\""))

@@ -249,9 +249,26 @@ class PipelineSpec extends SparkSpecBase {
       "missing _lineage/triples side table")
     val lineage = spark.read.parquet(s"$root/_lineage/triples")
     assert(lineage.columns.toSet == Set("file", "rows"))
-    import org.apache.spark.sql.functions.sum
+    import org.apache.spark.sql.functions.{element_at, input_file_name, split, sum}
     assert(lineage.agg(sum($"rows")).collect()(0).getLong(0) == t1,
       "lineage side-table total must equal the stage row count")
+    // every stage the run wrote: the recorded lineage equals a per-file
+    // rescan of the stage's data, and the meta total equals its count()
+    val written = new java.io.File(root).listFiles()
+      .filter(d => new java.io.File(d, "_graft_meta.json").exists()).map(_.getName).toSet
+    assert(Set("docs", "sentences", "triples", "canonical", "edges", "edge_weights",
+               "typed_edge_weights").subsetOf(written), written)
+    for (stage <- written) {
+      val data = spark.read.parquet(s"$root/$stage")
+      val rescan = data.groupBy(element_at(split(input_file_name(), "/"), -1).as("file"))
+        .count().collect().map(r => r.getString(0) -> r.getLong(1)).toSet
+      val recorded = spark.read.parquet(s"$root/_lineage/$stage")
+        .collect().map(r => r.getAs[String]("file") -> r.getAs[Long]("rows")).toSet
+      assert(recorded == rescan, s"$stage: lineage differs from a per-file rescan")
+      val stageMeta = new String(Files.readAllBytes(
+        java.nio.file.Paths.get(s"$root/$stage/_graft_meta.json")), "UTF-8")
+      assert(stageMeta.contains(s"\"rows\":${data.count()},"), s"$stage: $stageMeta")
+    }
   }
 
   test("a checkpoint from different run parameters is invalidated, not reused") {
@@ -530,10 +547,62 @@ class PipelineSpec extends SparkSpecBase {
     def empty = Seq.empty[(String, Long)].toDF("k", "v")
     val r1 = store.runStageDF("e", bucketCol = Some("k"))(empty)
     assert(r1.count() == 0 && r1.columns.toSeq == Seq("k", "v"))
+    val meta = new String(Files.readAllBytes(
+      java.nio.file.Paths.get(s"$root/e/_graft_meta.json")), "UTF-8")
+    assert(meta.contains("\"rows\":0,"), meta)
     // resume path: inference has zero files to read — schema falls back
     // to the (planned, never executed) compute
     val r2 = store.runStageDF("e", bucketCol = Some("k"))(empty)
     assert(r2.count() == 0 && r2.columns.toSeq == Seq("k", "v"))
+  }
+
+  test("a stage commit reads its output back once; a resume reads it once") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    // the job group of every job started; the listener bus is
+    // asynchronous but FIFO, so once a flush job in its own group shows
+    // up, every job the measured body started has been seen
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = groups.add(
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    def jobs(group: String)(body: => Any): Int = {
+      def inGroup(g: String)(f: => Any): Unit = {
+        sc.setJobGroup(g, g)
+        try f finally sc.clearJobGroup()
+      }
+      inGroup(group)(body)
+      inGroup(s"$group-flush")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 10000000000L
+      while (!groups.contains(s"$group-flush") && System.nanoTime() < deadline) Thread.sleep(5)
+      groups.asScala.count(_ == group)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val root = Files.createTempDirectory("graft-job-budget").toString
+      val store = new graft.pipeline.CheckpointStore(root, spark, fingerprint = "j=1")
+      // 1000 distinct keys fill all 64 bucket dirs, past Spark's
+      // 32-path threshold for a parallel-listing job
+      def keyed = spark.range(1000).map(i => (s"k$i", i.toLong))
+      def bucketed() = store.runStage[(String, Long)]("bucketed", bucketCol = Some("_1"))(keyed)
+      def plain() = store.runStage[(String, Long)]("plain")(keyed)
+      // fresh: the write, one listing (bucketed only), the lineage write
+      val freshBucketed = jobs("fresh-bucketed")(bucketed())
+      assert(freshBucketed <= 4, s"fresh bucketed commit ran $freshBucketed jobs")
+      val freshPlain = jobs("fresh-plain")(plain())
+      assert(freshPlain <= 3, s"fresh unbucketed commit ran $freshPlain jobs")
+      assert(new java.io.File(root, "bucketed").listFiles()
+        .count(_.getName.startsWith("_bucket=")) == 64)
+      // resume: one inference read (listing + schema)
+      val resumedBucketed = jobs("resume-bucketed")(bucketed())
+      assert(resumedBucketed <= 2, s"bucketed resume ran $resumedBucketed jobs")
+      val resumedPlain = jobs("resume-plain")(plain())
+      assert(resumedPlain <= 2, s"unbucketed resume ran $resumedPlain jobs")
+      assert(bucketed().collect().toSet == keyed.collect().toSet)
+      assert(plain().count() == 1000L)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("compact preserves the bucketed layout of a keyed stage") {
