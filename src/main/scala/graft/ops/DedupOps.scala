@@ -98,9 +98,8 @@ object DedupOps {
         .otherwise(array(concat_ws(" ", toks))))
   }
 
-  /** the shipped dedup_ngram shingle width / bucket cap — referenced by
-    * the stage-split profiler (tools/ProfNgram) so its decomposed stages
-    * can never desync from the query they explain. */
+  /** the shipped dedup_ngram shingle width / bucket cap: the defaults of
+    * [[ngramJaccardPairs]], and what the `dedup_ngram` query passes. */
   val NgramN = 3
   val NgramMaxBucket = 200
 
@@ -235,14 +234,10 @@ object DedupOps {
       .select(col("a"), col("b"), col("shared"), col("jaccard_x1000"))
   }
 
-  /** sub-plan builders of [[ngramJaccardPairs]], shared with the
-    * stage-split profiler (`tools/ProfNgram`) so a shape change to the
-    * shipped query can never silently desync the profiler's
-    * decomposition from what the full query runs. */
-  /** stage 1: scan → tokenize → distinct-gram explode (→ 48-bit hash
-    * when `hashShuffleKey`). */
-  private[graft] def ngramGramTable(documents: DataFrame, n: Int = NgramN,
-                                    hashShuffleKey: Boolean = true): DataFrame = {
+  /** stage 1 of [[ngramJaccardPairs]]: scan → tokenize → distinct-gram
+    * explode (→ 48-bit hash when `hashShuffleKey`). */
+  private def ngramGramTable(documents: DataFrame, n: Int,
+                             hashShuffleKey: Boolean): DataFrame = {
     if (hashShuffleKey) {
       // DEFAULT path: the JVM gram core (r9) — tokenize/distinct/hash in
       // one narrow pass, no per-gram Catalyst string materialization.
@@ -274,15 +269,14 @@ object DedupOps {
 
   /** stage 2: group by the gram key + bucket-size guard (the cap rides
     * the same aggregation that feeds the pair emission — no window). */
-  private[graft] def ngramBuckets(grams: DataFrame,
-                                  maxBucketSize: Int = NgramMaxBucket): DataFrame =
+  private def ngramBuckets(grams: DataFrame, maxBucketSize: Int): DataFrame =
     grams
       .groupBy(col("gram_h"))
       .agg(collect_list(struct(col("doc_id"), col("n_grams"))).as("members"))
       .filter(size(col("members")).between(2, maxBucketSize))
 
   /** stage 3: local pairwise emission per bucket. */
-  private[graft] def ngramPairEmission(buckets: DataFrame): DataFrame = {
+  private def ngramPairEmission(buckets: DataFrame): DataFrame = {
     val spark = buckets.sparkSession
     import spark.implicits._
     buckets

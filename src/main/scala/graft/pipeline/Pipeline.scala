@@ -346,35 +346,41 @@ object Pipeline {
           .stripMargin).as("pmi_ppm")): _*)
   }
 
-  /** the weight derivations fan the capped table out to several
-    * consumers (pair expansion, per-pred marginals, the total) and no
-    * two of those subtrees share an identical exchange, so Spark's
-    * static exchange reuse cannot dedupe them — without materialization
-    * the whole agg+cap subtree re-executes per consumer (audited in
-    * PLANS.md). The capped table is BOUNDED (≤ k rows per argument
-    * pair, pairpred-sized ÷ cap), so a `localCheckpoint` — the
-    * GraphOps iteration pattern — trades that re-execution for one
-    * bounded in-memory/disk materialization. Lineage is truncated: a
-    * lost executor mid-derivation fails the job instead of recomputing
-    * (same documented tradeoff as GraphOps' default mode; the
-    * production fold gets durability from the checkpoint STORE'd
-    * `pairpred` input, one cheap parquet re-scan per consumer). */
-  private def cappedCheckpointed(pairPred: DataFrame, maxPredsPerPair: Int,
-                                 saltBuckets: Int, materialize: Boolean): DataFrame = {
-    val capped = cappedPairPred(pairPred, maxPredsPerPair, saltBuckets)
-    // CONSTRUCTION-EAGER under AQE: localCheckpoint goes through
-    // queryExecution.toRdd, which materializes the adaptive query stages
-    // when the DataFrame is BUILT (even with eager = false, which only
-    // skips the final count job — measured in-repo; AQE exchange reuse
-    // does NOT substitute, because each consumer prunes different
-    // columns and the exchanges never canonicalize equal). That is fine
-    // at every call site: the builders are invoked where execution is
-    // imminent, and runStageDF's RESUME path never constructs this
-    // thunk at all (Checkpoints.readStage probes the filesystem before
-    // touching its schema fallback — the thunk is only planned to
-    // recover an EMPTY stage's schema).
-    if (materialize) capped.localCheckpoint(eager = false) else capped
-  }
+  /** the capped table, pinned. Every weight derivation fans the capped
+    * table out to several consumers (pair expansion, per-pred marginals,
+    * the total), and the run book and the stream path also feed the
+    * edges and the typed battery from it. No two of those subtrees share
+    * an identical exchange, so Spark's static exchange reuse cannot
+    * dedupe them — without materialization the whole agg+cap subtree
+    * re-executes per consumer (audited in PLANS.md). The capped table is
+    * BOUNDED (≤ k rows per argument pair, pairpred-sized ÷ cap), so a
+    * `localCheckpoint` — the GraphOps iteration pattern — trades that
+    * re-execution for one bounded in-memory/disk materialization. The
+    * defaults are THE cap of the run book ([[graphStages]]) and the
+    * stream path (`StreamingOps.writeEdgeSurfaces`). Loss story: lineage
+    * is truncated, so a lost executor mid-derivation fails the job
+    * instead of recomputing (same documented tradeoff as GraphOps'
+    * default mode); the run book and the fold re-derive from the
+    * checkpointed `canonical`/`pairpred` parquet on the next run, the
+    * stream replays the uncommitted batch. */
+  private[graft] def cappedCheckpointed(pairPred: DataFrame, maxPredsPerPair: Int = 32,
+                                        saltBuckets: Int = 8,
+                                        materialize: Boolean = true): DataFrame =
+    pinned(cappedPairPred(pairPred, maxPredsPerPair, saltBuckets), materialize)
+
+  /** `localCheckpoint(eager = false)` when `materialize`. CONSTRUCTION-EAGER
+    * under AQE: localCheckpoint goes through queryExecution.toRdd, which
+    * materializes the adaptive query stages when the DataFrame is BUILT
+    * (eager = false only skips the final count job — measured in-repo;
+    * AQE exchange reuse does NOT substitute, because each consumer prunes
+    * different columns and the exchanges never canonicalize equal). That
+    * is fine at every call site: the builders are invoked where execution
+    * is imminent, and runStageDF's RESUME path never constructs a stage
+    * thunk at all (Checkpoints.readStage probes the filesystem before
+    * touching its schema fallback — the thunk is only planned to recover
+    * an EMPTY stage's schema). */
+  private def pinned(df: DataFrame, materialize: Boolean): DataFrame =
+    if (materialize) df.localCheckpoint(eager = false) else df
 
   /** The entailment-graph LOCAL WEIGHT surface — the directional scores a
     * downstream EntGraph build consumes (the reference defers graph
@@ -402,22 +408,24 @@ object Pipeline {
     * non-additive and always recomputed from the merged aggregate, which
     * is triples-sized ÷ dedup factor, a tiny fraction of the corpus.
     *
-    * Plan shape: [[countBattery]] over the unsliced graph. The capped
-    * subtree feeds three consumers (the evidence core, per-pred
-    * marginals, the one-row total) and is materialized ONCE by default
-    * ([[cappedCheckpointed]], `materializeCapped = false` restores the
-    * pure-lazy plan). */
+    * Plan shape: [[edgeWeightsFromCapped]] over this call's own cap,
+    * pinned by default ([[cappedCheckpointed]]: the evidence core, the
+    * per-pred marginals and the one-row total all read it;
+    * `materializeCapped = false` restores the pure-lazy plan). The run
+    * book does not call this builder: [[graphStages]] caps once and
+    * derives this surface, the edges and the typed battery from that one
+    * pinned table. */
   def edgeWeightsFromPairPred(pairPred: DataFrame, maxPredsPerPair: Int = 32,
                               saltBuckets: Int = 8,
                               materializeCapped: Boolean = true): DataFrame =
     edgeWeightsFromCapped(cappedCheckpointed(pairPred, maxPredsPerPair,
       saltBuckets, materializeCapped))
 
-  /** the weight derivation over an already-capped (ideally materialized)
-    * pair-pred table — lets a caller that also needs the edge table
-    * ([[graft.streaming.StreamingOps.maintainEdges]]) derive BOTH
-    * surfaces from one capped materialization instead of re-running the
-    * cap per surface. */
+  /** the weight derivation over an already-capped (ideally pinned)
+    * pair-pred table — lets a caller that also needs the other surfaces
+    * ([[graphStages]], `StreamingOps.writeEdgeSurfaces`) derive them all
+    * from one capped materialization instead of re-running the cap per
+    * surface. */
   private[graft] def edgeWeightsFromCapped(capped: DataFrame): DataFrame =
     countBattery(capped, Nil)
 
@@ -553,29 +561,40 @@ object Pipeline {
     * assigned type, the typed slices PARTITION the capped pair space —
     * the cap itself is identical to the untyped surface (same skew
     * contract, same evidence rows); only the marginals and totals are
-    * keyed by the slice. Plan shape: the two dimension joins, then the
-    * untyped battery's [[countBattery]] keyed by (type_s, type_o); the
-    * per-slice totals table is type-pair-cardinality-sized and
-    * broadcast. Same fold contract: `pairpred` and the type evidence
-    * fold additively, cap/assignment/marginals recompute from the merged
-    * aggregates. */
+    * keyed by the slice. Plan shape: the cap, then [[typedFromCapped]]
+    * (the two dimension joins onto the capped rows, then the untyped
+    * battery's [[countBattery]] keyed by (type_s, type_o); the per-slice
+    * totals table is type-pair-cardinality-sized and broadcast). Typing
+    * after the cap is exact because the cap ranks within (arg_s, arg_o)
+    * and an argument's type is a function of the argument — PRECONDITION:
+    * `entityTypes` holds at most one row per `canonical`
+    * ([[entityTypesFromEvidence]] guarantees it; a second row would
+    * duplicate the capped rows of that argument). Same fold contract:
+    * `pairpred` and the type evidence fold additively,
+    * cap/assignment/marginals recompute from the merged aggregates. */
   def typedEdgeWeights(pairPred: DataFrame, entityTypes: DataFrame,
                        maxPredsPerPair: Int = 32, saltBuckets: Int = 8,
                        materializeCapped: Boolean = true,
-                       defaultType: String = "OTHER"): DataFrame = {
-    // the type dimension is joined TWICE in typedPairPred (arg_s and
-    // arg_o sides) and the two join subtrees never canonicalize to a
-    // shared exchange — without a pin the whole evidence derivation
-    // behind entityTypes (mention detect ⋈ annotator labels → additive
-    // aggregate → assignment window) executes once PER SIDE. The table
-    // is entity-cardinality-bounded, so it rides the same localCheckpoint
-    // contract as the capped pair space below (r9 plan audit: the typed
-    // battery re-ran the evidence join 2× per query before this pin).
-    val ty = if (materializeCapped) entityTypes.localCheckpoint(eager = false)
-             else entityTypes
-    countBattery(cappedCheckpointed(typedPairPred(pairPred, ty, defaultType),
-      maxPredsPerPair, saltBuckets, materializeCapped), Seq("type_s", "type_o"))
-  }
+                       defaultType: String = "OTHER"): DataFrame =
+    typedFromCapped(cappedPairPred(pairPred, maxPredsPerPair, saltBuckets),
+      entityTypes, materializeCapped, defaultType)
+
+  /** the typed battery over an already-capped pair-pred table. The type
+    * dimension is joined TWICE in [[typedPairPred]] (arg_s and arg_o
+    * sides) and the two join subtrees never canonicalize to a shared
+    * exchange — without a pin the whole evidence derivation behind
+    * `entityTypes` (mention detect ⋈ annotator labels → additive
+    * aggregate → assignment window) executes once PER SIDE (r9 plan
+    * audit), so the entity-cardinality-bounded type table is pinned.
+    * The typed rows feed three consumers inside [[countBattery]], so
+    * they are pinned too — the same bounded table as the cap. The
+    * untyped `capped` is not pinned here: the typed join is its only
+    * consumer. */
+  private[graft] def typedFromCapped(capped: DataFrame, entityTypes: DataFrame,
+                                     materialize: Boolean = true,
+                                     defaultType: String = "OTHER"): DataFrame =
+    countBattery(pinned(typedPairPred(capped, pinned(entityTypes, materialize),
+      defaultType), materialize), Seq("type_s", "type_o"))
 
   /** the SPARSIFIED consumption surface downstream EntGraph globalization
     * reads: top-K entailment candidates per source predicate by balanced
@@ -988,18 +1007,24 @@ object Pipeline {
   }
 
   /** the three entailment-graph stages — `edges`, `edge_weights` and
-    * `typed_edge_weights` — derived from one pair-pred aggregate (and
-    * the entity types, built only if the typed stage computes). Shared
-    * by [[runFromDocs]] and [[incrementalFold]]; all three are bucketed
-    * by pred_src — the entailment-graph consumer reads by predicate, so
-    * bucket predicates prune its scans. Returns the edges stage. */
+    * `typed_edge_weights` — derived from ONE pinned cap of the pair-pred
+    * aggregate ([[cappedCheckpointed]]): the edges select over the
+    * evidence core, the count battery, and the typed battery joining the
+    * entity types onto the capped rows ([[typedFromCapped]]). The cap is
+    * a `lazy val` and the entity types a thunk, so a stage that resumes
+    * never builds them and a fully resumed run materializes no pin.
+    * Shared by [[runFromDocs]] and [[incrementalFold]]; all three are
+    * bucketed by pred_src — the entailment-graph consumer reads by
+    * predicate, so bucket predicates prune its scans. Returns the edges
+    * stage. */
   private def graphStages(store: CheckpointStore, pairPred: DataFrame,
                           entityTypes: => DataFrame): DataFrame = {
     def stage(name: String)(df: => DataFrame) =
       store.runStageDF(name, Seq("canonical"), bucketCol = Some("pred_src"))(df)
-    val edges = stage("edges")(edgesFromPairPred(pairPred))
-    stage("edge_weights")(edgeWeightsFromPairPred(pairPred))
-    stage("typed_edge_weights")(typedEdgeWeights(pairPred, entityTypes))
+    lazy val capped = cappedCheckpointed(pairPred)
+    val edges = stage("edges")(edgesFromCapped(capped))
+    stage("edge_weights")(edgeWeightsFromCapped(capped))
+    stage("typed_edge_weights")(typedFromCapped(capped, entityTypes))
     edges
   }
 

@@ -284,19 +284,23 @@ object StreamingOps {
       .start()
   }
 
-  /** the untyped edge table (and, given a path, the count battery) of
-    * a merged pair-pred aggregate, overwritten in place. BOTH surfaces
-    * share ONE capped materialization — deriving weights through
-    * edgeWeightsFromPairPred would re-run the cap (window top-k) and the
-    * pairwise expansion a second time per batch. */
+  /** the untyped edge table (and, given a path, the count battery;
+    * given entity types and a path, the typed battery) of a merged
+    * pair-pred aggregate, overwritten in place. Every surface shares ONE
+    * pinned cap, the run book's ([[graft.pipeline.Pipeline.cappedCheckpointed]])
+    * — deriving each through its public builder would re-run the cap
+    * (window top-k) once per surface per batch. */
   private def writeEdgeSurfaces(merged: DataFrame, edgesPath: String,
-                                weightsPath: Option[String]): Unit = {
+                                weightsPath: Option[String],
+                                typed: Option[(DataFrame, String)] = None): Unit = {
     import graft.pipeline.Pipeline
-    val capped = Pipeline.cappedPairPred(merged, 32, 8)
-      .localCheckpoint(eager = false)
+    val capped = Pipeline.cappedCheckpointed(merged)
     Pipeline.edgesFromCapped(capped).write.mode("overwrite").parquet(edgesPath)
     weightsPath.foreach(p =>
       Pipeline.edgeWeightsFromCapped(capped).write.mode("overwrite").parquet(p))
+    typed.foreach { case (entityTypes, p) =>
+      Pipeline.typedFromCapped(capped, entityTypes).write.mode("overwrite").parquet(p)
+    }
   }
 
   /** ONE committed fold of `delta` into the generation-protocol
@@ -552,13 +556,11 @@ object StreamingOps {
         foldGeneration(spark, aggPath, batchId, runId, lineageTag,
           Pipeline.pairPredAggregate(canonical), Pipeline.mergePairPred) {
           merged =>
-            writeEdgeSurfaces(merged, edgesPath, Some(weightsPath))
             val evGen = committedAggregate(spark, evidencePath).getOrElse(
               sys.error(s"maintainTypedEdges: evidence fold for batch " +
                 s"$batchId left no committed generation at $evidencePath"))
-            Pipeline.typedEdgeWeights(merged,
-                Pipeline.entityTypesFromEvidence(spark.read.parquet(evGen)))
-              .write.mode("overwrite").parquet(typedWeightsPath)
+            writeEdgeSurfaces(merged, edgesPath, Some(weightsPath), Some(
+              Pipeline.entityTypesFromEvidence(spark.read.parquet(evGen)) -> typedWeightsPath))
         }
       }
       .start()

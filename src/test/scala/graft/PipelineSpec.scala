@@ -15,6 +15,33 @@ class PipelineSpec extends SparkSpecBase {
 
   private val nDocs = 200L
 
+  /** the number of jobs `body` starts, counted per job group by a
+    * `SparkListener`. The listener bus is asynchronous but FIFO, so once
+    * a flush job in its own group shows up, every job the body started
+    * has been seen. */
+  private def jobs(group: String)(body: => Any): Int = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = groups.add(
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    def inGroup(g: String)(f: => Any): Unit = {
+      sc.setJobGroup(g, g)
+      try f finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      inGroup(group)(body)
+      inGroup(s"$group-flush")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 10000000000L
+      while (!groups.contains(s"$group-flush") && System.nanoTime() < deadline) Thread.sleep(5)
+      groups.asScala.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("pipeline triples match the per-sentence oracle exactly") {
     val docs = Pipeline.synthDocs(spark, nDocs)
     val sentences = Pipeline.segmentDocs(docs)
@@ -557,52 +584,62 @@ class PipelineSpec extends SparkSpecBase {
   }
 
   test("a stage commit reads its output back once; a resume reads it once") {
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    // the job group of every job started; the listener bus is
-    // asynchronous but FIFO, so once a flush job in its own group shows
-    // up, every job the measured body started has been seen
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = groups.add(
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    val root = Files.createTempDirectory("graft-job-budget").toString
+    val store = new graft.pipeline.CheckpointStore(root, spark, fingerprint = "j=1")
+    // 1000 distinct keys fill all 64 bucket dirs, past Spark's
+    // 32-path threshold for a parallel-listing job
+    def keyed = spark.range(1000).map(i => (s"k$i", i.toLong))
+    def bucketed() = store.runStage[(String, Long)]("bucketed", bucketCol = Some("_1"))(keyed)
+    def plain() = store.runStage[(String, Long)]("plain")(keyed)
+    // fresh: the write, one listing (bucketed only), the lineage write
+    val freshBucketed = jobs("fresh-bucketed")(bucketed())
+    assert(freshBucketed <= 4, s"fresh bucketed commit ran $freshBucketed jobs")
+    val freshPlain = jobs("fresh-plain")(plain())
+    assert(freshPlain <= 3, s"fresh unbucketed commit ran $freshPlain jobs")
+    assert(new java.io.File(root, "bucketed").listFiles()
+      .count(_.getName.startsWith("_bucket=")) == 64)
+    // resume: one inference read (listing + schema)
+    val resumedBucketed = jobs("resume-bucketed")(bucketed())
+    assert(resumedBucketed <= 2, s"bucketed resume ran $resumedBucketed jobs")
+    val resumedPlain = jobs("resume-plain")(plain())
+    assert(resumedPlain <= 2, s"unbucketed resume ran $resumedPlain jobs")
+    assert(bucketed().collect().toSet == keyed.collect().toSet)
+    assert(plain().count() == 1000L)
+  }
+
+  private val graphStageNames = Seq("edges", "edge_weights", "typed_edge_weights")
+
+  test("the three graph stages share one pinned cap: job budget of their recompute") {
+    val root = Files.createTempDirectory("graft-graph-budget").toString
+    Pipeline.run(spark, root, nDocs = nDocs)
+    for (s <- graphStageNames)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root, s))
+    // the upstream stages resume; only the graph stages recompute. One
+    // pinned cap shared by the three stages runs 44 jobs here; capping
+    // once per stage (edges unpinned, both batteries pinned) ran 48
+    val n = jobs("graph-stages")(Pipeline.run(spark, root, nDocs = nDocs))
+    assert(n <= 46, s"recomputing the three graph stages ran $n jobs")
+    for (s <- graphStageNames)
+      assert(new java.io.File(s"$root/$s/_graft_meta.json").exists(), s)
+  }
+
+  test("run-book graph stages == the public builders over the root's own canonical") {
+    import org.apache.spark.sql.functions.col
+    val root = Files.createTempDirectory("graft-graph-builders").toString
+    Pipeline.run(spark, root, nDocs = nDocs)
+    def stored(s: String) = spark.read.parquet(s"$root/$s").drop("_bucket")
+    val pp = Pipeline.pairPredAggregate(stored("canonical"))
+    val sentences = stored("sentences").as[graft.model.SentenceRow]
+    val dict = Pipeline.synthAliases(spark)
+    val types = Pipeline.entityTypesFromEvidence(Pipeline.entityTypeEvidence(
+      graft.pipeline.Mentions.detect(sentences, dict), Pipeline.mentionLabelTable(sentences)))
+    for ((s, built) <- graphStageNames.zip(Seq(Pipeline.edgesFromPairPred(pp),
+           Pipeline.edgeWeightsFromPairPred(pp), Pipeline.typedEdgeWeights(pp, types)))) {
+      val got = stored(s).select(built.columns.map(col).toSeq: _*).collect()
+      val want = built.collect()
+      assert(got.nonEmpty && got.length == want.length, s"$s: ${got.length} vs ${want.length} rows")
+      assert(got.map(_.toSeq).toSet == want.map(_.toSeq).toSet, s)
     }
-    def jobs(group: String)(body: => Any): Int = {
-      def inGroup(g: String)(f: => Any): Unit = {
-        sc.setJobGroup(g, g)
-        try f finally sc.clearJobGroup()
-      }
-      inGroup(group)(body)
-      inGroup(s"$group-flush")(sc.parallelize(Seq(1), 1).count())
-      val deadline = System.nanoTime() + 10000000000L
-      while (!groups.contains(s"$group-flush") && System.nanoTime() < deadline) Thread.sleep(5)
-      groups.asScala.count(_ == group)
-    }
-    sc.addSparkListener(listener)
-    try {
-      val root = Files.createTempDirectory("graft-job-budget").toString
-      val store = new graft.pipeline.CheckpointStore(root, spark, fingerprint = "j=1")
-      // 1000 distinct keys fill all 64 bucket dirs, past Spark's
-      // 32-path threshold for a parallel-listing job
-      def keyed = spark.range(1000).map(i => (s"k$i", i.toLong))
-      def bucketed() = store.runStage[(String, Long)]("bucketed", bucketCol = Some("_1"))(keyed)
-      def plain() = store.runStage[(String, Long)]("plain")(keyed)
-      // fresh: the write, one listing (bucketed only), the lineage write
-      val freshBucketed = jobs("fresh-bucketed")(bucketed())
-      assert(freshBucketed <= 4, s"fresh bucketed commit ran $freshBucketed jobs")
-      val freshPlain = jobs("fresh-plain")(plain())
-      assert(freshPlain <= 3, s"fresh unbucketed commit ran $freshPlain jobs")
-      assert(new java.io.File(root, "bucketed").listFiles()
-        .count(_.getName.startsWith("_bucket=")) == 64)
-      // resume: one inference read (listing + schema)
-      val resumedBucketed = jobs("resume-bucketed")(bucketed())
-      assert(resumedBucketed <= 2, s"bucketed resume ran $resumedBucketed jobs")
-      val resumedPlain = jobs("resume-plain")(plain())
-      assert(resumedPlain <= 2, s"unbucketed resume ran $resumedPlain jobs")
-      assert(bucketed().collect().toSet == keyed.collect().toSet)
-      assert(plain().count() == 1000L)
-    } finally sc.removeSparkListener(listener)
   }
 
   test("compact preserves the bucketed layout of a keyed stage") {
