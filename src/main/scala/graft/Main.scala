@@ -125,19 +125,16 @@ object Main {
         .head.getLong(0))
   }
 
+  /** per-list triple totals of a triples table. */
+  private def relTotals(triples: org.apache.spark.sql.DataFrame): Seq[(String, Long)] =
+    triples.groupBy("rel_list").count()
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+
   /** the reference's merge-stage global stats file
     * (merge_parsed_results.py:60-74): docs, edges, per-list triple totals.
     * hadoop FS, not java.nio — --out may be an HDFS/object-store path. */
   private def writeStats(spark: SparkSession, outDir: String, nDocs: Long,
-                         nEdges: Long,
-                         triples: org.apache.spark.sql.DataFrame): Unit =
-    writeStatsJson(spark, outDir, nDocs, nEdges,
-      triples.groupBy("rel_list").count()
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq)
-
-  private def writeStatsJson(spark: SparkSession, outDir: String, nDocs: Long,
-                             nEdges: Long,
-                             relTotals: Seq[(String, Long)]): Unit = {
+                         nEdges: Long, relTotals: Seq[(String, Long)]): Unit = {
     val totals = relTotals.sortBy(_._1).map { case (k, n) => s"""    "$k": $n""" }
     val stats =
       s"""{
@@ -155,38 +152,41 @@ object Main {
     os.close()
   }
 
-  /** ADDITIVE stats refresh for the incremental fold: the previous
-    * stats.json (machine-written by [[writeStatsJson]]) plus the fold's
-    * delta — rel totals and doc counts are pure sums, so the refresh is
-    * slice-sized instead of two full-store scans per fold. Falls back to
-    * the full recomputation when no prior stats.json exists OR when the
-    * fold REPAIRED a crashed predecessor (the crashed fold's rows are in
-    * the stores but were never captured by any delta — incrementing
-    * would under-count them forever). */
+  /** stats.json after an incremental fold. docs and edges are the totals
+    * the stores' commits recorded, as on the one-shot path. Rel totals are
+    * ADDITIVE: the previous stats.json (machine-written by [[writeStats]])
+    * plus the fold's delta, slice-sized instead of a full-store scan per
+    * fold. They are recounted from the triples store when no prior
+    * stats.json exists OR when the fold REPAIRED a crashed predecessor
+    * (the crashed fold's rows are in the stores but were never captured by
+    * any delta — incrementing would under-count them forever); that read
+    * carries the stage's schema, so an EMPTY partitioned stage (zero part
+    * files) reads as empty. */
   private def refreshStats(spark: SparkSession, outDir: String,
-                           res: Pipeline.IncrementalResult, nEdges: Long): Unit = {
+                           res: Pipeline.IncrementalResult): Unit = {
     val statsPath = new org.apache.hadoop.fs.Path(s"$outDir/stats.json")
     val fs = statsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(statsPath) || res.repaired) {
-      writeStatsJson(spark, outDir, res.docsTotal(), nEdges,
-        res.triples.groupBy("rel_list").count()
-          .collect().map(r => (r.getString(0), r.getLong(1))).toSeq)
-    } else {
-      val in = fs.open(statsPath)
-      val old = try new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
-      finally in.close()
-      val oldTotals = scala.collection.mutable.Map.empty[String, Long]
-      val it = old.get("rel_totals").fields()
-      while (it.hasNext) {
-        val e = it.next()
-        oldTotals += e.getKey -> e.getValue.asLong()
+    val totals =
+      if (!fs.exists(statsPath) || res.repaired)
+        relTotals(spark.read.schema(org.apache.spark.sql.Encoders
+          .product[graft.model.TripleRow].schema).parquet(s"$outDir/triples"))
+      else {
+        val in = fs.open(statsPath)
+        val old = try new com.fasterxml.jackson.databind.ObjectMapper()
+          .readTree(new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
+        finally in.close()
+        val oldTotals = scala.collection.mutable.Map.empty[String, Long]
+        val it = old.get("rel_totals").fields()
+        while (it.hasNext) {
+          val e = it.next()
+          oldTotals += e.getKey -> e.getValue.asLong()
+        }
+        res.deltaRelTotals.foreach { case (k, n) =>
+          oldTotals += k -> (oldTotals.getOrElse(k, 0L) + n) }
+        oldTotals.toSeq
       }
-      res.deltaRelTotals.foreach { case (k, n) =>
-        oldTotals += k -> (oldTotals.getOrElse(k, 0L) + n) }
-      writeStatsJson(spark, outDir, old.get("docs").asLong() + res.newDocs,
-        nEdges, oldTotals.toSeq)
-    }
+    val store = new pipeline.CheckpointStore(outDir, spark)
+    writeStats(spark, outDir, store.rows("docs"), store.rows("edges"), totals)
   }
 
   def main(args: Array[String]): Unit = {
@@ -330,9 +330,12 @@ object Main {
         fsS.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS"))
       val ppGen = graft.streaming.StreamingOps
         .committedAggregate(spark, s"$outDir/pairpred_stream")
+      // both backfills derive from ONE pinned cap of the generation, as
+      // each micro-batch does (StreamingOps.writeEdgeSurfaces)
+      lazy val capped = Pipeline.cappedCheckpointed(spark.read.parquet(ppGen.get))
       if (!present(s"$outDir/edge_weights_stream")) ppGen match {
         case Some(gen) =>
-          Pipeline.edgeWeightsFromPairPred(spark.read.parquet(gen))
+          Pipeline.edgeWeightsFromCapped(capped)
             .write.mode("overwrite").parquet(s"$outDir/edge_weights_stream")
           println(s"[graft] edge_weights_stream backfilled from $gen")
         case None => println(
@@ -345,7 +348,7 @@ object Main {
           .committedAggregate(spark, s"$outDir/type_evidence_stream")
         (ppGen, evGen) match {
           case (Some(pg), Some(eg)) =>
-            Pipeline.typedEdgeWeights(spark.read.parquet(pg),
+            Pipeline.typedFromCapped(capped,
                 Pipeline.entityTypesFromEvidence(spark.read.parquet(eg)))
               .write.mode("overwrite")
               .parquet(s"$outDir/edge_weights_typed_stream")
@@ -441,7 +444,7 @@ object Main {
       // from the stores instead of silently never catching up
       val res = Pipeline.incrementalFold(spark, outDir, docs,
         fingerprint = s"$fullFp,incremental", aliases = Some(aliases),
-        beforeCommit = r => refreshStats(spark, outDir, r, nEdges = r.edges.count()))
+        beforeCommit = refreshStats(spark, outDir, _))
       readerOut.foreach(_.uncache())
       if (opts.contains("compact")) {
         // post-fold maintenance: exactly the stages THIS fold stamped
@@ -493,14 +496,10 @@ object Main {
     }
 
     // the reference's merge-stage global stats (merge_parsed_results.py:60-74)
-    // docs and edges are the totals their stage commits recorded; a meta
-    // without one falls back to counting the store's read-back (which,
-    // unlike a raw parquet read, survives an EMPTY partitioned stage)
+    // docs and edges are the totals their stage commits recorded
     val store = new pipeline.CheckpointStore(outDir, spark)
-    val nDocs = store.recordedRows("docs").getOrElse(result.docsOut.count())
-    writeStats(spark, outDir, nDocs,
-               nEdges = store.recordedRows("edges").getOrElse(result.edges.count()),
-               triples = result.triples)
+    val nDocs = store.rows("docs")
+    writeStats(spark, outDir, nDocs, store.rows("edges"), relTotals(result.triples))
     if (opts.contains("skew-report")) {
       // the pre-salting diagnostic over the edges shuffle key: run it
       // here, on the corpus you're about to build edges for, BEFORE

@@ -55,12 +55,6 @@ final class CheckpointStore(root: String, spark: SparkSession,
   private def hasRecordedLineage(stage: String): Boolean =
     lineageExists(stage) || metaFileRows(stage).nonEmpty
 
-  /** per-file (file, rows) for the given data files — ONE distributed
-    * pass, file name extracted plan-side (no driver mapping). */
-  private def perFileCounts(files: Seq[Path]): DataFrame =
-    if (files.isEmpty) emptyLineage
-    else perFile(spark.read.parquet(files.map(_.toString): _*))
-
   /** rows per data file of a stage read. */
   private def perFile(data: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{count, element_at, input_file_name, lit, split}
@@ -291,11 +285,14 @@ final class CheckpointStore(root: String, spark: SparkSession,
     * the stage's contents (doc-granular anti-join upstream).
     *
     * COST CONTRACT: the meta refresh is SLICE-SIZED, not store-sized —
-    * per-file lineage for the NEW files only is counted (one job over the
-    * appended files) and merged with the meta's recorded entries; the
-    * history files are never rescanned. (If the prior meta is missing its
-    * file list — hand-edited root — it falls back to one full
-    * markComplete rescan rather than recording wrong lineage.) */
+    * the NEW files are read once, under the written schema, and their
+    * per-file lineage is appended to the side table with its row total
+    * observed on that one write ([[recordLineage]]'s commit); the meta
+    * total is the lineage table's previous total plus that delta. The
+    * history files are never rescanned. (If the recorded lineage misses
+    * a pre-append file — a crashed append, a hand-edited root — it falls
+    * back to one full markComplete rescan rather than recording wrong
+    * lineage.) */
   def appendStage(df: DataFrame, stage: String,
                   upstream: Seq[String] = Nil,
                   bucketCol: Option[String] = None, nBuckets: Int = 64): Unit = {
@@ -322,22 +319,24 @@ final class CheckpointStore(root: String, spark: SparkSession,
       // fall back to one full self-healing rescan
       markComplete(stage, upstream, Some(withBucket(df.schema, bucketCol)))
     } else {
-      // SLICE-SIZED lineage refresh: count the NEW files only, append
-      // their rows to the lineage table, bump the meta total by the
-      // delta — the history files are never rescanned
-      val newFiles = listDataFiles(stage).filterNot(p => before(p.getName))
-      val freshDF = perFileCounts(newFiles).localCheckpoint()
-      val freshTotal = lineageTotal(freshDF)
       // previous total from the lineage table, NOT the meta json: a
       // crash between a lineage append and the meta rewrite leaves the
       // json total stale-low — preferring it here would bake the
       // under-count into every subsequent append (the compact verifier
       // already names the lineage table the source of truth). Evaluated
-      // eagerly BEFORE freshDF lands in the table.
+      // BEFORE the new files' lineage lands in the table.
       val prevTotal = lineageTotal(lineageDF(stage))
       if (!lineageExists(stage)) // legacy root: migrate the json list once
         lineageDF(stage).write.mode("overwrite").parquet(lineagePath(stage))
-      freshDF.write.mode("append").parquet(lineagePath(stage))
+      // SLICE-SIZED lineage refresh over the NEW files only. An empty
+      // append adds no file and no lineage — and starts no observed
+      // write: an empty plan may run no job, so its observation would
+      // never arrive
+      val newFiles = listDataFiles(stage).filterNot(p => before(p.getName))
+      val freshTotal =
+        if (newFiles.isEmpty) 0L
+        else writeLineage(stage, "append",
+          spark.read.schema(df.schema).parquet(newFiles.map(_.toString): _*))
       writeMeta(stage, upstream, prevTotal + freshTotal)
     }
   }
@@ -406,18 +405,24 @@ final class CheckpointStore(root: String, spark: SparkSession,
   }
 
   /** per-file lineage of `data` (the stage's read-back), written straight
-    * to the lineage side table (never collected); the stage total rides
-    * that write as an `Observation`, so neither the data nor the side
-    * table is read again for it. Lineage commits BEFORE the meta json —
-    * the json's fingerprint is what marks the stage complete, so a crash
-    * between the two leaves an incomplete stage, never a complete stage
-    * with missing lineage. */
-  private def recordLineage(stage: String, upstream: Seq[String], data: DataFrame): Unit = {
+    * to the lineage side table (never collected). Lineage commits BEFORE
+    * the meta json — the json's fingerprint is what marks the stage
+    * complete, so a crash between the two leaves an incomplete stage,
+    * never a complete stage with missing lineage. */
+  private def recordLineage(stage: String, upstream: Seq[String], data: DataFrame): Unit =
+    writeMeta(stage, upstream, writeLineage(stage, "overwrite", data))
+
+  /** write (or append) `data`'s per-file lineage to the side table and
+    * return its row total, an `Observation` on that write — neither the
+    * data nor the side table is read again for it. The write must start
+    * a job, or the observation never arrives: a stage read-back does,
+    * empty or not; a read of an empty file list may not. */
+  private def writeLineage(stage: String, mode: String, data: DataFrame): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, sum}
     val total = Observation()
     perFile(data).observe(total, coalesce(sum(col("rows")), lit(0L)).as("rows"))
-      .write.mode("overwrite").parquet(lineagePath(stage))
-    writeMeta(stage, upstream, total.get("rows").asInstanceOf[Long])
+      .write.mode(mode).parquet(lineagePath(stage))
+    total.get("rows").asInstanceOf[Long]
   }
 
   private def writeMeta(stage: String, upstream: Seq[String],
@@ -434,9 +439,16 @@ final class CheckpointStore(root: String, spark: SparkSession,
 
   /** the total row count recorded in a stage's meta json (None when the
     * stage has no meta, or a hand-written one without a count). */
-  def recordedRows(stage: String): Option[Long] =
+  private def recordedRows(stage: String): Option[Long] =
     readMeta(stage).flatMap(""""rows":(\d+)""".r.findFirstMatchIn(_))
       .map(_.group(1).toLong)
+
+  /** the stage's row total: the count its commit recorded, else (a meta
+    * without one) a count of its data — 0 when it has no data file (an
+    * EMPTY partitioned stage, or no stage at all). */
+  def rows(stage: String): Long =
+    recordedRows(stage).getOrElse(
+      if (listDataFiles(stage).isEmpty) 0L else spark.read.parquet(dataPath(stage)).count())
 
   /** LEGACY per-file lineage from the meta json (pre-r8 layout kept the
     * list inline) — migration read only; new roots keep lineage in the

@@ -1029,20 +1029,18 @@ object Pipeline {
   }
 
   // ------------------------------------------------------- incremental
-  /** `deltaRelTotals` = the appended triple rows' per-list counts (the
-    * ADDITIVE stats delta — rel totals are pure counts, so the caller
-    * merges them into the previous stats instead of rescanning the
-    * store); `repaired` = this fold found a crashed predecessor's marker
-    * and reconciled the stores first — the crashed fold's rows are in
-    * the stores but in NO recorded delta, so any additive derived state
-    * (stats.json) must be rebuilt from the stores, not incremented;
-    * `docsTotal` is a THUNK (a full docs-store count — only the rebuild
-    * paths pay it); `triples` is the lazy full-store read-back (no job
-    * unless consumed). */
-  final case class IncrementalResult(newDocs: Long, docsTotal: () => Long,
+  /** `newDocs` = the docs this fold appended; `deltaRelTotals` = their
+    * triple rows' per-list counts (the ADDITIVE stats delta — rel totals
+    * are pure counts, so the caller merges them into the previous stats
+    * instead of rescanning the store); `repaired` = this fold found a
+    * crashed predecessor's marker and reconciled the stores first — the
+    * crashed fold's rows are in the stores but in NO recorded delta, so
+    * any additive derived state (stats.json) must be rebuilt from the
+    * stores, not incremented. Store totals (docs, edges) are the rows
+    * each stage's commit recorded ([[CheckpointStore.rows]]). */
+  final case class IncrementalResult(newDocs: Long,
                                      deltaRelTotals: Seq[(String, Long)],
-                                     repaired: Boolean,
-                                     triples: DataFrame, edges: DataFrame)
+                                     repaired: Boolean)
 
   /** the fold-root preconditions, callable BEFORE any corpus work — a
     * rejected --incremental invocation must not have scanned or written
@@ -1165,15 +1163,26 @@ object Pipeline {
     * incremental aggregate path. This is the run-book surface of the
     * operators the kg_slice_merge / kg_edges_incr oracles prove:
     *
-    *   fresh docs → extract → per-store doc_id anti-joins   (each store's
-    *     delta is keyed on ITS OWN id set — store-local idempotence)
+    *   fresh docs ⋉̸ docs-store ids              (the ONE delta: new docs)
+    *   → segment the new docs once → extract → canonicalize
+    *   → pairPredAggregate(canonical delta) folded into the maintained
+    *     `pairpred` aggregate ([[mergePairPred]], additive, agg-sized),
+    *     the new docs' type evidence into `type_evidence` the same way
     *   → APPEND to docs + triples + canonical IN THAT ORDER (same bucket
     *     layout; history files untouched — Iceberg append, not rewrite;
     *     the order maintains canonical ⊆ triples ⊆ docs under any crash)
-    *   → pairPredAggregate(canonical delta) folded into the maintained
-    *     `pairpred` aggregate ([[mergePairPred]], additive, agg-sized)
-    *   → [[edgesFromPairPred]] re-derived from the merged aggregate
-    *     (the non-additive cap/expansion — never rescans the corpus).
+    *   → [[graphStages]] re-derived from the merged aggregates (the
+    *     non-additive cap/expansion — never rescans the corpus).
+    *
+    * PRECONDITION of the one delta: when it is computed, every stored doc
+    * has all its triple and canonical rows (canonical ⊆ triples ⊆ docs,
+    * doc-complete). A committed fold or one-shot run leaves the root so,
+    * and the repair pass below restores it after a crash — the
+    * `_fold_inflight` marker brackets the only window where it fails.
+    * So a doc id already stored has nothing left to append anywhere and
+    * is ignored, even if its content changed (existing rows win, as in
+    * [[mergeSliceIncrement]]). A slice with no new doc, and no repair,
+    * is a NO-OP: nothing is segmented, extracted, aggregated or written.
     *
     * CRASH SAFETY: parquet has no atomic multi-table commit (Iceberg
     * does — that is the production seam), so the fold brackets its
@@ -1187,8 +1196,8 @@ object Pipeline {
     * always converges to the one-shot result.
     *
     * The existing corpus is NEVER re-extracted or re-segmented on the
-    * normal path: at 100 TB the cost is the fresh slice's extraction +
-    * three doc-id column scans of history + aggregate-sized folds. A
+    * normal path: at 100 TB the cost is the new docs' extraction + one
+    * doc-id column scan of history + aggregate-sized folds. A
     * missing `pairpred` store (a root written before this path existed)
     * is derived once from the canonical store and maintained from then
     * on. The updated stages are re-stamped with THIS fingerprint, so a
@@ -1240,6 +1249,9 @@ object Pipeline {
       store.readData(stage, Some(stageSchema(stage))).drop("_bucket")
     def storeIds(stage: String) =
       readStore(stage).select(col("doc_id")).distinct()
+    def asDocs(df: DataFrame) = df.select(col("doc_id"), col("spans")).as[Doc](docEnc)
+    def typeEvidence(sents: Dataset[SentenceRow]) =
+      entityTypeEvidence(Mentions.detect(sents, dict), mentionLabelTable(sents))
 
     val repaired = fs.exists(marker)
     if (repaired) {
@@ -1282,73 +1294,36 @@ object Pipeline {
       fs.create(marker, true).close()
     }
 
-    // deltas — each keyed on its own store's ids, all MATERIALIZED
-    // (eager localCheckpoint) before any append below mutates a store
+    // the ONE delta: the slice's docs the docs store lacks, pinned (eager
+    // localCheckpoint) before any append below mutates the store
     val docsNew = freshDocs.toDF()
       .join(storeIds("docs"), Seq("doc_id"), "left_anti").localCheckpoint()
-    val freshTriples = extractTriples(segmentDocs(freshDocs), parser = parser)
-      .toDF().localCheckpoint()
-    val tNew = freshTriples
-      .join(storeIds("triples"), Seq("doc_id"), "left_anti").localCheckpoint()
-    val cNew = canonicalize(
-      freshTriples.join(storeIds("canonical"), Seq("doc_id"), "left_anti")
-        .as[TripleRow], dict).localCheckpoint()
-    // maintained additive aggregate; derived once for pre-existing roots
-    // (read BEFORE the canonical append — the fallback must not see the
-    // delta docs twice)
-    val ppPath = s"$root/pairpred"
-    val ppExisting =
-      if (fs.exists(new org.apache.hadoop.fs.Path(ppPath, "_SUCCESS")))
-        spark.read.parquet(ppPath).drop("_bucket")
-      else pairPredAggregate(readStore("canonical"))
-    val ppMerged = mergePairPred(ppExisting, pairPredAggregate(cNew))
-      .localCheckpoint() // also breaks the pairpred read/overwrite cycle
-    // the typed-subgraph evidence aggregate, maintained exactly like
-    // pairpred: delta from the NEW docs only (mention/label pass over
-    // the fresh slice's sentences), folded by summation. A pre-typed
-    // root derives it once from the docs store and maintains it from
-    // then on. Evaluated LAZILY inside the mutating branch (before any
-    // append mutates the docs store, so the pre-typed fallback never
-    // sees the delta docs twice) — a no-op resubmission on a pre-typed
-    // root must not pay the full-corpus fallback derivation.
-    val evPath = s"$root/type_evidence"
-    def evMerged: DataFrame = {
-      val evExisting =
-        if (fs.exists(new org.apache.hadoop.fs.Path(evPath, "_SUCCESS")))
-          spark.read.parquet(evPath)
-        else {
-          val sentsAll = segmentDocs(readStore("docs")
-            .select(col("doc_id"), col("spans")).as[Doc](docEnc))
-          entityTypeEvidence(Mentions.detect(sentsAll, dict),
-            mentionLabelTable(sentsAll))
-        }
-      val sentsNew = segmentDocs(docsNew
-        .select(col("doc_id"), col("spans")).as[Doc](docEnc))
-      mergeTypeEvidence(evExisting,
-        entityTypeEvidence(Mentions.detect(sentsNew, dict),
-          mentionLabelTable(sentsNew)))
-        .localCheckpoint() // breaks the read/overwrite cycle like ppMerged
-    }
-
-    // NO-OP fast path: a clean re-submission of an already-folded slice
-    // (every delta empty, no repair ran) must not rewrite anything — in
-    // particular not re-derive the edge stage, the fold's most expensive
-    // step. Detected on the materialized (checkpointed) deltas, so the
-    // checks are cached-partition scans, not recomputation.
-    val noop = !repaired && docsNew.isEmpty && tNew.isEmpty && cNew.isEmpty
-    val edgesBack =
-      if (noop) {
-        val edgesSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("pred_src", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("pred_dst", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("weight", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("n_arg_pairs", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("_bucket", org.apache.spark.sql.types.LongType)))
-        store.readData("edges", Some(edgesSchema)).drop("_bucket")
-      } else {
-        // evidence merge MATERIALIZES here (eager localCheckpoint),
-        // BEFORE the docs append below mutates its fallback input
-        val ev = evMerged
+    val newDocs = docsNew.count()
+    val deltaRelTotals =
+      if (!repaired && newDocs == 0) Nil // NO-OP: build and write nothing
+      else {
+        // every delta and merged aggregate below is MATERIALIZED before
+        // the first append: the pre-aggregate fallbacks read the canonical
+        // and docs stores, which must not see the delta docs twice. The
+        // new docs are segmented ONCE, for extraction and type evidence
+        val sentsNew = segmentDocs(asDocs(docsNew)).localCheckpoint()
+        val tNew = extractTriples(sentsNew, parser = parser).toDF().localCheckpoint()
+        val cNew = canonicalize(tNew.as[TripleRow], dict).localCheckpoint()
+        // the maintained additive aggregates; a root written before one
+        // existed derives it once from the stores and maintains it from
+        // then on. The pins also break each read/overwrite cycle
+        val ppPath = s"$root/pairpred"
+        val ppExisting =
+          if (fs.exists(new org.apache.hadoop.fs.Path(ppPath, "_SUCCESS")))
+            spark.read.parquet(ppPath).drop("_bucket")
+          else pairPredAggregate(readStore("canonical"))
+        val ppMerged = mergePairPred(ppExisting, pairPredAggregate(cNew)).localCheckpoint()
+        val evPath = s"$root/type_evidence"
+        val evExisting =
+          if (fs.exists(new org.apache.hadoop.fs.Path(evPath, "_SUCCESS")))
+            spark.read.parquet(evPath)
+          else typeEvidence(segmentDocs(asDocs(readStore("docs"))))
+        val ev = mergeTypeEvidence(evExisting, typeEvidence(sentsNew)).localCheckpoint()
         store.appendStage(docsNew, "docs", Nil, bucketCol = Some("doc_id"))
         store.appendStage(tNew, "triples", Seq("sentences"), bucketCol = Some("doc_id"))
         store.appendStage(cNew, "canonical", Seq("triples"), bucketCol = Some("doc_id"))
@@ -1357,19 +1332,14 @@ object Pipeline {
         // re-derive edges and both weight surfaces from the merged
         // aggregates and overwrite the stages (runStageDF under THIS
         // fingerprint re-stamps the meta; the standing marker keeps
-        // isComplete false here, which is what a mutating fold needs
-        // anyway — only the no-op branch skips). A pre-weights root
-        // simply gains the weight stages on its first mutating fold
+        // isComplete false here, which is what a mutating fold needs). A
+        // pre-weights root simply gains the weight stages on its first
+        // mutating fold
         graphStages(store, ppMerged, entityTypesFromEvidence(ev))
+        tNew.groupBy(col("rel_list")).count()
+          .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
       }
-    val result = IncrementalResult(
-      newDocs = docsNew.select(col("doc_id")).distinct().count(),
-      docsTotal = () => readStore("docs").count(),
-      deltaRelTotals = tNew.groupBy(col("rel_list")).count()
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq,
-      repaired = repaired,
-      triples = readStore("triples"),
-      edges = edgesBack)
+    val result = IncrementalResult(newDocs, deltaRelTotals, repaired)
     // derived-state refresh (stats.json) runs INSIDE the crash bracket:
     // if it dies, the marker still stands and the next fold's repair
     // rebuilds everything — no window where the stores committed but the

@@ -623,6 +623,31 @@ class PipelineSpec extends SparkSpecBase {
       assert(new java.io.File(s"$root/$s/_graft_meta.json").exists(), s)
   }
 
+  test("a fold builds one delta: job budgets of a mutating fold and a no-op re-submission") {
+    val root = Files.createTempDirectory("graft-fold-budget").toString
+    Pipeline.run(spark, root, nDocs = nDocs)
+    // half of the slice [150, 250) is already stored
+    def fold() = Pipeline.incrementalFold(spark, root,
+      Pipeline.synthDocsRange(spark, 150, 250), fingerprint = "fold-budget")
+    def files() = {
+      def walk(f: java.io.File): Seq[(String, Long)] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+        else Seq(f.getPath -> f.lastModified())
+      walk(new java.io.File(root)).toSet
+    }
+    val mutating = jobs("fold")(fold())
+    val before = files()
+    val noop = jobs("fold-noop")(fold())
+    assert(files() == before, "a no-op fold must write nothing")
+    assert(new graft.pipeline.CheckpointStore(root, spark).rows("docs") == 250L)
+    // one history anti-join, one segmentation of the new docs and one
+    // observed lineage write per append: 94 and 7 jobs here. Extracting
+    // the whole slice, anti-joining all three stores and building the
+    // merged aggregates before the no-op test ran 118 and 31
+    assert(mutating <= 100, s"a mutating fold ran $mutating jobs")
+    assert(noop <= 10, s"a no-op fold ran $noop jobs")
+  }
+
   test("run-book graph stages == the public builders over the root's own canonical") {
     import org.apache.spark.sql.functions.col
     val root = Files.createTempDirectory("graft-graph-builders").toString
