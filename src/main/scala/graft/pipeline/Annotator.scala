@@ -2,36 +2,13 @@ package graft.pipeline
 
 import graft.synth.{FixtureParser, Templates}
 
-/** Pluggable sentence-annotation boundary — the live-NLP-model seam.
-  *
-  * The reference drives real annotators two ways: a CoreNLP SERVER
-  * through a socket client (/root/reference/main_ner.py:76-82 — one
-  * CoreNLPClient per slice process with endpoint + timeout, requests
-  * issued per document) and DDParser loaded IN-PROCESS
-  * (/root/reference/dudepparse.py:1851). Neither model ships in this
-  * sandbox, so the engine's default is the deterministic fixture
-  * annotator — but the INTEGRATION SHAPE is concrete and testable:
-  *
-  *  - one connection per PARTITION: `open()` runs before the first
-  *    batch, `close()` is registered on the task-completion listener so
-  *    it runs even when the task fails — the `mapPartitions` analogue of
-  *    the reference's client-per-slice-process;
-  *  - bounded request BATCHES (`batchSize` sentences per `annotate`
-  *    call), results aligned index-wise — a misaligned reply fails
-  *    loudly instead of attaching annotations to the wrong sentences;
-  *  - implementations must be Serializable (the instance is shipped to
-  *    executors); live connections belong in `@transient` state created
-  *    by `open()`.
-  */
-trait SentenceAnnotator extends Serializable {
-  /** open the per-partition connection; called once before any batch. */
-  def open(): Unit = ()
+/** Pluggable sentence-annotation boundary — one of the two live-NLP
+  * [[ModelConnection]] seams (the reference's CoreNLP client, requests
+  * issued per document, main_ner.py:76-82). */
+trait SentenceAnnotator extends ModelConnection {
   /** annotate a batch; MUST return exactly one token sequence per input
     * sentence, aligned by index. */
   def annotate(sentences: Seq[String]): Seq[Seq[NerPos.AnnToken]]
-  /** release the per-partition connection; runs on task completion
-    * (success or failure) — must be idempotent. */
-  def close(): Unit = ()
 }
 
 /** the deterministic in-sandbox annotator: tokens from the fixture
@@ -62,61 +39,38 @@ object FixtureAnnotator extends SentenceAnnotator {
 }
 
 /** a concrete remote-server client for the annotator seam: POSTs one
-  * JSON batch per `annotate` call and parses the aligned reply — the
-  * shape a CoreNLP-server adapter takes (the real server's field names
-  * differ; an adapter maps `characterOffsetBegin/End` → `begin/end`).
+  * JSON batch per `annotate` call ([[HttpBatch]]) and decodes the aligned
+  * reply — the shape a CoreNLP-server adapter takes (the real server's
+  * field names differ; an adapter maps `characterOffsetBegin/End` →
+  * `begin/end`).
   *
-  * Wire contract (documented, mock-served in NerPosSpec):
+  * Wire contract (documented, mock-served in PipelineSpec):
   *   request  {"sentences": ["…", …]}
   *   response {"sentences": [[{"word":…,"pos":…,"ner":…,
   *                             "begin":N,"end":N}, …], …]}
-  *
-  * One `java.net.http.HttpClient` per partition (created in `open()`,
-  * `@transient` — never serialized); `timeoutMs` mirrors the reference
-  * client's 90 s default (main_ner.py:80). */
+  * Every token field is required with its type: a null or string offset
+  * fails loudly instead of becoming char 0. `timeoutMs` mirrors the
+  * reference client's 90 s default (main_ner.py:80). */
 final class HttpSentenceAnnotator(endpoint: String, timeoutMs: Long = 90000L)
     extends SentenceAnnotator {
-  @transient private lazy val mapper =
-    new com.fasterxml.jackson.databind.ObjectMapper()
-
-  // the connection pool is ONE JVM-wide thread-safe client, not one per
-  // task: the annotator instance is deserialized per TASK, and JDK 17's
-  // HttpClient has no close() — a client per task would accumulate
-  // selector threads + sockets until GC on long multi-partition jobs
-  private def client: java.net.http.HttpClient = HttpSentenceAnnotator.shared
-
   def annotate(sentences: Seq[String]): Seq[Seq[NerPos.AnnToken]] = {
-    val root = mapper.createObjectNode()
-    val arr = root.putArray("sentences")
-    sentences.foreach(arr.add)
-    val req = java.net.http.HttpRequest.newBuilder(java.net.URI.create(endpoint))
-      .timeout(java.time.Duration.ofMillis(timeoutMs))
-      .header("Content-Type", "application/json")
-      .POST(java.net.http.HttpRequest.BodyPublishers.ofString(
-        mapper.writeValueAsString(root), java.nio.charset.StandardCharsets.UTF_8))
-      .build()
-    val resp = client.send(req,
-      java.net.http.HttpResponse.BodyHandlers.ofString(java.nio.charset.StandardCharsets.UTF_8))
-    require(resp.statusCode() == 200,
-      s"annotator server $endpoint returned HTTP ${resp.statusCode()}")
-    val out = mapper.readTree(resp.body()).get("sentences")
-    require(out != null && out.size() == sentences.length,
-      s"annotator reply misaligned: sent ${sentences.length} sentences, " +
-        s"got ${if (out == null) "none" else out.size().toString} back")
+    val out = HttpBatch.post(endpoint, timeoutMs, "annotator", "sentences", sentences)
     (0 until out.size()).map { i =>
       val toks = out.get(i)
+      require(toks.isArray, s"annotator reply sentence[$i] is not an array: $toks")
       (0 until toks.size()).map { j =>
         val t = toks.get(j)
-        NerPos.AnnToken(t.get("word").asText(), t.get("pos").asText(),
-                        t.get("ner").asText(), t.get("begin").asInt(),
-                        t.get("end").asInt())
+        def field(name: String, ok: com.fasterxml.jackson.databind.JsonNode => Boolean,
+                  kind: String) = {
+          val v = t.get(name)
+          require(v != null && ok(v),
+            s"annotator reply token[$i][$j] '$name' is not $kind: $v")
+          v
+        }
+        def text(name: String) = field(name, _.isTextual, "a string").asText()
+        def int(name: String) = field(name, _.canConvertToInt, "an integer").asInt()
+        NerPos.AnnToken(text("word"), text("pos"), text("ner"), int("begin"), int("end"))
       }
     }
   }
-}
-
-object HttpSentenceAnnotator {
-  /** JVM-wide shared client (thread-safe per the JDK contract). */
-  private lazy val shared: java.net.http.HttpClient =
-    java.net.http.HttpClient.newHttpClient()
 }

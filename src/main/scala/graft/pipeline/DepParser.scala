@@ -3,44 +3,20 @@ package graft.pipeline
 import graft.model.DepParse
 import graft.synth.FixtureParser
 
-/** Pluggable dependency-parse boundary — the second (and last) live-NLP
-  * model seam, mirroring [[SentenceAnnotator]].
-  *
-  * The reference loads DDParser IN-PROCESS and calls it per sentence
-  * batch (/root/reference/dudepparse.py:1851,1899); extraction then runs
-  * over the parser's (word, head, deprel) columns plus the separately
-  * attached CoreNLP POS map (main_ner.py:36-40). Neither model ships in
-  * this sandbox, so the engine's default is the deterministic
-  * [[FixtureDepParser]] — but the INTEGRATION SHAPE is the same concrete,
-  * testable contract the annotator seam has:
-  *
-  *  - one connection per PARTITION: `open()` runs before the first batch,
-  *    `close()` is registered on the task-completion listener so it runs
-  *    even when the task fails — the `mapPartitions` analogue of the
-  *    reference's model-instance-per-slice-process;
-  *  - bounded request BATCHES (`batchSize` sentences per `parse` call),
-  *    results aligned index-wise — a misaligned reply fails loudly
-  *    instead of attaching parses to the wrong sentences;
-  *  - a per-sentence `None` means "the parser cannot analyze this
-  *    sentence" (the reference prints and skips such mismatches,
-  *    dudepparse.py:1894-1897) — recorded in the caller's unparsed
-  *    accumulator, never silently dropped;
-  *  - implementations must be Serializable (the instance is shipped to
-  *    executors); live connections belong in `@transient` state created
-  *    by `open()`.
-  */
-trait DepParser extends Serializable {
-  /** open the per-partition connection; called once before any batch. */
-  def open(): Unit = ()
+/** Pluggable dependency-parse boundary — one of the two live-NLP
+  * [[ModelConnection]] seams. Extraction runs over the parser's
+  * (word, head, deprel) columns plus the separately attached CoreNLP POS
+  * map (main_ner.py:36-40). A per-sentence `None` means "the parser
+  * cannot analyze this sentence" (the reference prints and skips such
+  * mismatches, dudepparse.py:1894-1897) — recorded in the caller's
+  * unparsed accumulator, never silently dropped. */
+trait DepParser extends ModelConnection {
   /** parse a batch; MUST return exactly one result per input sentence,
     * aligned by index. None = sentence the parser cannot analyze. The
     * result pairs the dependency parse with the sentence's POS-tag map
     * (word → tags — the reference's corenlp_pos_tags shape,
     * main_ner.py:36-40). */
   def parse(sentences: Seq[String]): Seq[Option[(DepParse, Map[String, Seq[String]])]]
-  /** release the per-partition connection; runs on task completion
-    * (success or failure) — must be idempotent. */
-  def close(): Unit = ()
 }
 
 /** the deterministic in-sandbox parser: template-recovered fixtures, the
@@ -52,8 +28,8 @@ object FixtureDepParser extends DepParser {
 }
 
 /** a concrete remote-server client for the parser seam: POSTs one JSON
-  * batch per `parse` call and parses the aligned reply — the shape a
-  * DDParser-server adapter takes (a real server wraps
+  * batch per `parse` call ([[HttpBatch]]) and decodes the aligned reply —
+  * the shape a DDParser-server adapter takes (a real server wraps
   * `DDParser.parse_seg`/`parse` and emits its word/head/deprel columns
   * verbatim; dudepparse.py:1899 consumes exactly those three).
   *
@@ -64,38 +40,12 @@ object FixtureDepParser extends DepParser {
   *                        | null, …]}
   * `null` marks a sentence the server cannot parse; `pos` is the
   * sentence's word → POS-tags map (the reference's corenlp_pos_tags
-  * entry shape). word/head/deprel must be equal-length.
-  *
-  * One JVM-wide `java.net.http.HttpClient` (thread-safe; the parser
-  * instance is deserialized per TASK and JDK 17's HttpClient has no
-  * close(), so a client per task would leak selector threads — same
-  * rationale as [[HttpSentenceAnnotator]]); `timeoutMs` mirrors the
-  * reference client's 90 s default (main_ner.py:80). */
+  * entry shape). word/head/deprel must be equal-length. `timeoutMs`
+  * mirrors the reference client's 90 s default (main_ner.py:80). */
 final class HttpDepParser(endpoint: String, timeoutMs: Long = 90000L)
     extends DepParser {
-  @transient private lazy val mapper =
-    new com.fasterxml.jackson.databind.ObjectMapper()
-
-  private def client: java.net.http.HttpClient = HttpDepParser.shared
-
   def parse(sentences: Seq[String]): Seq[Option[(DepParse, Map[String, Seq[String]])]] = {
-    val root = mapper.createObjectNode()
-    val arr = root.putArray("sentences")
-    sentences.foreach(arr.add)
-    val req = java.net.http.HttpRequest.newBuilder(java.net.URI.create(endpoint))
-      .timeout(java.time.Duration.ofMillis(timeoutMs))
-      .header("Content-Type", "application/json")
-      .POST(java.net.http.HttpRequest.BodyPublishers.ofString(
-        mapper.writeValueAsString(root), java.nio.charset.StandardCharsets.UTF_8))
-      .build()
-    val resp = client.send(req,
-      java.net.http.HttpResponse.BodyHandlers.ofString(java.nio.charset.StandardCharsets.UTF_8))
-    require(resp.statusCode() == 200,
-      s"parser server $endpoint returned HTTP ${resp.statusCode()}")
-    val out = mapper.readTree(resp.body()).get("parses")
-    require(out != null && out.size() == sentences.length,
-      s"parser reply misaligned: sent ${sentences.length} sentences, " +
-        s"got ${if (out == null) "none" else out.size().toString} back")
+    val out = HttpBatch.post(endpoint, timeoutMs, "parser", "parses", sentences)
     (0 until out.size()).map { i =>
       val node = out.get(i)
       if (node == null || node.isNull) None
@@ -137,10 +87,4 @@ final class HttpDepParser(endpoint: String, timeoutMs: Long = 90000L)
       }
     }
   }
-}
-
-object HttpDepParser {
-  /** JVM-wide shared client (thread-safe per the JDK contract). */
-  private lazy val shared: java.net.http.HttpClient =
-    java.net.http.HttpClient.newHttpClient()
 }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.util.LongAccumulator
@@ -104,54 +104,64 @@ object Pipeline {
     }
   }
 
+  // ------------------------------------------------------- model seams
+  /** the one per-partition loop behind both [[ModelConnection]] seams:
+    * open `conn` once per partition, close it on task completion (success
+    * OR failure), call the model on bounded `batchSize` batches, require
+    * one result per sentence, and `emit` each sentence's rows from its
+    * aligned result. With a fixture model this is one narrow flatMap, no
+    * shuffle. */
+  private def batched[R, O: Encoder](sentences: Dataset[SentenceRow], conn: ModelConnection,
+                                     batchSize: Int, who: String)
+                                    (call: Seq[String] => Seq[R])
+                                    (emit: (SentenceRow, R) => IterableOnce[O]): Dataset[O] = {
+    require(batchSize > 0, s"batchSize must be positive, got $batchSize")
+    sentences.mapPartitions { it =>
+      conn.open()
+      Option(org.apache.spark.TaskContext.get())
+        .foreach(_.addTaskCompletionListener[Unit](_ => conn.close()))
+      it.grouped(batchSize).flatMap { rows =>
+        val results = call(rows.map(_.sent))
+        require(results.length == rows.length,
+          s"$who returned ${results.length} results for ${rows.length} sentences")
+        rows.iterator.zip(results.iterator).flatMap { case (row, r) => emit(row, r) }
+      }
+    }
+  }
+
   // -------------------------------------------------------------- triples
-  /** dependency parse + full extraction, through the pluggable
-    * [[DepParser]] boundary: one parser connection per PARTITION
-    * (`open()` before the first batch, `close()` on the task-completion
-    * listener — success OR failure), requests in bounded `batchSize`
-    * batches, replies required aligned. With the default
-    * [[FixtureDepParser]] this is one narrow flatMap, no shuffle; a live
-    * deployment passes [[HttpDepParser]] pointed at its DDParser server
-    * (the reference loads the model per slice process,
-    * dudepparse.py:1851,1899). `unparsedAcc`, when supplied, counts
-    * sentences the parser could not analyze (observability; the
-    * reference prints such mismatches, dudepparse.py:1894-1897). */
+  /** dependency parse + full extraction through the pluggable
+    * [[DepParser]] seam ([[batched]]); a live deployment passes
+    * [[HttpDepParser]] pointed at its DDParser server (the reference
+    * loads the model per slice process, dudepparse.py:1851,1899).
+    * `unparsedAcc`, when supplied, counts sentences the parser could not
+    * analyze (observability; the reference prints such mismatches,
+    * dudepparse.py:1894-1897). */
   def extractTriples(sentences: Dataset[SentenceRow],
                      unparsedAcc: Option[LongAccumulator] = None,
                      addHalfCoarse: Boolean = false,
                      parser: DepParser = FixtureDepParser,
                      batchSize: Int = 64): Dataset[TripleRow] = {
     import sentences.sparkSession.implicits._
-    require(batchSize > 0, s"batchSize must be positive, got $batchSize")
-    sentences.mapPartitions { it =>
-      parser.open()
-      Option(org.apache.spark.TaskContext.get())
-        .foreach(_.addTaskCompletionListener[Unit](_ => parser.close()))
-      it.grouped(batchSize).flatMap { rows =>
-        val parses = parser.parse(rows.map(_.sent))
-        require(parses.length == rows.length,
-          s"parser returned ${parses.length} results for ${rows.length} sentences")
-        rows.iterator.zip(parses.iterator).flatMap {
-          case (row, Some((parse, tags))) =>
-            val rels = PostProcess.processSentence(parse, Some(tags),
-                                                   addHalfCoarse = addHalfCoarse)
-            def emit(listName: String, rs: Vector[Rel]): Iterator[TripleRow] =
-              rs.iterator.map { r =>
-                TripleRow(row.doc_id, row.sent_id, listName,
-                          r.subj, r.pred, r.obj,
-                          r.subjIdx, r.predIdx.get, r.objIdx)
-              }
-            emit("fine", rels.fine) ++ emit("coarse", rels.coarse) ++
-              emit("amend_fine", rels.amendFine) ++ emit("amend_coarse", rels.amendCoarse) ++
-              emit("possible", rels.possible) ++
-              // ADD_HALF_COARSE families (empty under the shipped config —
-              // schema parity with the reference's entry fields)
-              emit("crossed", rels.crossed) ++ emit("amend_crossed", rels.amendCrossed)
-          case (_, None) =>
-            unparsedAcc.foreach(_.add(1))
-            Iterator.empty
-        }
-      }
+    batched(sentences, parser, batchSize, "parser")(parser.parse) {
+      case (row, Some((parse, tags))) =>
+        val rels = PostProcess.processSentence(parse, Some(tags),
+                                               addHalfCoarse = addHalfCoarse)
+        def emit(listName: String, rs: Vector[Rel]): Iterator[TripleRow] =
+          rs.iterator.map { r =>
+            TripleRow(row.doc_id, row.sent_id, listName,
+                      r.subj, r.pred, r.obj,
+                      r.subjIdx, r.predIdx.get, r.objIdx)
+          }
+        emit("fine", rels.fine) ++ emit("coarse", rels.coarse) ++
+          emit("amend_fine", rels.amendFine) ++ emit("amend_coarse", rels.amendCoarse) ++
+          emit("possible", rels.possible) ++
+          // ADD_HALF_COARSE families (empty under the shipped config —
+          // schema parity with the reference's entry fields)
+          emit("crossed", rels.crossed) ++ emit("amend_crossed", rels.amendCrossed)
+      case (_, None) =>
+        unparsedAcc.foreach(_.add(1))
+        Iterator.empty
     }
   }
 
@@ -483,20 +493,9 @@ object Pipeline {
                         annotator: SentenceAnnotator = FixtureAnnotator,
                         batchSize: Int = 64): Dataset[MentionLabelRow] = {
     import sentences.sparkSession.implicits._
-    require(batchSize > 0, s"batchSize must be positive, got $batchSize")
-    sentences.mapPartitions { it =>
-      annotator.open()
-      Option(org.apache.spark.TaskContext.get())
-        .foreach(_.addTaskCompletionListener[Unit](_ => annotator.close()))
-      it.grouped(batchSize).flatMap { rows =>
-        val anns = annotator.annotate(rows.map(_.sent))
-        require(anns.length == rows.length,
-          s"annotator returned ${anns.length} results for ${rows.length} sentences")
-        rows.lazyZip(anns).flatMap { (row, ann) =>
-          NerPos.nerPosPerSentence(row.sent, Seq(ann)).mentions
-            .map(m => MentionLabelRow(row.doc_id, row.sent_id, m.word, m.label))
-        }
-      }
+    batched(sentences, annotator, batchSize, "annotator")(annotator.annotate) { (row, ann) =>
+      NerPos.nerPosPerSentence(row.sent, Seq(ann)).mentions
+        .map(m => MentionLabelRow(row.doc_id, row.sent_id, m.word, m.label))
     }
   }
 
@@ -665,26 +664,31 @@ object Pipeline {
   private def corefChanged(doc: Doc, addHalfCoarse: Boolean)
       : Iterator[(Int, graft.model.SentenceRels, graft.model.SentenceRels)] = {
     import graft.segment.Coref
-    val sents = doc.spans.iterator.filter(s => s.kind == "text" && s.text != null)
-      .flatMap(s => Segmenter.segment(s.text)).toVector
+    val sents = docSentences(doc)
     val chains = Coref.synthChains(sents)
     sents.zip(chains).zipWithIndex.iterator.flatMap { case ((sent, reps), sid) =>
       if (reps.isEmpty) Iterator.empty
       else {
         val corefed = Coref.substitute(sent, reps)
         if (corefed == sent) Iterator.empty // reference skips unchanged docs
-        else {
-          (FixtureParser.analyze(sent), FixtureParser.analyze(corefed)) match {
-            case (Some((bp, bt)), Some((cp, ct))) =>
-              val base = PostProcess.processSentence(bp, Some(bt), addHalfCoarse = addHalfCoarse)
-              val cor = PostProcess.processSentence(cp, Some(ct), addHalfCoarse = addHalfCoarse)
-              Iterator.single((sid, base, cor))
-            case _ => Iterator.empty
-          }
-        }
+        else baseAndCorefed(sent, corefed, addHalfCoarse).iterator
+          .map { case (base, cor) => (sid, base, cor) }
       }
     }
   }
+
+  /** a doc's text spans, segmented into its sentence sequence. */
+  private def docSentences(doc: Doc): Vector[String] =
+    doc.spans.iterator.filter(s => s.kind == "text" && s.text != null)
+      .flatMap(s => Segmenter.segment(s.text)).toVector
+
+  /** analyze a sentence and its corefed rewrite and extract both; None
+    * when either cannot be analyzed. */
+  private def baseAndCorefed(sent: String, corefed: String, addHalfCoarse: Boolean)
+      : Option[(graft.model.SentenceRels, graft.model.SentenceRels)] =
+    for ((bp, bt) <- FixtureParser.analyze(sent); (cp, ct) <- FixtureParser.analyze(corefed))
+    yield (PostProcess.processSentence(bp, Some(bt), addHalfCoarse = addHalfCoarse),
+           PostProcess.processSentence(cp, Some(ct), addHalfCoarse = addHalfCoarse))
 
   def corefTriples(docs: Dataset[Doc], addHalfCoarse: Boolean = false): Dataset[TripleRow] = {
     import docs.sparkSession.implicits._
@@ -777,37 +781,37 @@ object Pipeline {
   def corefTriplesViaFetch(docs: Dataset[Doc], chunkThreshold: Int = 1536,
                            addHalfCoarse: Boolean = false): Dataset[TripleRow] = {
     import docs.sparkSession.implicits._
-    import graft.segment.CorefFetch
     docs.mapPartitions { docIter =>
       docIter.flatMap { doc =>
-        val sents = doc.spans.iterator.filter(s => s.kind == "text" && s.text != null)
-          .flatMap(s => Segmenter.segment(s.text)).toVector
-        val (merged, offsets) = CorefFetch.mergeTexts(sents, chunkThreshold)
-        // chunk INDEX (not text lookup — two chunks can have equal text)
-        val res = CorefFetch.fetchCoref(merged, offsets, sents,
-          (ci, _) => synthAnnotate(sents.slice(offsets(ci)._1, offsets(ci)._2)))
-        if (res.corefFailed || res.corefed.isEmpty) Iterator.empty
-        else {
-          val corefedSents: Vector[Option[String]] = res.corefed.get.zip(offsets).flatMap {
+        val sents = docSentences(doc)
+        synthFetch(sents, chunkThreshold).iterator.flatMap { chunks =>
+          val corefedSents: Vector[Option[String]] = chunks.flatMap {
             case (None, (st, en)) => (st until en).map(_ => None: Option[String])
             case (Some(cs), _) => cs.map(Some(_))
           }
-          corefedSents.zipWithIndex.iterator.flatMap { case (corefedOpt, sid) =>
-            corefedOpt match {
-              case Some(corefed) if corefed != sents(sid) =>
-                (FixtureParser.analyze(sents(sid)), FixtureParser.analyze(corefed)) match {
-                  case (Some((bp, bt)), Some((cp, ct))) =>
-                    val base = PostProcess.processSentence(bp, Some(bt), addHalfCoarse = addHalfCoarse)
-                    val cor = PostProcess.processSentence(cp, Some(ct), addHalfCoarse = addHalfCoarse)
-                    emitCorefed(doc.doc_id, sid, base, cor)
-                  case _ => Iterator.empty
-                }
-              case _ => Iterator.empty
-            }
+          corefedSents.zipWithIndex.iterator.flatMap {
+            case (Some(corefed), sid) if corefed != sents(sid) =>
+              baseAndCorefed(sents(sid), corefed, addHalfCoarse).iterator
+                .flatMap { case (base, cor) => emitCorefed(doc.doc_id, sid, base, cor) }
+            case _ => Iterator.empty
           }
         }
       }
     }
+  }
+
+  /** the synthetic coref front-end over one doc's sentences: chunk merge,
+    * mock-annotate each chunk by INDEX (not text lookup — two chunks can
+    * have equal text), fetch_coref alignment/substitution. Per chunk: its
+    * corefed sentences (None = chunk failed) with its [start, end)
+    * sentence range; None when the doc's coref failed. */
+  private def synthFetch(sents: Vector[String], chunkThreshold: Int)
+      : Option[Vector[(Option[Vector[String]], (Int, Int))]] = {
+    import graft.segment.CorefFetch
+    val (merged, offsets) = CorefFetch.mergeTexts(sents, chunkThreshold)
+    val res = CorefFetch.fetchCoref(merged, offsets, sents,
+      (ci, _) => synthAnnotate(sents.slice(offsets(ci)._1, offsets(ci)._2)))
+    if (res.corefFailed) None else res.corefed.map(_.zip(offsets))
   }
 
   // ----------------------------------------- coref ⋈ nerpos (distributed)
@@ -818,32 +822,18 @@ object Pipeline {
 
   /** per-sentence NER/POS model-output table (reference main_ner.py:102-110
     * attaches these columns per sentence), produced through the pluggable
-    * [[SentenceAnnotator]] boundary: one annotator connection per
-    * PARTITION (`open()` before the first batch, `close()` on the task
-    * completion listener — success OR failure), requests in bounded
-    * `batchSize` batches, replies required aligned. With the default
-    * [[FixtureAnnotator]] this is one narrow map, no shuffle; a live
-    * deployment passes [[HttpSentenceAnnotator]] pointed at its server
-    * (the reference's client-per-slice shape, main_ner.py:76-82). */
+    * [[SentenceAnnotator]] seam ([[batched]]); a live deployment passes
+    * [[HttpSentenceAnnotator]] pointed at its server (the reference's
+    * client-per-slice shape, main_ner.py:76-82). */
   def nerPosTable(sentences: Dataset[SentenceRow],
                   annotator: SentenceAnnotator = FixtureAnnotator,
                   batchSize: Int = 64): Dataset[NerPosRow] = {
     import sentences.sparkSession.implicits._
-    require(batchSize > 0, s"batchSize must be positive, got $batchSize")
-    sentences.mapPartitions { it =>
-      annotator.open()
-      Option(org.apache.spark.TaskContext.get())
-        .foreach(_.addTaskCompletionListener[Unit](_ => annotator.close()))
-      it.grouped(batchSize).flatMap { rows =>
-        val anns = annotator.annotate(rows.map(_.sent))
-        require(anns.length == rows.length,
-          s"annotator returned ${anns.length} results for ${rows.length} sentences")
-        rows.lazyZip(anns).map { (row, ann) =>
-          val res = NerPos.nerPosPerSentence(row.sent, Seq(ann))
-          NerPosRow(row.doc_id, row.sent_id, row.sent,
-                    res.mentions.map(_.word), res.mentions.length, res.misplacedSpans)
-        }
-      }
+    batched(sentences, annotator, batchSize, "annotator")(annotator.annotate) { (row, ann) =>
+      val res = NerPos.nerPosPerSentence(row.sent, Seq(ann))
+      Iterator.single(NerPosRow(row.doc_id, row.sent_id, row.sent,
+                                res.mentions.map(_.word), res.mentions.length,
+                                res.misplacedSpans))
     }
   }
 
@@ -852,15 +842,8 @@ object Pipeline {
     * sentence of every successfully-corefed chunk. */
   def corefedSentenceTable(docs: Dataset[Doc], chunkThreshold: Int = 1536): Dataset[CorefedSentence] = {
     import docs.sparkSession.implicits._
-    import graft.segment.CorefFetch
     docs.flatMap { doc =>
-      val sents = doc.spans.iterator.filter(s => s.kind == "text" && s.text != null)
-        .flatMap(s => Segmenter.segment(s.text)).toVector
-      val (merged, offsets) = CorefFetch.mergeTexts(sents, chunkThreshold)
-      val res = CorefFetch.fetchCoref(merged, offsets, sents,
-        (ci, _) => synthAnnotate(sents.slice(offsets(ci)._1, offsets(ci)._2)))
-      if (res.corefFailed || res.corefed.isEmpty) Iterator.empty
-      else res.corefed.get.zip(offsets).iterator.flatMap {
+      synthFetch(docSentences(doc), chunkThreshold).iterator.flatten.flatMap {
         case (Some(cs), (st, _)) =>
           cs.iterator.zipWithIndex.map { case (c, k) => CorefedSentence(doc.doc_id, st + k, c) }
         case (None, _) => Iterator.empty
@@ -1189,9 +1172,11 @@ object Pipeline {
     * mutations with a `_fold_inflight` marker. A fold that finds the
     * marker runs REPAIR first: docs missing from triples are
     * re-extracted, triples missing from canonical re-canonicalized
-    * (both doc-granular appends), and `pairpred` is REBUILT from the
-    * reconciled canonical (one canonical-sized aggregate — the repair
-    * path's only non-slice-sized cost; the normal path never pays it).
+    * (both doc-granular appends), and the fold-owned `pairpred` and
+    * `type_evidence` aggregates are DROPPED, so the fold re-derives both
+    * from the reconciled stores as it would for a root that never had
+    * them (the repair path's only non-slice-sized cost; the normal path
+    * never pays it).
     * Every mutation is individually idempotent, so repair + re-fold
     * always converges to the one-shot result.
     *
@@ -1264,10 +1249,8 @@ object Pipeline {
       // order guarantees canonical ⊆ triples ⊆ docs:
       for (st <- Seq("docs", "triples", "canonical"))
         store.pruneUnrecorded(st)
-      val docsMissingT = readStore("docs")
-        .select(col("doc_id"), col("spans")).as[Doc](docEnc)
-        .join(storeIds("triples"), Seq("doc_id"), "left_anti")
-        .as[Doc](docEnc)
+      val docsMissingT = asDocs(readStore("docs")
+        .join(storeIds("triples"), Seq("doc_id"), "left_anti"))
       val repairT = extractTriples(segmentDocs(docsMissingT), parser = parser)
         .toDF().localCheckpoint()
       if (!repairT.isEmpty)
@@ -1277,18 +1260,9 @@ object Pipeline {
       if (!missingC.isEmpty)
         store.appendStage(canonicalize(missingC.as[TripleRow], dict),
           "canonical", Seq("triples"), bucketCol = Some("doc_id"))
-      val ppRebuilt = pairPredAggregate(readStore("canonical")).localCheckpoint()
-      ppRebuilt.write.mode("overwrite").parquet(s"$root/pairpred")
-      // the typed-subgraph evidence aggregate is rebuilt the same way —
-      // from the reconciled docs store (one full mention/label pass; the
-      // repair path's second non-slice-sized cost, never paid normally)
-      val evRebuilt = {
-        val sentsAll = segmentDocs(readStore("docs")
-          .select(col("doc_id"), col("spans")).as[Doc](docEnc))
-        entityTypeEvidence(Mentions.detect(sentsAll, dict),
-          mentionLabelTable(sentsAll)).localCheckpoint()
-      }
-      evRebuilt.write.mode("overwrite").parquet(s"$root/type_evidence")
+      // the fold-owned aggregates are dropped; the mutating branch below
+      // re-derives each from the reconciled stores before the first append
+      store.dropFoldAggregates()
       // marker stays until THIS fold completes
     } else {
       fs.create(marker, true).close()
@@ -1310,8 +1284,9 @@ object Pipeline {
         val tNew = extractTriples(sentsNew, parser = parser).toDF().localCheckpoint()
         val cNew = canonicalize(tNew.as[TripleRow], dict).localCheckpoint()
         // the maintained additive aggregates; a root written before one
-        // existed derives it once from the stores and maintains it from
-        // then on. The pins also break each read/overwrite cycle
+        // existed, or whose repair dropped it, derives it once from the
+        // stores and maintains it from then on. The pins also break each
+        // read/overwrite cycle
         val ppPath = s"$root/pairpred"
         val ppExisting =
           if (fs.exists(new org.apache.hadoop.fs.Path(ppPath, "_SUCCESS")))

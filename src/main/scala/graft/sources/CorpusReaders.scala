@@ -81,50 +81,40 @@ object CorpusReaders {
       routed = Some(routed))
   }
 
+  /** the keyed-text readers' one core: JSON records keyed by `idCol`
+    * whose payload is the `textCol` string (other fields, e.g. the
+    * title, are not read); `perFile` parses each file under `path`
+    * (recursively) as one multi-line record. */
+  private def readKeyedText(spark: SparkSession, path: String, idCol: String,
+                            textCol: String, perFile: Boolean = false): ReaderOutput = {
+    import spark.implicits._
+    val schema = StructType(Seq(StructField(idCol, StringType), StructField(textCol, StringType)))
+    val reader =
+      if (perFile) spark.read.option("multiLine", true).option("recursiveFileLookup", "true")
+      else spark.read
+    val raw = reader.schema(schema).json(path)
+      .na.fill("", Seq(idCol, textCol))
+      .as[(String, String)]
+    split(raw) { case (id, text) => preprocess(id, Seq(text)) }
+  }
+
   /** webhose articles: `{uuid, title, text}` JSONL; payload = text
     * (preprocess_corpus.py:195 reads data_entry['text']). */
-  def readWebhose(spark: SparkSession, path: String): ReaderOutput = {
-    import spark.implicits._
-    val schema = StructType(Seq(
-      StructField("uuid", StringType), StructField("title", StringType),
-      StructField("text", StringType)))
-    val raw = spark.read.schema(schema).json(path)
-      .na.fill("", Seq("uuid", "text"))
-      .as[(String, String, String)]
-    split(raw) { case (uuid, _, text) => preprocess(uuid, Seq(text)) }
-  }
+  def readWebhose(spark: SparkSession, path: String): ReaderOutput =
+    readKeyedText(spark, path, "uuid", "text")
 
   /** webhose DIRECTORY mode — the reference's actual on-disk layout: one
     * JSON object per article file in a nested directory tree, read with
-    * json.load per file (preprocess_corpus.py:166-194). multiLine JSON +
-    * recursive lookup parses each file as one record; payload and routing
-    * are identical to the JSONL shape (CorpusReaderSpec proves dir mode ==
-    * JSONL mode on equal payloads). */
-  def readWebhoseDir(spark: SparkSession, dir: String): ReaderOutput = {
-    import spark.implicits._
-    val schema = StructType(Seq(
-      StructField("uuid", StringType), StructField("title", StringType),
-      StructField("text", StringType)))
-    val raw = spark.read
-      .option("multiLine", true).option("recursiveFileLookup", "true")
-      .schema(schema).json(dir)
-      .na.fill("", Seq("uuid", "text"))
-      .as[(String, String, String)]
-    split(raw) { case (uuid, _, text) => preprocess(uuid, Seq(text)) }
-  }
+    * json.load per file (preprocess_corpus.py:166-194). Payload and
+    * routing are identical to the JSONL shape (CorpusReaderSpec proves
+    * dir mode == JSONL mode on equal payloads). */
+  def readWebhoseDir(spark: SparkSession, dir: String): ReaderOutput =
+    readKeyedText(spark, dir, "uuid", "text", perFile = true)
 
   /** clue news2016zh: `{news_id, title, content}` JSONL; payload = content
     * (preprocess_corpus.py:273). */
-  def readClue(spark: SparkSession, path: String): ReaderOutput = {
-    import spark.implicits._
-    val schema = StructType(Seq(
-      StructField("news_id", StringType), StructField("title", StringType),
-      StructField("content", StringType)))
-    val raw = spark.read.schema(schema).json(path)
-      .na.fill("", Seq("news_id", "content"))
-      .as[(String, String, String)]
-    split(raw) { case (id, _, content) => preprocess(id, Seq(content)) }
-  }
+  def readClue(spark: SparkSession, path: String): ReaderOutput =
+    readKeyedText(spark, path, "news_id", "content")
 
   /** newsspike: pre-split `{id, splitted_text, split_mapping}` JSONL; the
     * persisted mapping is threaded through the re-split so every emitted

@@ -282,6 +282,10 @@ class MainSpec extends SparkSpecBase {
     assert(table(oneShot, "canonical").exceptAll(table(inc, "canonical")).isEmpty)
     assert(table(inc, "edges").collect().map(_.toSeq).toSet ==
            table(oneShot, "edges").collect().map(_.toSeq).toSet)
+    // the repaired type evidence: the typed battery equals the one-shot's
+    val typed = table(oneShot, "typed_edge_weights").collect().map(_.toSeq).toSet
+    assert(typed.nonEmpty &&
+           table(inc, "typed_edge_weights").collect().map(_.toSeq).toSet == typed)
     assert(!new java.io.File(s"$inc/_fold_inflight").exists(), "marker must clear")
     // per-store doc counts reconciled (canonical ⊆ triples ⊆ docs restored)
     assert(table(inc, "docs").count() == 40L)

@@ -858,6 +858,33 @@ class PipelineSpec extends SparkSpecBase {
     } finally server.stop(0)
   }
 
+  test("annotator boundary: a malformed token in the reply fails loudly") {
+    import graft.pipeline.HttpSentenceAnnotator
+    // a buggy server emitting a null or non-numeric char offset must not
+    // be silently coerced to 0 (= a span anchored at the sentence start)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val server = com.sun.net.httpserver.HttpServer.create(
+      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/annotate", { exchange =>
+      exchange.getRequestBody.readAllBytes()
+      val root = mapper.createObjectNode()
+      val t = root.putArray("sentences").addArray().addObject()
+      t.put("word", "很好"); t.put("pos", "VA"); t.put("ner", "O")
+      t.putNull("begin"); t.put("end", "two") // null and a word, not ints
+      val bytes = mapper.writeValueAsBytes(root)
+      exchange.sendResponseHeaders(200, bytes.length)
+      exchange.getResponseBody.write(bytes)
+      exchange.close()
+    })
+    server.start()
+    try {
+      val endpoint = s"http://127.0.0.1:${server.getAddress.getPort}/annotate"
+      val e = intercept[IllegalArgumentException](
+        new HttpSentenceAnnotator(endpoint).annotate(Seq("很好")))
+      assert(e.getMessage.contains("'begin' is not an integer"), e.getMessage)
+    } finally server.stop(0)
+  }
+
   test("alias pin comparison survives '@' and ',' inside dictionary paths") {
     import Pipeline.aliasPinMatches
     // hashed vs hashed: whole-string equality, even when the PATH itself
