@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.model.{Doc, SentenceRow, TripleRow}
 import graft.ops.{DedupOps, MultimodalOps, SimilarityOps, TextOps}
 import graft.pipeline.{Mentions, Pipeline}
 import graft.sources.{CorpusReaders, ReaderFixtures}
@@ -58,26 +59,55 @@ object SparkEntry {
     * materializes the same docs as the `_aux/docs` oracle table). */
   val VerifyDocs = 400L
 
+  // ---- the KG corpus chain every kg_* and mm_* query composes: docs
+  // [from, until) of the verify corpus → sentences → triples → canonical.
+  // One definition keeps a batch surface and its _incr twin on the same
+  // chain (a slice's docs equal the filtered full corpus, SynthDocs is
+  // per-id), so the twins share their oracle SQL.
+  private def kgDocs(s: SparkSession, from: Long = 0,
+                     until: Long = VerifyDocs): Dataset[Doc] =
+    Pipeline.synthDocsRange(s, from, until)
+
+  private def kgSents(s: SparkSession, from: Long = 0,
+                      until: Long = VerifyDocs): Dataset[SentenceRow] =
+    Pipeline.segmentDocs(kgDocs(s, from, until))
+
+  private def kgTriples(s: SparkSession): Dataset[TripleRow] =
+    Pipeline.extractTriples(kgSents(s))
+
+  private def kgCanonical(s: SparkSession, sents: Dataset[SentenceRow]): DataFrame =
+    Pipeline.canonicalize(Pipeline.extractTriples(sents), Pipeline.synthAliases(s))
+
+  /** the pair-pred aggregate of the slices between consecutive `cuts`,
+    * folded by [[Pipeline.mergePairPred]]: `pairPred(s, 0, VerifyDocs)` is
+    * the batch surface's, `pairPred(s, 0, 250, VerifyDocs)` its _incr
+    * twin's (additive aggregates folded, the non-additive cap re-derived
+    * downstream — must equal the batch exactly). */
+  private def pairPred(s: SparkSession, cuts: Long*): DataFrame =
+    cuts.zip(cuts.tail).map { case (from, until) =>
+      Pipeline.pairPredAggregate(kgCanonical(s, kgSents(s, from, until)))
+    }.reduce(Pipeline.mergePairPred)
+
   /** ONE typed-battery derivation shared by every typed query surface
-    * (kg_typed_edge_weights, its _incr twin's batch oracle, and the
-    * kg_typed_edges_topk consumption slice): extract → canonicalize →
-    * pair-pred aggregate, entity-link mentions ⋈ annotator labels →
-    * modal type assignment → per-slice cond/PMI weights. A single
-    * definition means the three surfaces can never sparsify or oracle a
+    * (kg_typed_edge_weights, its _incr twin and the kg_typed_edges_topk
+    * consumption slice), over the slices between consecutive `cuts`:
+    * per slice the pair-pred aggregate and the type evidence
+    * ([[Pipeline.typeEvidence]]), both folded additively, then the modal
+    * type assignment and the per-slice cond/PMI weights recomputed. A
+    * single definition means no typed surface can sparsify or oracle a
     * DIFFERENT battery than the one kg_typed_edge_weights publishes. */
-  private def typedBattery(s: SparkSession): DataFrame = {
-    // the sentence table feeds THREE independent consumers (extraction,
-    // entity-link mentions, annotator labels) whose subtrees share no
-    // exchange — pin it once so segmentation runs once, not three times
-    // (r9; the evidence side itself is pinned inside typedEdgeWeights)
-    val sents = Pipeline.segmentDocs(Pipeline.synthDocs(s, VerifyDocs))
-      .localCheckpoint(eager = false)
-    val types = Pipeline.entityTypesFromEvidence(Pipeline.entityTypeEvidence(
-      Mentions.detect(sents, Pipeline.synthAliases(s)),
-      Pipeline.mentionLabelTable(sents)))
-    Pipeline.typedEdgeWeights(Pipeline.pairPredAggregate(
-      Pipeline.canonicalize(Pipeline.extractTriples(sents),
-        Pipeline.synthAliases(s))), types)
+  private def typedBattery(s: SparkSession, cuts: Long*): DataFrame = {
+    val slices = cuts.zip(cuts.tail).map { case (from, until) =>
+      // each slice's sentence table feeds THREE independent consumers
+      // (extraction, entity-link mentions, annotator labels) whose
+      // subtrees share no exchange — pin it so segmentation runs once per
+      // slice (r9; the evidence side is pinned inside typedEdgeWeights)
+      val sents = kgSents(s, from, until).localCheckpoint(eager = false)
+      (Pipeline.pairPredAggregate(kgCanonical(s, sents)),
+       Pipeline.typeEvidence(sents, Pipeline.synthAliases(s)))
+    }
+    Pipeline.typedEdgeWeights(slices.map(_._1).reduce(Pipeline.mergePairPred),
+      Pipeline.entityTypesFromEvidence(slices.map(_._2).reduce(Pipeline.mergeTypeEvidence)))
   }
 
   // the deterministic toy-sample key/filter live in Pipeline (shared with
@@ -95,41 +125,29 @@ object SparkEntry {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- KG-construction pipeline (non-SQL-expressible → rows-only) ----
-    "kg_sentences" -> ((s, _) =>
-      Pipeline.segmentDocs(Pipeline.synthDocs(s, VerifyDocs)).toDF()),
-    "kg_triples" -> ((s, _) =>
-      Pipeline.extractTriples(Pipeline.segmentDocs(Pipeline.synthDocs(s, VerifyDocs))).toDF()),
-    "kg_canonical" -> ((s, _) => {
-      val t = Pipeline.extractTriples(Pipeline.segmentDocs(Pipeline.synthDocs(s, VerifyDocs)))
-      Pipeline.canonicalize(t, Pipeline.synthAliases(s))
-    }),
-    "kg_edges" -> ((s, _) => {
-      val t = Pipeline.extractTriples(Pipeline.segmentDocs(Pipeline.synthDocs(s, VerifyDocs)))
-      Pipeline.entailmentEdges(Pipeline.canonicalize(t, Pipeline.synthAliases(s)))
-    }),
+    "kg_sentences" -> ((s, _) => kgSents(s).toDF()),
+    "kg_triples" -> ((s, _) => kgTriples(s).toDF()),
+    "kg_canonical" -> ((s, _) => kgCanonical(s, kgSents(s))),
+    "kg_edges" -> ((s, _) => Pipeline.edgesFromPairPred(pairPred(s, 0, VerifyDocs))),
     "kg_span_report" -> ((s, _) => {
       // the invariant checked through a REAL round trip: explode spans →
       // shuffle → reassemble by offset, compared against the input table
-      val docs = Pipeline.synthDocs(s, VerifyDocs)
+      val docs = kgDocs(s)
       Pipeline.spanInvariantReport(docs, Pipeline.reassembleDocs(docs))
     }),
     "kg_mentions" -> ((s, _) =>
-      Mentions.detect(Pipeline.segmentDocs(Pipeline.synthDocs(s, VerifyDocs)),
-                      Pipeline.synthAliases(s)).toDF()),
+      Mentions.detect(kgSents(s), Pipeline.synthAliases(s)).toDF()),
     "kg_mentions_join" -> ((s, _) =>
       // the distributed entity-link variant (shuffle join on candidate
       // surfaces, for dictionaries beyond broadcast) — same contract as
       // kg_mentions, same oracle
-      Mentions.detectJoin(Pipeline.segmentDocs(Pipeline.synthDocs(s, VerifyDocs)),
-                          Pipeline.synthAliases(s)).toDF()),
+      Mentions.detectJoin(kgSents(s), Pipeline.synthAliases(s)).toDF()),
     "kg_mention_stats" -> ((s, _) =>
-      Mentions.mentionStats(
-        Mentions.detect(Pipeline.segmentDocs(Pipeline.synthDocs(s, VerifyDocs)),
-                        Pipeline.synthAliases(s)))),
+      Mentions.mentionStats(Mentions.detect(kgSents(s), Pipeline.synthAliases(s)))),
     "kg_coref" -> ((s, _) =>
-      Pipeline.corefTriples(Pipeline.synthDocs(s, VerifyDocs)).toDF()),
+      Pipeline.corefTriples(kgDocs(s)).toDF()),
     "kg_coref_nerpos" -> ((s, _) => {
-      val docs = Pipeline.synthDocs(s, VerifyDocs)
+      val docs = kgDocs(s)
       // driver-visible projection is all-scalar: the round driver's pandas
       // comparator cannot sort/hash array columns, so mention_words is
       // array_join'd here (the typed NerPosRow table keeps the array)
@@ -145,13 +163,13 @@ object SparkEntry {
       // doc's concatenated text spans, plus sentence/text-span counts.
       // (Synth spans contain no whitespace/'#'/'::', so tokNorm is an
       // identity and admitted sentences stay exact substrings.)
-      val docs = Pipeline.synthDocs(s, VerifyDocs).toDF()
+      val docs = kgDocs(s).toDF()
       val textSpans = filter(col("spans"),
         x => x("kind") === "text" && x("text").isNotNull)
       val dtext = docs.select(col("doc_id"),
         array_join(transform(textSpans, x => x("text")), "").as("doc_text"),
         size(textSpans).as("n_text_spans"))
-      val sents = Pipeline.segmentDocs(Pipeline.synthDocs(s, VerifyDocs)).toDF()
+      val sents = kgSents(s).toDF()
       val ag = sents.join(dtext, "doc_id")
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_sentences"),
@@ -166,162 +184,95 @@ object SparkEntry {
       // the coref second pass's per-list totals, checked relationally
       // over the materialized kg_coref parquet (the extraction itself is
       // diff-tested; this puts its aggregate shape under the driver)
-      Pipeline.corefTriples(Pipeline.synthDocs(s, VerifyDocs)).toDF()
+      Pipeline.corefTriples(kgDocs(s)).toDF()
         .groupBy(col("rel_list"))
         .agg(count(lit(1)).as("n_rels"),
              countDistinct(col("doc_id")).as("n_docs"))),
     "kg_metrics" -> ((s, _) =>
-      Pipeline.extractionMetrics(Pipeline.segmentDocs(Pipeline.synthDocs(s, VerifyDocs)))),
+      Pipeline.extractionMetrics(kgSents(s))),
     "kg_slice_merge" -> ((s, _) => {
       // overlapping slice re-submission: docs [0,300) already merged,
       // docs [200,400) arrive as a fresh slice; the doc-granular
       // idempotent merge must equal the one-shot full extraction — the
       // oracle compares against the materialized kg_triples parquet
-      val merged = Pipeline.extractTriples(
-        Pipeline.segmentDocs(Pipeline.synthDocsRange(s, 0, 300))).toDF()
-      val fresh = Pipeline.extractTriples(
-        Pipeline.segmentDocs(Pipeline.synthDocsRange(s, 200, VerifyDocs))).toDF()
+      val merged = Pipeline.extractTriples(kgSents(s, 0, 300)).toDF()
+      val fresh = Pipeline.extractTriples(kgSents(s, 200, VerifyDocs)).toDF()
       Pipeline.mergeSliceIncrement(merged, fresh)
     }),
-    "kg_skew_report" -> ((s, _) => {
+    "kg_skew_report" -> ((s, _) =>
       // shuffle-key skew diagnostic over the predicate column — the key
       // kg_edges shuffles on (and salts); what an operator runs before
       // picking salt factors. Oracle recomputes relationally over the
       // materialized kg_canonical parquet.
-      val t = Pipeline.extractTriples(Pipeline.segmentDocs(Pipeline.synthDocs(s, VerifyDocs)))
-      graft.ops.SkewOps.keySkew(
-        Pipeline.canonicalize(t, Pipeline.synthAliases(s)), "pred")
-    }),
-    "kg_cooc_components" -> ((s, _) => {
+      graft.ops.SkewOps.keySkew(kgCanonical(s, kgSents(s)), "pred")),
+    "kg_cooc_components" -> ((s, _) =>
       // connected components over the top-K strongest entity
       // co-occurrence edges (bounded edge set = the scale contract);
       // same EAGER caveat as dedup_clusters — iterates to convergence
       // when constructed. Oracle: recursive reachability walk over the
       // materialized kg_canonical parquet.
-      val t = Pipeline.extractTriples(Pipeline.segmentDocs(Pipeline.synthDocs(s, VerifyDocs)))
-      graft.ops.GraphOps.coocComponents(
-        Pipeline.canonicalize(t, Pipeline.synthAliases(s)))
-    }),
-    "kg_edges_incr" -> ((s, _) => {
+      graft.ops.GraphOps.coocComponents(kgCanonical(s, kgSents(s)))),
+    "kg_edges_incr" -> ((s, _) =>
       // the incremental edge-maintenance path: the additive stage-1
       // aggregates of two corpus slices folded together, then the
       // (non-additive) cap/expansion re-derived — must equal the batch
       // kg_edges exactly, so it SHARES kg_edges' oracle SQL
-      def canon(from: Long, until: Long) = Pipeline.canonicalize(
-        Pipeline.extractTriples(Pipeline.segmentDocs(
-          Pipeline.synthDocsRange(s, from, until))),
-        Pipeline.synthAliases(s))
-      Pipeline.edgesFromPairPred(
-        Pipeline.mergePairPred(
-          Pipeline.pairPredAggregate(canon(0, 250)),
-          Pipeline.pairPredAggregate(canon(250, VerifyDocs))))
-    }),
-    "kg_edge_weights" -> ((s, _) => {
+      Pipeline.edgesFromPairPred(pairPred(s, 0, 250, VerifyDocs))),
+    "kg_edge_weights" -> ((s, _) =>
       // the downstream-EntGraph local weight surface: directional
       // conditional P(dst|src) + log-free PMI ratio in exact fixed point
       // over the SAME capped pair-pred space as kg_edges
-      val t = Pipeline.extractTriples(Pipeline.segmentDocs(Pipeline.synthDocs(s, VerifyDocs)))
-      Pipeline.edgeWeightsFromPairPred(Pipeline.pairPredAggregate(
-        Pipeline.canonicalize(t, Pipeline.synthAliases(s))))
-    }),
-    "kg_edge_weights_incr" -> ((s, _) => {
+      Pipeline.edgeWeightsFromPairPred(pairPred(s, 0, VerifyDocs))),
+    "kg_edge_weights_incr" -> ((s, _) =>
       // incremental twin: two slices' additive aggregates folded, the
       // non-additive weight derivation recomputed — must equal the batch
       // kg_edge_weights exactly, so it SHARES its oracle SQL
-      def canon(from: Long, until: Long) = Pipeline.canonicalize(
-        Pipeline.extractTriples(Pipeline.segmentDocs(
-          Pipeline.synthDocsRange(s, from, until))),
-        Pipeline.synthAliases(s))
-      Pipeline.edgeWeightsFromPairPred(
-        Pipeline.mergePairPred(
-          Pipeline.pairPredAggregate(canon(0, 250)),
-          Pipeline.pairPredAggregate(canon(250, VerifyDocs))))
-    }),
-    "kg_edge_weights_sup" -> ((s, _) => {
+      Pipeline.edgeWeightsFromPairPred(pairPred(s, 0, 250, VerifyDocs))),
+    "kg_edge_weights_sup" -> ((s, _) =>
       // the support-weighted score battery (Weeds precision / Lin /
       // balanced inclusion) over the same capped evidence space
-      val t = Pipeline.extractTriples(Pipeline.segmentDocs(Pipeline.synthDocs(s, VerifyDocs)))
-      Pipeline.edgeWeightsSupport(Pipeline.pairPredAggregate(
-        Pipeline.canonicalize(t, Pipeline.synthAliases(s))))
-    }),
-    "kg_edge_weights_sup_incr" -> ((s, _) => {
+      Pipeline.edgeWeightsSupport(pairPred(s, 0, VerifyDocs))),
+    "kg_edge_weights_sup_incr" -> ((s, _) =>
       // incremental twin — folded additive aggregates, scores recomputed;
       // must equal the batch surface exactly (shares its oracle SQL)
-      def canon(from: Long, until: Long) = Pipeline.canonicalize(
-        Pipeline.extractTriples(Pipeline.segmentDocs(
-          Pipeline.synthDocsRange(s, from, until))),
-        Pipeline.synthAliases(s))
-      Pipeline.edgeWeightsSupport(
-        Pipeline.mergePairPred(
-          Pipeline.pairPredAggregate(canon(0, 250)),
-          Pipeline.pairPredAggregate(canon(250, VerifyDocs))))
-    }),
+      Pipeline.edgeWeightsSupport(pairPred(s, 0, 250, VerifyDocs))),
     "kg_typed_edge_weights" -> ((s, _) =>
       // the per-argument-type-pair subgraph surface (the Hosseini/Berant
       // formulation the downstream EntGraph build constructs): the
       // cond/PMI battery computed WITHIN each (type_s, type_o) slice,
       // types = modal NER label per canonical entity from the
       // entity-link mentions ⋈ annotator labels evidence join
-      typedBattery(s)),
-    "kg_typed_edge_weights_incr" -> ((s, _) => {
+      typedBattery(s, 0, VerifyDocs)),
+    "kg_typed_edge_weights_incr" -> ((s, _) =>
       // incremental twin: BOTH additive aggregates (pair-pred AND type
       // evidence) folded from two slices, the non-additive assignment +
       // weight derivation recomputed — must equal the batch surface
       // exactly, so it SHARES its oracle SQL
-      def slice(from: Long, until: Long) = {
-        val docs = Pipeline.synthDocsRange(s, from, until)
-        // same pin as typedBattery: each slice's sentence table feeds
-        // extraction + mentions + labels — segment once per slice (r9)
-        val sents = Pipeline.segmentDocs(docs).localCheckpoint(eager = false)
-        val pp = Pipeline.pairPredAggregate(Pipeline.canonicalize(
-          Pipeline.extractTriples(sents), Pipeline.synthAliases(s)))
-        val ev = Pipeline.entityTypeEvidence(
-          Mentions.detect(sents, Pipeline.synthAliases(s)),
-          Pipeline.mentionLabelTable(sents))
-        (pp, ev)
-      }
-      val (ppA, evA) = slice(0, 250)
-      val (ppB, evB) = slice(250, VerifyDocs)
-      Pipeline.typedEdgeWeights(
-        Pipeline.mergePairPred(ppA, ppB),
-        Pipeline.entityTypesFromEvidence(Pipeline.mergeTypeEvidence(evA, evB)))
-    }),
-    "kg_edges_topk" -> ((s, _) => {
+      typedBattery(s, 0, 250, VerifyDocs)),
+    "kg_edges_topk" -> ((s, _) =>
       // the sparsified consumption surface: top-K per source predicate
       // by balanced inclusion (window rank per group — no global sort)
-      val t = Pipeline.extractTriples(Pipeline.segmentDocs(Pipeline.synthDocs(s, VerifyDocs)))
-      Pipeline.edgesTopK(Pipeline.edgeWeightsSupport(Pipeline.pairPredAggregate(
-        Pipeline.canonicalize(t, Pipeline.synthAliases(s)))), k = 8)
-    }),
+      Pipeline.edgesTopK(Pipeline.edgeWeightsSupport(pairPred(s, 0, VerifyDocs)), k = 8)),
     "kg_typed_edges_topk" -> ((s, _) =>
       // the TYPED consumption slice: EntGraph globalization reads each
       // per-argument-type-pair graph separately, so the sparsification
       // ranks within (type_s, type_o, pred_src) over the SAME battery
       // the kg_typed_edge_weights surface publishes
-      Pipeline.typedEdgesTopK(typedBattery(s), k = 8)),
-    "kg_entity_rank" -> ((s, _) => {
+      Pipeline.typedEdgesTopK(typedBattery(s, 0, VerifyDocs), k = 8)),
+    "kg_entity_rank" -> ((s, _) =>
       // entity importance: fixed-point integer PageRank over the same
       // bounded co-occurrence graph as kg_cooc_components — pure BIGINT
       // arithmetic, so the oracle's unrolled 10-iteration CTE chain
       // reproduces every rank bit-exactly (EAGER like the CC ops)
-      val t = Pipeline.extractTriples(Pipeline.segmentDocs(Pipeline.synthDocs(s, VerifyDocs)))
-      graft.ops.GraphOps.entityPageRank(
-        Pipeline.canonicalize(t, Pipeline.synthAliases(s)))
-    }),
-    "kg_entity_rank_full" -> ((s, _) => {
+      graft.ops.GraphOps.entityPageRank(kgCanonical(s, kgSents(s)))),
+    "kg_entity_rank_full" -> ((s, _) =>
       // the UNCAPPED full-graph route: PageRank over EVERY co-occurrence
       // edge with support ≥ 2 (weight-threshold edge derivation — no
       // global top-K, no sort/limit in the plan; PlanQualitySpec gates it)
-      val t = Pipeline.extractTriples(Pipeline.segmentDocs(Pipeline.synthDocs(s, VerifyDocs)))
-      graft.ops.GraphOps.entityPageRankFull(
-        Pipeline.canonicalize(t, Pipeline.synthAliases(s)))
-    }),
-    "kg_cooc_full" -> ((s, _) => {
+      graft.ops.GraphOps.entityPageRankFull(kgCanonical(s, kgSents(s)))),
+    "kg_cooc_full" -> ((s, _) =>
       // connected components over the SAME uncapped threshold graph
-      val t = Pipeline.extractTriples(Pipeline.segmentDocs(Pipeline.synthDocs(s, VerifyDocs)))
-      graft.ops.GraphOps.coocComponentsFull(
-        Pipeline.canonicalize(t, Pipeline.synthAliases(s)))
-    }),
+      graft.ops.GraphOps.coocComponentsFull(kgCanonical(s, kgSents(s)))),
     "kg_triples_audit" -> ((s, _) => {
       // semi-oracle for the (non-relational) extraction core: per-list
       // arity/marker/idx invariants the driver's DuckDB recomputes
@@ -331,7 +282,7 @@ object SparkEntry {
       // referential integrity to the sentence table, tag enum. Every
       // n_* column must be 0 and tag_ok true — so the row CONTENT is the
       // invariant, and the hash compare proves both engines agree on it.
-      val sents = Pipeline.segmentDocs(Pipeline.synthDocs(s, VerifyDocs))
+      val sents = kgSents(s)
       val t = Pipeline.extractTriples(sents).toDF()
       val sn = sents.toDF()
         .select(col("doc_id"), col("sent_id"), length(col("sent")).as("sent_len"))
@@ -362,8 +313,8 @@ object SparkEntry {
       // (Full idx-in-sentence bounds are deliberately omitted — corefed
       // indices reference the SUBSTITUTED sentence, whose length differs
       // from the base sentence kg_sentences carries.)
-      val sents = Pipeline.segmentDocs(Pipeline.synthDocs(s, VerifyDocs))
-      val t = Pipeline.corefTriples(Pipeline.synthDocs(s, VerifyDocs)).toDF()
+      val sents = kgSents(s)
+      val t = Pipeline.corefTriples(kgDocs(s)).toDF()
       val sn = sents.toDF().select(col("doc_id"), col("sent_id"), lit(1).as("known"))
       def cnt(c: org.apache.spark.sql.Column) = sum(when(c, 1L).otherwise(0L))
       t.join(sn, Seq("doc_id", "sent_id"), "left")
@@ -385,7 +336,7 @@ object SparkEntry {
     }),
     "kg_rel_totals" -> ((s, _) =>
       // the merge-stage global stats (reference merge_parsed_results.py:60-74)
-      Pipeline.extractTriples(Pipeline.segmentDocs(Pipeline.synthDocs(s, VerifyDocs)))
+      kgTriples(s)
         .groupBy(col("rel_list"))
         .agg(count(lit(1)).as("n_rels"),
              countDistinct(col("doc_id")).as("n_docs"),
@@ -395,10 +346,9 @@ object SparkEntry {
       // (~3/256 ≈ 1.2% — the reference's toy sample sink,
       // merge_parsed_results.py:76-78, used a wall-clock seed; a
       // content-hash filter is reproducible AND oracle-checkable)
-      Pipeline.extractTriples(Pipeline.segmentDocs(Pipeline.synthDocs(s, VerifyDocs)))
-        .toDF().filter(Pipeline.toySampleFilter)),
+      kgTriples(s).toDF().filter(Pipeline.toySampleFilter)),
     "mm_media_features" -> ((s, _) =>
-      MultimodalOps.extractFeatures(MultimodalOps.mediaAssets(Pipeline.synthDocs(s, VerifyDocs)))
+      MultimodalOps.extractFeatures(MultimodalOps.mediaAssets(kgDocs(s)))
         .drop("payload").toDF()),
     "mm_media_features_real" -> ((s, _) =>
       // image payloads are REAL PNGs decoded through javax.imageio,
@@ -406,25 +356,25 @@ object SparkEntry {
       // video payloads REAL ISO BMFF containers parsed by the box walk;
       // the oracle independently re-parses the IHDR / RIFF / BMFF header
       // bytes, so all three parse paths are value-verified
-      MultimodalOps.extractFeatures(MultimodalOps.mediaAssetsReal(Pipeline.synthDocs(s, VerifyDocs)))
+      MultimodalOps.extractFeatures(MultimodalOps.mediaAssetsReal(kgDocs(s)))
         .toDF()),
     "mm_audio_features" -> ((s, _) =>
       // the audio-native schema (channels/bits/frames/rate) through the
       // real javax.sound.sampled header parse
-      MultimodalOps.audioFeatures(MultimodalOps.mediaAssetsReal(Pipeline.synthDocs(s, VerifyDocs)))
+      MultimodalOps.audioFeatures(MultimodalOps.mediaAssetsReal(kgDocs(s)))
         .toDF()),
     "mm_video_features" -> ((s, _) =>
       // the video-native pre-decode filter surface: duration/timescale/
       // track count/dimensions/sample count parsed from REAL ISO BMFF
       // boxes; the oracle re-parses the big-endian box headers in SQL
-      MultimodalOps.videoFeatures(MultimodalOps.mediaAssetsReal(Pipeline.synthDocs(s, VerifyDocs)))
+      MultimodalOps.videoFeatures(MultimodalOps.mediaAssetsReal(kgDocs(s)))
         .toDF()),
     "mm_media_dedup" -> ((s, _) =>
       MultimodalOps.dedupAssets(
-        MultimodalOps.mediaAssets(Pipeline.synthDocs(s, VerifyDocs)))),
+        MultimodalOps.mediaAssets(kgDocs(s)))),
     "mm_media_stats" -> ((s, _) =>
       MultimodalOps.mediaStats(
-        MultimodalOps.extractFeatures(MultimodalOps.mediaAssets(Pipeline.synthDocs(s, VerifyDocs))))),
+        MultimodalOps.extractFeatures(MultimodalOps.mediaAssets(kgDocs(s))))),
 
     // ---- corpus readers (field mapping + exclusion routing; splitting
     // CONTENT is covered by the reference-differential battery) --------

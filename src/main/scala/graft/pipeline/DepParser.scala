@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.model.DepParse
 import graft.synth.FixtureParser
+import scala.jdk.CollectionConverters._
 
 /** Pluggable dependency-parse boundary — one of the two live-NLP
   * [[ModelConnection]] seams. Extraction runs over the parser's
@@ -40,8 +41,12 @@ object FixtureDepParser extends DepParser {
   *                        | null, …]}
   * `null` marks a sentence the server cannot parse; `pos` is the
   * sentence's word → POS-tags map (the reference's corenlp_pos_tags
-  * entry shape). word/head/deprel must be equal-length. `timeoutMs`
-  * mirrors the reference client's 90 s default (main_ner.py:80). */
+  * entry shape), absent or null when the server tags nothing.
+  * word/head/deprel must be equal-length. Every field is required with
+  * its type — a number where a word or tag belongs, or a `pos` that is
+  * not an object of string arrays, fails loudly instead of being coerced
+  * to text or read as no tags. `timeoutMs` mirrors the reference
+  * client's 90 s default (main_ner.py:80). */
 final class HttpDepParser(endpoint: String, timeoutMs: Long = 90000L)
     extends DepParser {
   def parse(sentences: Seq[String]): Seq[Option[(DepParse, Map[String, Seq[String]])]] = {
@@ -50,10 +55,17 @@ final class HttpDepParser(endpoint: String, timeoutMs: Long = 90000L)
       val node = out.get(i)
       if (node == null || node.isNull) None
       else {
+        // strict: asText() would render a number or an object as a word
+        def texts(a: com.fasterxml.jackson.databind.JsonNode, what: String) =
+          (0 until a.size()).map { j =>
+            val v = a.get(j)
+            require(v.isTextual, s"parser reply $what[$j] is not a string: $v")
+            v.asText()
+          }
         def strings(field: String): IndexedSeq[String] = {
           val a = node.get(field)
           require(a != null && a.isArray, s"parser reply missing array '$field'")
-          (0 until a.size()).map(j => a.get(j).asText())
+          texts(a, s"'$field'")
         }
         val words = strings("word")
         val headsNode = node.get("head")
@@ -74,15 +86,16 @@ final class HttpDepParser(endpoint: String, timeoutMs: Long = 90000L)
           s"parser reply ragged: ${words.length} words, ${heads.length} heads, " +
             s"${deprels.length} deprels")
         val posNode = node.get("pos")
-        var pos = Map.empty[String, Seq[String]]
-        if (posNode != null && posNode.isObject) {
-          val fields = posNode.fields()
-          while (fields.hasNext) {
-            val e = fields.next()
-            val tags = (0 until e.getValue.size()).map(j => e.getValue.get(j).asText())
-            pos = pos.updated(e.getKey, tags)
+        val pos: Map[String, Seq[String]] =
+          if (posNode == null || posNode.isNull) Map.empty
+          else {
+            require(posNode.isObject, s"parser reply 'pos' is not an object: $posNode")
+            posNode.properties().asScala.map { e =>
+              val what = s"'pos' of '${e.getKey}'"
+              require(e.getValue.isArray, s"parser reply $what is not an array: ${e.getValue}")
+              e.getKey -> texts(e.getValue, what)
+            }.toMap
           }
-        }
         Some((DepParse(words, heads, deprels), pos))
       }
     }

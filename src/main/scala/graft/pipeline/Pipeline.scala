@@ -515,6 +515,13 @@ object Pipeline {
       .groupBy(col("canonical"), col("label").as("ent_type"))
       .agg(count(lit(1)).as("n_mentions"))
 
+  /** the type evidence of a sentence table: its entity-link mentions
+    * ([[Mentions.detect]] over `aliases`) ⋈ its annotator labels
+    * ([[mentionLabelTable]]) — the ONE chain the one-shot run, the fold,
+    * the stream and the typed queries build their typed battery from. */
+  def typeEvidence(sentences: Dataset[SentenceRow], aliases: Dataset[AliasRow]): DataFrame =
+    entityTypeEvidence(Mentions.detect(sentences, aliases), mentionLabelTable(sentences))
+
   /** fold a fresh slice's type-evidence aggregate into the maintained one
     * (plain additive merge — the [[mergePairPred]] twin). */
   def mergeTypeEvidence(existing: DataFrame, delta: DataFrame): DataFrame =
@@ -881,15 +888,12 @@ object Pipeline {
     substring(md5(tripleSampleKey), 1, 2) <= "02"
 
   // ------------------------------------------------------ span invariant
-  /** rows whose span sequence (kind, text, media_ref, order) differs
-    * between the input docs table and a pipeline output docs table.
-    * Must be empty — the per-row invariant from the driver contract. */
-  def spanInvariantViolations(docsIn: Dataset[Doc], docsOut: Dataset[Doc]): DataFrame = {
-    val a = docsIn.toDF("doc_id", "spans_in")
-    val b = docsOut.toDF("doc_id", "spans_out")
-    a.join(b, Seq("doc_id"), "full_outer")
-      .filter(not(col("spans_in") <=> col("spans_out")))
-  }
+  /** the docs whose span sequence (kind, text, media_ref, order) differs
+    * between the input docs table and a pipeline output docs table — the
+    * [[spanInvariantReport]] rows not preserved. Must be empty — the
+    * per-row invariant from the driver contract. */
+  def spanInvariantViolations(docsIn: Dataset[Doc], docsOut: Dataset[Doc]): DataFrame =
+    spanInvariantReport(docsIn, docsOut).filter(!col("preserved"))
 
   /** explode the docs table to one row per span and REASSEMBLE it —
     * a genuine distributed round trip (posexplode → shuffle on doc_id →
@@ -945,16 +949,11 @@ object Pipeline {
     * canonicalized output (the reference's merged entry shape,
     * merge_parsed_results.py + dudepparse.py:2149-2167) — the flag is
     * folded into the store fingerprint so toggling it invalidates the
-    * downstream stages instead of silently reusing them. `parser` is the
-    * dependency-parse seam for the triples stage; a NON-default parser
-    * (e.g. [[HttpDepParser]]) must be identified in the caller's
-    * `fingerprint` — a different model produces different triples, and
-    * the store cannot see through the connection to know. */
+    * downstream stages instead of silently reusing them. */
   def runFromDocs(spark: SparkSession, checkpointRoot: String, inputDocs: Dataset[Doc],
                   fingerprint: String,
                   aliases: Option[Dataset[AliasRow]] = None,
-                  withCoref: Boolean = false,
-                  parser: DepParser = FixtureDepParser): RunResult = {
+                  withCoref: Boolean = false): RunResult = {
     import spark.implicits._
     val store = new CheckpointStore(checkpointRoot, spark,
       fingerprint = s"$fingerprint,withCoref=$withCoref")
@@ -965,7 +964,7 @@ object Pipeline {
     val docs = store.runStage("docs", bucketCol = Some("doc_id"))(inputDocs)
     val sentences = store.runStage("sentences", Seq("docs"))(segmentDocs(docs))
     val base = store.runStage("triples", Seq("sentences"), bucketCol = Some("doc_id"))(
-      extractTriples(sentences, parser = parser))
+      extractTriples(sentences))
     val triples =
       if (!withCoref) base
       else base.unionByName(
@@ -984,8 +983,7 @@ object Pipeline {
     // labels), derived inline — the fold maintains the SAME surface from
     // its additive `type_evidence` aggregate ([[incrementalFold]])
     val edgesBack = graphStages(store, pairPredAggregate(canonBack),
-      entityTypesFromEvidence(entityTypeEvidence(
-        Mentions.detect(sentences, dict), mentionLabelTable(sentences))))
+      entityTypesFromEvidence(typeEvidence(sentences, dict)))
     RunResult(canonBack, edgesBack, docs)
   }
 
@@ -1192,21 +1190,11 @@ object Pipeline {
     * Restriction (ENFORCED): the root must have been built WITHOUT
     * --coref — the fresh slice runs base extraction only, and folding
     * base-only rows into a base+coref store would mix entry shapes per
-    * doc (new docs would permanently lack corefed contributions).
-    *
-    * `parser` is the same dependency-parse seam [[runFromDocs]] takes:
-    * the fold's repair and fresh-slice extraction run through it, so a
-    * root built with a live parser can be MAINTAINED with that parser
-    * instead of silently mixing fixture-parsed triples into the store.
-    * The same fingerprint contract applies — a non-default parser must
-    * be identified in `fingerprint`, and because the fold validates its
-    * fingerprint against the root's, a fold submitted with a different
-    * parser tag than the root was built with is refused up front. */
+    * doc (new docs would permanently lack corefed contributions). */
   def incrementalFold(spark: SparkSession, root: String, freshDocs: Dataset[Doc],
                       fingerprint: String,
                       aliases: Option[Dataset[AliasRow]] = None,
-                      beforeCommit: IncrementalResult => Unit = _ => (),
-                      parser: DepParser = FixtureDepParser): IncrementalResult = {
+                      beforeCommit: IncrementalResult => Unit = _ => ()): IncrementalResult = {
     import spark.implicits._
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1235,8 +1223,6 @@ object Pipeline {
     def storeIds(stage: String) =
       readStore(stage).select(col("doc_id")).distinct()
     def asDocs(df: DataFrame) = df.select(col("doc_id"), col("spans")).as[Doc](docEnc)
-    def typeEvidence(sents: Dataset[SentenceRow]) =
-      entityTypeEvidence(Mentions.detect(sents, dict), mentionLabelTable(sents))
 
     val repaired = fs.exists(marker)
     if (repaired) {
@@ -1251,7 +1237,7 @@ object Pipeline {
         store.pruneUnrecorded(st)
       val docsMissingT = asDocs(readStore("docs")
         .join(storeIds("triples"), Seq("doc_id"), "left_anti"))
-      val repairT = extractTriples(segmentDocs(docsMissingT), parser = parser)
+      val repairT = extractTriples(segmentDocs(docsMissingT))
         .toDF().localCheckpoint()
       if (!repairT.isEmpty)
         store.appendStage(repairT, "triples", Seq("sentences"), bucketCol = Some("doc_id"))
@@ -1281,7 +1267,7 @@ object Pipeline {
         // and docs stores, which must not see the delta docs twice. The
         // new docs are segmented ONCE, for extraction and type evidence
         val sentsNew = segmentDocs(asDocs(docsNew)).localCheckpoint()
-        val tNew = extractTriples(sentsNew, parser = parser).toDF().localCheckpoint()
+        val tNew = extractTriples(sentsNew).toDF().localCheckpoint()
         val cNew = canonicalize(tNew.as[TripleRow], dict).localCheckpoint()
         // the maintained additive aggregates; a root written before one
         // existed, or whose repair dropped it, derives it once from the
@@ -1297,8 +1283,8 @@ object Pipeline {
         val evExisting =
           if (fs.exists(new org.apache.hadoop.fs.Path(evPath, "_SUCCESS")))
             spark.read.parquet(evPath)
-          else typeEvidence(segmentDocs(asDocs(readStore("docs"))))
-        val ev = mergeTypeEvidence(evExisting, typeEvidence(sentsNew)).localCheckpoint()
+          else typeEvidence(segmentDocs(asDocs(readStore("docs"))), dict)
+        val ev = mergeTypeEvidence(evExisting, typeEvidence(sentsNew, dict)).localCheckpoint()
         store.appendStage(docsNew, "docs", Nil, bucketCol = Some("doc_id"))
         store.appendStage(tNew, "triples", Seq("sentences"), bucketCol = Some("doc_id"))
         store.appendStage(cNew, "canonical", Seq("triples"), bucketCol = Some("doc_id"))

@@ -89,15 +89,9 @@ object StreamingOps {
     * typed transformations run under Structured Streaming unchanged —
     * per-micro-batch output is identical to a batch run over the same
     * rows (asserted by StreamingSpec against the batch path). This is the
-    * continuously-fed counterpart of `Pipeline.extractTriples`. `parser`
-    * is the same dependency-parse seam the batch entry points take, so a
-    * stream can feed a store built with a live parser without silently
-    * mixing fixture-parsed triples into it. */
-  def streamingTriples(docs: Dataset[graft.model.Doc],
-                       parser: graft.pipeline.DepParser = graft.pipeline.FixtureDepParser)
-      : Dataset[graft.model.TripleRow] =
-    graft.pipeline.Pipeline.extractTriples(
-      graft.pipeline.Pipeline.segmentDocs(docs), parser = parser)
+    * continuously-fed counterpart of `Pipeline.extractTriples`. */
+  def streamingTriples(docs: Dataset[graft.model.Doc]): Dataset[graft.model.TripleRow] =
+    graft.pipeline.Pipeline.extractTriples(graft.pipeline.Pipeline.segmentDocs(docs))
 
   /** streaming exact dedup: the first-arriving occurrence of each text
     * fingerprint passes, later duplicates are dropped — ACROSS
@@ -237,16 +231,37 @@ object StreamingOps {
                     weightsPath: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.pipeline.Pipeline
-    locally { // resume guard — BEFORE the query starts
-      val marker = new org.apache.hadoop.fs.Path(aggPath, "_last_batch")
-      val fs = marker.getFileSystem(
-        canonical.sparkSession.sparkContext.hadoopConfiguration)
-      require(readLastBatch(fs, marker) < 0L || checkpointLocation.isDefined,
-        s"maintainEdges: $aggPath holds a committed aggregate but no " +
-          "checkpointLocation was given — a fresh query restarts batch ids " +
-          "at 0 and the idempotence marker would silently drop all new " +
-          "data; pass the original checkpointLocation (or a fresh aggPath)")
+    startFolding(canonical, "maintainEdges", Seq(aggPath), trigger, checkpointLocation) {
+      (batch, batchId, runId, lineageTag) =>
+        foldGeneration(batch.sparkSession, aggPath, batchId, runId, lineageTag,
+          Pipeline.pairPredAggregate(batch.toDF()), Pipeline.mergePairPred) {
+          // the entailment-weight surface rides the SAME merged
+          // aggregate — a stream-fed store maintains weights exactly like
+          // the batch fold does (derivation re-run per batch, never
+          // corpus-scaled)
+          merged => writeEdgeSurfaces(merged, edgesPath, weightsPath)
+        }
     }
+  }
+
+  /** the prologue every maintained-aggregate query shares, all of it
+    * BEFORE the query starts: the resume guard (a committed aggregate
+    * under any of `guarded` without a `checkpointLocation` is refused —
+    * a fresh query restarts batch ids at 0 and the idempotence marker
+    * would silently drop all new data), the run identity and its lineage
+    * tag, and the `writeStream` with its trigger and checkpoint. `body`
+    * runs per micro-batch with (batch, batchId, runId, lineageTag). */
+  private def startFolding[T](source: Dataset[T], who: String, guarded: Seq[String],
+                              trigger: Option[org.apache.spark.sql.streaming.Trigger],
+                              checkpointLocation: Option[String])(
+      body: (Dataset[T], Long, String, String) => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    for (p <- guarded)
+      require(lastBatchOf(source.sparkSession, p) < 0L || checkpointLocation.isDefined,
+        s"$who: $p holds a committed aggregate but no checkpointLocation " +
+          "was given — a fresh query restarts batch ids at 0 and the " +
+          "idempotence marker would silently drop all new data; pass the " +
+          "original checkpointLocation (or fresh output paths)")
     // the query-run identity stamped next to every generation: batch ids
     // are only meaningful WITHIN one checkpoint lineage, so a generation
     // may be claimed as "this batch's own crashed commit" only when it
@@ -254,8 +269,8 @@ object StreamingOps {
     // lineage across restarts (same checkpoint → same renumbering);
     // a query WITHOUT a checkpoint renumbers batches from 0 on every
     // start, so each start is its own lineage — an orphan agg_0 from a
-    // previous no-checkpoint run must hit the loud refusal below, not
-    // the self-overwrite branch.
+    // previous no-checkpoint run must hit the loud refusal in
+    // foldGeneration, not the self-overwrite branch.
     val runId = checkpointLocation.map("cp:" + _)
       .getOrElse("ephemeral:" + java.util.UUID.randomUUID().toString)
     // the lineage tag rides IN the generation dir name (agg_<id>-<tag>),
@@ -265,23 +280,21 @@ object StreamingOps {
     // stamped a separate _run_id file AFTER the parquet job: a crash
     // between the two wedged an otherwise self-healing first-batch
     // replay). Legacy dirs (bare agg_<id> + _run_id file) stay readable.
-    val lineageTag = StreamingOps.lineageTagOf(runId)
-    val writer = canonical.writeStream
-      .outputMode("append")
+    val lineageTag = lineageTagOf(runId)
+    val writer = source.writeStream.outputMode("append")
     trigger.foreach(writer.trigger)
     checkpointLocation.foreach(writer.option("checkpointLocation", _))
     writer
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        foldGeneration(batch.sparkSession, aggPath, batchId, runId, lineageTag,
-          Pipeline.pairPredAggregate(batch.toDF()), Pipeline.mergePairPred) {
-          // the entailment-weight surface rides the SAME merged
-          // aggregate — a stream-fed store maintains weights exactly like
-          // the batch fold does (derivation re-run per batch, never
-          // corpus-scaled)
-          merged => writeEdgeSurfaces(merged, edgesPath, weightsPath)
-        }
-      }
+      .foreachBatch((batch: Dataset[T], batchId: Long) =>
+        body(batch, batchId, runId, lineageTag))
       .start()
+  }
+
+  /** the committed batch id of the maintained store at `aggPath`, -1 if
+    * none ([[readLastBatch]]). */
+  private def lastBatchOf(spark: org.apache.spark.sql.SparkSession, aggPath: String): Long = {
+    val marker = new org.apache.hadoop.fs.Path(aggPath, "_last_batch")
+    readLastBatch(marker.getFileSystem(spark.sparkContext.hadoopConfiguration), marker)
   }
 
   /** the untyped edge table (and, given a path, the count battery;
@@ -497,73 +510,45 @@ object StreamingOps {
                          edgesPath: String, weightsPath: String,
                          typedWeightsPath: String,
                          trigger: Option[org.apache.spark.sql.streaming.Trigger] = None,
-                         checkpointLocation: Option[String] = None,
-                         parser: graft.pipeline.DepParser = graft.pipeline.FixtureDepParser,
-                         annotator: graft.pipeline.SentenceAnnotator = graft.pipeline.FixtureAnnotator)
+                         checkpointLocation: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.pipeline.{Mentions, Pipeline}
-    locally { // resume guard — BEFORE the query starts (both aggregates)
-      val conf = docs.sparkSession.sparkContext.hadoopConfiguration
-      def markerOf(p: String): Long = {
-        val marker = new org.apache.hadoop.fs.Path(p, "_last_batch")
-        readLastBatch(marker.getFileSystem(conf), marker)
+    import graft.pipeline.Pipeline
+    // a PRE-TYPED pairpred store (built by maintainEdges) adopted here
+    // starts the evidence aggregate EMPTY: entities observed only in
+    // the already-folded batches carry no label evidence and type as
+    // the default forever, so edge_weights_typed silently diverges
+    // from the batch derivation over the same corpus. Surface it
+    // loudly at adoption time — faithful typed weights need a
+    // batch-side evidence rebuild over the historical corpus.
+    val aggMarker = lastBatchOf(docs.sparkSession, aggPath)
+    if (aggMarker >= 0L && lastBatchOf(docs.sparkSession, evidencePath) < 0L)
+      System.err.println(s"[stream] WARNING: $aggPath already holds batches " +
+        s"through $aggMarker but $evidencePath has no committed evidence " +
+        "generation — type evidence starts empty, historical entities will " +
+        "type as the default until re-observed; rebuild the evidence store " +
+        "batch-side for typed weights faithful to the full corpus")
+    startFolding(docs, "maintainTypedEdges", Seq(aggPath, evidencePath),
+                 trigger, checkpointLocation) { (batch, batchId, runId, lineageTag) =>
+      val spark = batch.sparkSession
+      // ONE materialization of the batch's sentences: they feed THREE
+      // consumers (extraction, mention detection, the label table) —
+      // unpinned, each re-runs segmentation and the source read
+      val sentences = Pipeline.segmentDocs(batch).localCheckpoint()
+      val canonical = Pipeline.canonicalize(Pipeline.extractTriples(sentences), aliases)
+      // evidence fold FIRST (no derived surfaces of its own)
+      foldGeneration(spark, evidencePath, batchId, runId, lineageTag,
+        Pipeline.typeEvidence(sentences, aliases), Pipeline.mergeTypeEvidence)(_ => ())
+      // pair-pred fold second; all derived surfaces in its window
+      foldGeneration(spark, aggPath, batchId, runId, lineageTag,
+        Pipeline.pairPredAggregate(canonical), Pipeline.mergePairPred) {
+        merged =>
+          val evGen = committedAggregate(spark, evidencePath).getOrElse(
+            sys.error(s"maintainTypedEdges: evidence fold for batch " +
+              s"$batchId left no committed generation at $evidencePath"))
+          writeEdgeSurfaces(merged, edgesPath, Some(weightsPath), Some(
+            Pipeline.entityTypesFromEvidence(spark.read.parquet(evGen)) -> typedWeightsPath))
       }
-      for (p <- Seq(aggPath, evidencePath)) {
-        require(markerOf(p) < 0L || checkpointLocation.isDefined,
-          s"maintainTypedEdges: $p holds a committed aggregate but no " +
-            "checkpointLocation was given — a fresh query restarts batch " +
-            "ids at 0 and the idempotence marker would silently drop all " +
-            "new data; pass the original checkpointLocation (or fresh " +
-            "output paths)")
-      }
-      // a PRE-TYPED pairpred store (built by maintainEdges) adopted here
-      // starts the evidence aggregate EMPTY: entities observed only in
-      // the already-folded batches carry no label evidence and type as
-      // the default forever, so edge_weights_typed silently diverges
-      // from the batch derivation over the same corpus. Surface it
-      // loudly at adoption time — faithful typed weights need a
-      // batch-side evidence rebuild over the historical corpus.
-      val aggMarker = markerOf(aggPath)
-      if (aggMarker >= 0L && markerOf(evidencePath) < 0L)
-        System.err.println(s"[stream] WARNING: $aggPath already holds batches " +
-          s"through $aggMarker but $evidencePath has no committed evidence " +
-          "generation — type evidence starts empty, historical entities will " +
-          "type as the default until re-observed; rebuild the evidence store " +
-          "batch-side for typed weights faithful to the full corpus")
     }
-    val runId = checkpointLocation.map("cp:" + _)
-      .getOrElse("ephemeral:" + java.util.UUID.randomUUID().toString)
-    val lineageTag = lineageTagOf(runId)
-    val writer = docs.writeStream.outputMode("append")
-    trigger.foreach(writer.trigger)
-    checkpointLocation.foreach(writer.option("checkpointLocation", _))
-    writer
-      .foreachBatch { (batch: Dataset[graft.model.Doc], batchId: Long) =>
-        val spark = batch.sparkSession
-        // ONE materialization of the batch's sentences: they feed THREE
-        // consumers (extraction, mention detection, the label table) —
-        // unpinned, each re-runs segmentation and the source read
-        val sentences = Pipeline.segmentDocs(batch).localCheckpoint()
-        val canonical = Pipeline.canonicalize(
-          Pipeline.extractTriples(sentences, parser = parser), aliases)
-        // evidence fold FIRST (no derived surfaces of its own)
-        foldGeneration(spark, evidencePath, batchId, runId, lineageTag,
-          Pipeline.entityTypeEvidence(
-            Mentions.detect(sentences, aliases),
-            Pipeline.mentionLabelTable(sentences, annotator)),
-          Pipeline.mergeTypeEvidence)(_ => ())
-        // pair-pred fold second; all derived surfaces in its window
-        foldGeneration(spark, aggPath, batchId, runId, lineageTag,
-          Pipeline.pairPredAggregate(canonical), Pipeline.mergePairPred) {
-          merged =>
-            val evGen = committedAggregate(spark, evidencePath).getOrElse(
-              sys.error(s"maintainTypedEdges: evidence fold for batch " +
-                s"$batchId left no committed generation at $evidencePath"))
-            writeEdgeSurfaces(merged, edgesPath, Some(weightsPath), Some(
-              Pipeline.entityTypesFromEvidence(spark.read.parquet(evGen)) -> typedWeightsPath))
-        }
-      }
-      .start()
   }
 
   /** batch-equivalent sessionization: same gap semantics but the trailing

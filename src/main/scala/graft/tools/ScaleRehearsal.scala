@@ -184,16 +184,14 @@ object ScaleRehearsal {
       // NOT directly comparable to the bench query of the same name
       time("kg_typed_edge_weights") { () =>
         import spark.implicits._
-        import graft.pipeline.{Mentions, Pipeline}
+        import graft.pipeline.Pipeline
         val d = spark.read.parquet(kgDocsPath).as[graft.model.Doc]
         val sents = Pipeline.segmentDocs(d).localCheckpoint()
         val aliases = Pipeline.synthAliases(spark)
         Pipeline.typedEdgeWeights(
           Pipeline.pairPredAggregate(Pipeline.canonicalize(
             Pipeline.extractTriples(sents), aliases)),
-          Pipeline.entityTypesFromEvidence(Pipeline.entityTypeEvidence(
-            Mentions.detect(sents, aliases),
-            Pipeline.mentionLabelTable(sents)))).count() })
+          Pipeline.entityTypesFromEvidence(Pipeline.typeEvidence(sents, aliases))).count() })
   }
 
   def main(args: Array[String]): Unit = {

@@ -858,6 +858,60 @@ class PipelineSpec extends SparkSpecBase {
     } finally server.stop(0)
   }
 
+  test("parser boundary: a malformed POS map in the reply fails loudly") {
+    import graft.pipeline.HttpDepParser
+    // a POS tag that is not a string must not be coerced to its text, and
+    // a `pos` that is not an object must not be read as "no tags"
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val pos = new java.util.concurrent.atomic.AtomicReference[String]
+    val server = com.sun.net.httpserver.HttpServer.create(
+      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/parse", { exchange =>
+      exchange.getRequestBody.readAllBytes()
+      val root = mapper.createObjectNode()
+      val o = root.putArray("parses").addObject()
+      o.putArray("word").add("很").add("好")
+      o.putArray("head").add(2).add(0)
+      o.putArray("deprel").add("ADV").add("HED")
+      o.set[com.fasterxml.jackson.databind.JsonNode]("pos", mapper.readTree(pos.get))
+      val bytes = mapper.writeValueAsBytes(root)
+      exchange.sendResponseHeaders(200, bytes.length)
+      exchange.getResponseBody.write(bytes)
+      exchange.close()
+    })
+    server.start()
+    try {
+      val parser = new HttpDepParser(s"http://127.0.0.1:${server.getAddress.getPort}/parse")
+      for ((reply, expected) <- Seq(
+             """{"很": ["AD"], "好": [7]}""" -> "'pos' of '好'[0] is not a string",
+             """{"很": "AD"}""" -> "'pos' of '很' is not an array",
+             """["AD", "VA"]""" -> "'pos' is not an object")) {
+        pos.set(reply)
+        val e = intercept[IllegalArgumentException](parser.parse(Seq("很好")))
+        assert(e.getMessage.contains(expected), e.getMessage)
+      }
+      // a well-formed map still decodes
+      pos.set("""{"很": ["AD"], "好": ["VA"]}""")
+      assert(parser.parse(Seq("很好")).head.get._2 ==
+        Map("很" -> Seq("AD"), "好" -> Seq("VA")))
+    } finally server.stop(0)
+  }
+
+  test("each _incr query twin equals its batch query row for row") {
+    // the twins fold two slices' additive aggregates (SparkEntry's cuts
+    // helpers) and must reproduce the one-slice batch surface exactly
+    def rows(name: String) = {
+      val df = SparkEntry.queries(name)(spark, "")
+      (df.schema, df.collect().map(_.toString).sorted.toSeq)
+    }
+    for (q <- Seq("kg_edges", "kg_edge_weights", "kg_edge_weights_sup",
+                  "kg_typed_edge_weights")) {
+      val batch = rows(q)
+      assert(batch._2.nonEmpty, q)
+      assert(rows(s"${q}_incr") == batch, q)
+    }
+  }
+
   test("annotator boundary: a malformed token in the reply fails loudly") {
     import graft.pipeline.HttpSentenceAnnotator
     // a buggy server emitting a null or non-numeric char offset must not
