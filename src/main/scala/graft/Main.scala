@@ -159,17 +159,15 @@ object Main {
     * fold. They are recounted from the triples store when no prior
     * stats.json exists OR when the fold REPAIRED a crashed predecessor
     * (the crashed fold's rows are in the stores but were never captured by
-    * any delta — incrementing would under-count them forever); that read
-    * carries the stage's schema, so an EMPTY partitioned stage (zero part
-    * files) reads as empty. */
+    * any delta — incrementing would under-count them forever). */
   private def refreshStats(spark: SparkSession, outDir: String,
                            res: Pipeline.IncrementalResult): Unit = {
     val statsPath = new org.apache.hadoop.fs.Path(s"$outDir/stats.json")
     val fs = statsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val store = new pipeline.CheckpointStore(outDir, spark)
     val totals =
       if (!fs.exists(statsPath) || res.repaired)
-        relTotals(spark.read.schema(org.apache.spark.sql.Encoders
-          .product[graft.model.TripleRow].schema).parquet(s"$outDir/triples"))
+        relTotals(store.readData("triples"))
       else {
         val in = fs.open(statsPath)
         val old = try new com.fasterxml.jackson.databind.ObjectMapper()
@@ -185,7 +183,6 @@ object Main {
           oldTotals += k -> (oldTotals.getOrElse(k, 0L) + n) }
         oldTotals.toSeq
       }
-    val store = new pipeline.CheckpointStore(outDir, spark)
     writeStats(spark, outDir, store.rows("docs"), store.rows("edges"), totals)
   }
 
@@ -464,14 +461,14 @@ object Main {
     val result = Pipeline.runFromDocs(spark, outDir, docs, fullFp,
       aliases = Some(aliases), withCoref = opts.contains("coref"))
     readerOut.foreach(_.uncache())
+    val store = new pipeline.CheckpointStore(outDir, spark)
 
     if (opts.contains("mentions") || opts.contains("nerpos")) {
       // reuse the sentences THIS run just checkpointed instead of
       // re-segmenting the corpus once per extra sink (same fingerprint →
       // guaranteed in sync)
-      val sentEnc = org.apache.spark.sql.Encoders.product[graft.model.SentenceRow]
-      val sentences = spark.read.schema(sentEnc.schema)
-        .parquet(s"$outDir/sentences").as[graft.model.SentenceRow](sentEnc)
+      val sentences = store.readData("sentences")
+        .as[graft.model.SentenceRow](org.apache.spark.sql.Encoders.product[graft.model.SentenceRow])
       if (opts.contains("mentions")) {
         Mentions.detect(sentences, aliases)
           .write.mode("overwrite").parquet(s"$outDir/mentions")
@@ -497,7 +494,6 @@ object Main {
 
     // the reference's merge-stage global stats (merge_parsed_results.py:60-74)
     // docs and edges are the totals their stage commits recorded
-    val store = new pipeline.CheckpointStore(outDir, spark)
     val nDocs = store.rows("docs")
     writeStats(spark, outDir, nDocs, store.rows("edges"), relTotals(result.triples))
     if (opts.contains("skew-report")) {

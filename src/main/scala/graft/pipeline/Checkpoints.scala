@@ -1,9 +1,10 @@
 package graft.pipeline
 
-import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Observation, SparkSession}
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StructType}
 
 /** Stage checkpointing with per-partition lineage — the sandbox stand-in
   * for Iceberg snapshot-per-stage (no Iceberg jars ship with this image;
@@ -31,7 +32,7 @@ final class CheckpointStore(root: String, spark: SparkSession,
     * stage has millions of part files, and a driver-side list (the
     * pre-r8 design collected per-file counts to build the json) becomes
     * the store's own scaling bottleneck. The meta json keeps only
-    * bounded scalars (fingerprint, total rows, upstream); every lineage
+    * bounded fields (fingerprint, total rows, upstream, schema); every lineage
     * comparison below is a Spark-side join, never an unbounded collect.
     * Iceberg analogue: the manifest files ARE tables. Legacy roots
     * (per-file lists still in the json) stay readable — first rewrite
@@ -76,15 +77,23 @@ final class CheckpointStore(root: String, spark: SparkSession,
 
   private def fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def readMeta(stage: String): Option[String] = {
+  /** the stage's `_graft_meta.json`, parsed once (None when it has none). */
+  private def readMeta(stage: String): Option[JsonNode] = {
     val p = new Path(dataPath(stage), "_graft_meta.json")
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
-      try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8))
-      finally in.close()
+      try Some(CheckpointStore.mapper.readTree(in)) finally in.close()
     }
   }
+
+  private def metaField(stage: String, field: String): Option[JsonNode] =
+    readMeta(stage).flatMap(m => Option(m.get(field)))
+
+  /** the schema the stage was written with, `_bucket` included (None for
+    * a meta written before schemas were recorded, or no meta). */
+  private def recordedSchema(stage: String): Option[StructType] =
+    metaField(stage, "schema").map(s => DataType.fromJson(s.toString).asInstanceOf[StructType])
 
   /** a crashed incremental fold ([[graft.pipeline.Pipeline.incrementalFold]])
     * leaves this marker at the root; while it exists the stores may be
@@ -170,10 +179,11 @@ final class CheckpointStore(root: String, spark: SparkSession,
     * segments (e.g. the `aliases=` dictionary pin) without depending on
     * the meta layout. */
   def stageFingerprint(stage: String): Option[String] =
-    readMeta(stage).flatMap(
-      """"fingerprint":"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(_))
-      .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
+    metaField(stage, "fingerprint").map(_.asText)
 
+  /** complete: `_SUCCESS` plus a meta carrying this run's fingerprint. A
+    * meta that records no schema (an older root) also needs a data file
+    * to infer one from, so an older EMPTY stage is recomputed. */
   def isComplete(stage: String): Boolean =
     !foldInFlight &&
       fs.exists(new Path(dataPath(stage), "_SUCCESS")) &&
@@ -185,7 +195,8 @@ final class CheckpointStore(root: String, spark: SparkSession,
           // compare it decoded so an equivalent root keeps resuming —
           // see Pipeline.normalizeFingerprint for why this is safe
           Pipeline.normalizeFingerprint(stored) ==
-            Pipeline.normalizeFingerprint(fingerprint))
+            Pipeline.normalizeFingerprint(fingerprint)) &&
+      (metaField(stage, "schema").isDefined || listDataFiles(stage).nonEmpty)
 
   /** every stage under this root that is COMPLETE under THIS store's
     * fingerprint — the maintenance-pass work list (derived, never
@@ -201,51 +212,38 @@ final class CheckpointStore(root: String, spark: SparkSession,
   }
 
   /** run (or resume) a stage; the dataset is persisted as parquet with a
-    * meta sidecar carrying row count, the upstream stage names and the
-    * run fingerprint, plus its per-file lineage side table. `bucketCol`
-    * adds an explicit hash-bucket directory layout
+    * meta sidecar carrying row count, the upstream stage names, the run
+    * fingerprint and the written schema, plus its per-file lineage side
+    * table. `bucketCol` adds an explicit hash-bucket directory layout
     * (`_bucket=pmod(xxhash64(col), nBuckets)`) — the plain-parquet
     * analogue of Iceberg's `bucket(N, col)` partition transform:
-    * co-locates rows by key and prunes on bucket predicates.
-    *
-    * The stage's KNOWN schema (`enc.schema`) is the resume fallback: an
-    * EMPTY partitionBy write produces zero part files, so schema inference
-    * would fail — and a valid pipeline stage may legitimately be empty
-    * (e.g. a coref pass over a corpus with no coreferent chains). */
+    * co-locates rows by key and prunes on bucket predicates. A resume
+    * reads the stage under its recorded schema and never builds
+    * `compute`. */
   def runStage[T](stage: String, upstream: Seq[String] = Nil,
                   bucketCol: Option[String] = None, nBuckets: Int = 64)
                  (compute: => Dataset[T])(implicit enc: Encoder[T]): Dataset[T] =
-    run(stage, upstream, bucketCol, nBuckets)(compute.toDF(), enc.schema).as[T]
+    run(stage, upstream, bucketCol, nBuckets)(compute.toDF()).as[T]
 
   /** the DataFrame (dynamic-schema) variant of [[runStage]], same
-    * completeness/resume/bucketing semantics. `compute` is only ever
-    * PLANNED on resume, for an empty stage's schema fallback (the lazy
-    * plan's schema — no job runs). */
+    * completeness/resume/bucketing semantics. */
   def runStageDF(stage: String, upstream: Seq[String] = Nil,
                  bucketCol: Option[String] = None, nBuckets: Int = 64)
                 (compute: => DataFrame): DataFrame =
-    run(stage, upstream, bucketCol, nBuckets)(compute, compute.schema)
+    run(stage, upstream, bucketCol, nBuckets)(compute)
 
-  /** the one body of both run methods: resume reads the complete stage
-    * back (inference first, `emptySchema` only for a zero-file stage);
+  /** the one body of both run methods: resume reads the complete stage;
     * a fresh stage is written, then committed from ONE read-back that is
     * also the returned DataFrame. The `_bucket` column is dropped. */
   private def run(stage: String, upstream: Seq[String],
                   bucketCol: Option[String], nBuckets: Int)
-                 (compute: => DataFrame, emptySchema: => StructType): DataFrame = {
-    val back =
-      if (isComplete(stage)) {
-        // readStage may evaluate its by-name fallback more than once;
-        // runStageDF's compute is planned at most once
-        lazy val fallback = withBucket(emptySchema, bucketCol)
-        readStage(stage, Some(fallback))
-      } else {
-        val df = compute
-        writeStage(df, stage, bucketCol, nBuckets)
-        commit(stage, upstream, withBucket(df.schema, bucketCol))
-      }
-    back.drop("_bucket")
-  }
+                 (compute: => DataFrame): DataFrame =
+    if (isComplete(stage)) readData(stage)
+    else {
+      val df = compute
+      writeStage(df, stage, bucketCol, nBuckets)
+      markComplete(stage, upstream, Some(withBucket(df.schema, bucketCol))).drop("_bucket")
+    }
 
   /** the on-disk schema of a stage written from `schema`. */
   private def withBucket(schema: StructType, bucketCol: Option[String]): StructType =
@@ -293,17 +291,27 @@ final class CheckpointStore(root: String, spark: SparkSession,
     * COST CONTRACT: the meta refresh is SLICE-SIZED, not store-sized —
     * the NEW files are read once, under the written schema, and their
     * per-file lineage is appended to the side table with its row total
-    * observed on that one write ([[recordLineage]]'s commit); the meta
+    * observed on that one write ([[writeLineage]]); the meta
     * total is the lineage table's previous total plus that delta. The
     * history files are never rescanned. (If the recorded lineage misses
     * a pre-append file — a crashed append, a hand-edited root — it falls
     * back to one full markComplete rescan rather than recording wrong
-    * lineage.) */
+    * lineage.)
+    *
+    * SCHEMA: the appended columns (with `_bucket`) must match the
+    * recorded schema by name and type — nullability and column order
+    * aside — or the append fails before any file is written. */
   def appendStage(df: DataFrame, stage: String,
                   upstream: Seq[String] = Nil,
                   bucketCol: Option[String] = None, nBuckets: Int = 64): Unit = {
     require(fs.exists(new Path(dataPath(stage), "_SUCCESS")),
       s"appendStage($stage): no existing completed stage at ${dataPath(stage)}")
+    val recorded = recordedSchema(stage)
+    val appended = withBucket(df.schema, bucketCol)
+    def columns(s: StructType) = s.fields.map(f => f.name -> f.dataType.catalogString).toMap
+    recorded.foreach(r => require(columns(r) == columns(appended),
+      s"appendStage($stage): appended schema ${appended.catalogString} " +
+        s"does not match the recorded ${r.catalogString}"))
     import org.apache.spark.sql.functions.col
     val beforeFiles = listDataFiles(stage)
     val before = beforeFiles.map(_.getName).toSet
@@ -323,7 +331,7 @@ final class CheckpointStore(root: String, spark: SparkSession,
     writeStageMode(df, stage, bucketCol, nBuckets, "append", clustered = true)
     if (stale && before.nonEmpty) {
       // fall back to one full self-healing rescan
-      markComplete(stage, upstream, Some(withBucket(df.schema, bucketCol)))
+      markComplete(stage, upstream, recorded)
     } else {
       // previous total from the lineage table, NOT the meta json: a
       // crash between a lineage append and the meta rewrite leaves the
@@ -343,80 +351,37 @@ final class CheckpointStore(root: String, spark: SparkSession,
         if (newFiles.isEmpty) 0L
         else writeLineage(stage, "append",
           spark.read.schema(df.schema).parquet(newFiles.map(_.toString): _*))
-      writeMeta(stage, upstream, prevTotal + freshTotal)
+      writeMeta(stage, upstream, prevTotal + freshTotal, recorded)
     }
   }
 
-  /** read a stage with INFERENCE first — a checkpoint written by an older
-    * code version with a different schema must keep failing LOUDLY at
-    * analysis (an explicit schema would silently null-fill missing
-    * columns) — and fall back to the known schema only when inference has
-    * nothing to read (an EMPTY partitioned stage writes zero part files).
-    * `fallback` is by-name: runStageDF's fallback plans its compute, which
-    * must stay untouched on the inference happy path. */
-  private def readStage(stage: String,
-                        fallback: => Option[StructType]) =
-    // an EMPTY partitioned stage writes zero part files: probe for that
-    // explicitly (version-independent) instead of keying only off the
-    // AnalysisException condition string — a Spark build that reports a
-    // different condition must not break the empty-stage resume path
-    // ORDER MATTERS: probe the filesystem BEFORE touching `fallback` —
-    // the by-name fallback plans runStageDF's compute thunk, and some
-    // computes (the edge-weight derivations' capped materialization
-    // under AQE) launch jobs at plan CONSTRUCTION; on the happy path
-    // (stage has data files) the fallback must never be evaluated, or
-    // every resume of a complete root re-runs that construction work
-    if (fs.exists(new Path(dataPath(stage))) &&
-        listDataFiles(stage).isEmpty && fallback.isDefined)
-      spark.read.schema(fallback.get).parquet(dataPath(stage))
-    else
-      try spark.read.parquet(dataPath(stage))
-      catch {
-        // belt for listings that race the probe; match the modern error
-        // condition AND the legacy message text
-        case e: org.apache.spark.sql.AnalysisException
-            if fallback.isDefined &&
-               (e.getCondition == "UNABLE_TO_INFER_SCHEMA" ||
-                e.getMessage.contains("Unable to infer schema")) =>
-          spark.read.schema(fallback.get).parquet(dataPath(stage))
-      }
+  /** the stage as stored, `_bucket` included: read under its recorded
+    * schema, so an EMPTY partitioned stage (zero part files) reads as
+    * empty and no inference job runs; by inference when the meta
+    * records none. */
+  private def readStored(stage: String): DataFrame = read(stage, recordedSchema(stage))
 
-  /** read a stage's data with the empty-stage schema fallback — the
-    * PUBLIC read path for consumers outside runStage (the incremental
-    * fold's history reads): a legitimately EMPTY bucketed stage has zero
-    * part files, where raw `spark.read.parquet` fails inference. */
-  def readData(stage: String,
-               fallback: Option[StructType]): DataFrame =
-    readStage(stage, fallback)
+  private def read(stage: String, schema: Option[StructType]): DataFrame =
+    schema.fold(spark.read)(spark.read.schema(_)).parquet(dataPath(stage))
 
-  /** write the completion meta for a stage whose data was persisted by the
-    * caller (DataFrame stages that don't go through runStage, compaction,
-    * a stale append). Reads the stage with inference, as a resume does;
-    * `schema` makes the lineage pass robust to zero-file (empty
-    * partitioned) stages where inference has nothing to read. */
-  def markComplete(stage: String, upstream: Seq[String],
-                   schema: Option[StructType] = None): Unit =
-    recordLineage(stage, upstream, readStage(stage, schema))
+  /** a stage's data under its recorded schema, `_bucket` dropped — the
+    * one read path for consumers outside runStage (a resume, the
+    * incremental fold's history reads, Main's stats and sinks). */
+  def readData(stage: String): DataFrame = readStored(stage).drop("_bucket")
 
-  /** commit a stage [[run]] just wrote: ONE read-back under the schema the
-    * write used — the written DataFrame's own schema, not the encoder's
-    * (a `runStage[Long]` over `spark.range` writes `id`, not `value`) —
-    * so no inference job runs. The lineage is recorded from it and the
-    * caller gets the same DataFrame back instead of re-reading the stage. */
-  private def commit(stage: String, upstream: Seq[String],
-                     written: StructType): DataFrame = {
-    val back = spark.read.schema(written).parquet(dataPath(stage))
-    recordLineage(stage, upstream, back)
+  /** commit a stage whose data files are in place: ONE read under
+    * `schema` (inference when None), from which the per-file lineage is
+    * written, then the meta json recording `schema`. Lineage commits
+    * BEFORE the meta — the meta's fingerprint is what marks the stage
+    * complete, so a crash between the two leaves an incomplete stage,
+    * never a complete stage with missing lineage. Returns the read, so a
+    * fresh stage's caller consumes it instead of re-reading the stage. */
+  private def markComplete(stage: String, upstream: Seq[String],
+                           schema: Option[StructType]): DataFrame = {
+    val back = read(stage, schema)
+    writeMeta(stage, upstream, writeLineage(stage, "overwrite", back), schema)
     back
   }
-
-  /** per-file lineage of `data` (the stage's read-back), written straight
-    * to the lineage side table (never collected). Lineage commits BEFORE
-    * the meta json — the json's fingerprint is what marks the stage
-    * complete, so a crash between the two leaves an incomplete stage,
-    * never a complete stage with missing lineage. */
-  private def recordLineage(stage: String, upstream: Seq[String], data: DataFrame): Unit =
-    writeMeta(stage, upstream, writeLineage(stage, "overwrite", data))
 
   /** write (or append) `data`'s per-file lineage to the side table and
     * return its row total, an `Observation` on that write — neither the
@@ -431,40 +396,39 @@ final class CheckpointStore(root: String, spark: SparkSession,
     total.get("rows").asInstanceOf[Long]
   }
 
+  /** the meta json: stage, snapshot_id, fingerprint, rows and upstream,
+    * then the written schema when known. */
   private def writeMeta(stage: String, upstream: Seq[String],
-                        totalRows: Long): Unit = {
-    val meta =
-      s"""{"stage":${jstr(stage)},"snapshot_id":${System.currentTimeMillis()},
-         |"fingerprint":${jstr(fingerprint)},
-         |"rows":$totalRows,
-         |"upstream":[${upstream.map(jstr).mkString(",")}]}""".stripMargin
+                        totalRows: Long, schema: Option[StructType]): Unit = {
+    val mapper = CheckpointStore.mapper
+    val meta = mapper.createObjectNode()
+      .put("stage", stage).put("snapshot_id", System.currentTimeMillis())
+      .put("fingerprint", fingerprint).put("rows", totalRows)
+    val up = meta.putArray("upstream")
+    upstream.foreach(u => up.add(u))
+    schema.foreach(s => meta.set[JsonNode]("schema", mapper.readTree(s.json)))
     val out = fs.create(new Path(dataPath(stage), "_graft_meta.json"), true)
-    out.write(meta.getBytes(StandardCharsets.UTF_8))
-    out.close()
+    try out.write(mapper.writeValueAsBytes(meta)) finally out.close()
   }
 
   /** the total row count recorded in a stage's meta json (None when the
     * stage has no meta, or a hand-written one without a count). */
   private def recordedRows(stage: String): Option[Long] =
-    readMeta(stage).flatMap(""""rows":(\d+)""".r.findFirstMatchIn(_))
-      .map(_.group(1).toLong)
+    metaField(stage, "rows").filter(_.isIntegralNumber).map(_.asLong)
 
   /** the stage's row total: the count its commit recorded, else (a meta
     * without one) a count of its data — 0 when it has no data file (an
     * EMPTY partitioned stage, or no stage at all). */
   def rows(stage: String): Long =
     recordedRows(stage).getOrElse(
-      if (listDataFiles(stage).isEmpty) 0L else spark.read.parquet(dataPath(stage)).count())
+      if (listDataFiles(stage).isEmpty) 0L else readStored(stage).count())
 
   /** LEGACY per-file lineage from the meta json (pre-r8 layout kept the
     * list inline) — migration read only; new roots keep lineage in the
     * side table. */
   private def metaFileRows(stage: String): Seq[(String, Long)] =
-    readMeta(stage).toSeq.flatMap { m =>
-      """\{"file":"((?:[^"\\]|\\.)*)","rows":(\d+)\}""".r.findAllMatchIn(m)
-        .map(g => (g.group(1).replace("\\\"", "\"").replace("\\\\", "\\"),
-                   g.group(2).toLong)).toSeq
-    }
+    metaField(stage, "files").toSeq.flatMap(_.elements().asScala
+      .map(f => (f.get("file").asText, f.get("rows").asLong)))
 
   private def listDataFiles(stage: String): Seq[Path] = {
     val dir = new Path(dataPath(stage))
@@ -502,9 +466,9 @@ final class CheckpointStore(root: String, spark: SparkSession,
     require(isComplete(stage), s"compact($stage): stage is not complete")
     val before = listDataFiles(stage)
     if (before.isEmpty) return CompactionReport(stage, 0L, 0L, 0, 0)
-    val df = readStage(stage, None)
+    val schema = recordedSchema(stage)
+    val df = read(stage, schema)
     val bucketed = df.columns.contains("_bucket")
-    val meta = readMeta(stage)
     // expected rows come from the recorded lineage TABLE when present
     // (the source of truth — a crash between a lineage append and the
     // meta rewrite leaves the json total stale), else the json total,
@@ -512,11 +476,7 @@ final class CheckpointStore(root: String, spark: SparkSession,
     val rows =
       if (lineageExists(stage)) lineageTotal(lineageDF(stage))
       else recordedRows(stage).getOrElse(df.count())
-    val upstream = meta.toSeq.flatMap { m =>
-      """"upstream":\[([^\]]*)\]""".r.findFirstMatchIn(m).toSeq.flatMap(
-        _.group(1).split(",").toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\""))
-          .filter(_.nonEmpty))
-    }
+    val upstream = metaField(stage, "upstream").toSeq.flatMap(_.elements().asScala.map(_.asText))
     val tmp = new Path(root, s"$stage._compacting")
     fs.delete(tmp, true)
     import org.apache.spark.sql.functions.col
@@ -550,12 +510,13 @@ final class CheckpointStore(root: String, spark: SparkSession,
     require(fs.rename(tmp, dst),
       s"compact($stage): rename $tmp -> $dst failed; stage left incomplete " +
         "(will recompute on next run)")
-    markComplete(stage, upstream)
+    markComplete(stage, upstream, schema)
     CompactionReport(stage, rows, rowsAfter, before.size, listDataFiles(stage).size)
   }
+}
 
-  private def jstr(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+object CheckpointStore {
+  private val mapper = new ObjectMapper()
 }
 
 final case class CompactionReport(stage: String, rowsBefore: Long, rowsAfter: Long,

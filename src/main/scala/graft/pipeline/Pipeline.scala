@@ -386,9 +386,7 @@ object Pipeline {
     * different columns and the exchanges never canonicalize equal). That
     * is fine at every call site: the builders are invoked where execution
     * is imminent, and runStageDF's RESUME path never constructs a stage
-    * thunk at all (Checkpoints.readStage probes the filesystem before
-    * touching its schema fallback — the thunk is only planned to recover
-    * an EMPTY stage's schema). */
+    * thunk at all (it reads the stage under its recorded schema). */
   private def pinned(df: DataFrame, materialize: Boolean): DataFrame =
     if (materialize) df.localCheckpoint(eager = false) else df
 
@@ -1204,25 +1202,9 @@ object Pipeline {
     val store = new CheckpointStore(root, spark, fingerprint = fingerprint)
     val dict = aliases.getOrElse(synthAliases(spark))
     val marker = new org.apache.hadoop.fs.Path(s"$root/_fold_inflight")
-    // all history reads carry the stage's KNOWN schema as the empty-stage
-    // fallback (a legitimately empty bucketed stage has ZERO part files,
-    // where raw parquet inference fails — Checkpoints.scala contract)
-    val docEnc = org.apache.spark.sql.Encoders.product[Doc]
-    val tripleEnc = org.apache.spark.sql.Encoders.product[TripleRow]
-    def withBucket(s: org.apache.spark.sql.types.StructType) =
-      s.add("_bucket", org.apache.spark.sql.types.LongType)
-    val canonSchema = Seq("subj_entity_id", "subj_canonical",
-                          "obj_entity_id", "obj_canonical")
-      .foldLeft(tripleEnc.schema)((s, c) => s.add(c, org.apache.spark.sql.types.StringType))
-    val stageSchema = Map(
-      "docs" -> withBucket(docEnc.schema),
-      "triples" -> withBucket(tripleEnc.schema),
-      "canonical" -> withBucket(canonSchema))
-    def readStore(stage: String) =
-      store.readData(stage, Some(stageSchema(stage))).drop("_bucket")
     def storeIds(stage: String) =
-      readStore(stage).select(col("doc_id")).distinct()
-    def asDocs(df: DataFrame) = df.select(col("doc_id"), col("spans")).as[Doc](docEnc)
+      store.readData(stage).select(col("doc_id")).distinct()
+    def asDocs(df: DataFrame) = df.select(col("doc_id"), col("spans")).as[Doc]
 
     val repaired = fs.exists(marker)
     if (repaired) {
@@ -1235,13 +1217,13 @@ object Pipeline {
       // order guarantees canonical ⊆ triples ⊆ docs:
       for (st <- Seq("docs", "triples", "canonical"))
         store.pruneUnrecorded(st)
-      val docsMissingT = asDocs(readStore("docs")
+      val docsMissingT = asDocs(store.readData("docs")
         .join(storeIds("triples"), Seq("doc_id"), "left_anti"))
       val repairT = extractTriples(segmentDocs(docsMissingT))
         .toDF().localCheckpoint()
       if (!repairT.isEmpty)
         store.appendStage(repairT, "triples", Seq("sentences"), bucketCol = Some("doc_id"))
-      val missingC = readStore("triples")
+      val missingC = store.readData("triples")
         .join(storeIds("canonical"), Seq("doc_id"), "left_anti").localCheckpoint()
       if (!missingC.isEmpty)
         store.appendStage(canonicalize(missingC.as[TripleRow], dict),
@@ -1276,14 +1258,14 @@ object Pipeline {
         val ppPath = s"$root/pairpred"
         val ppExisting =
           if (fs.exists(new org.apache.hadoop.fs.Path(ppPath, "_SUCCESS")))
-            spark.read.parquet(ppPath).drop("_bucket")
-          else pairPredAggregate(readStore("canonical"))
+            spark.read.parquet(ppPath)
+          else pairPredAggregate(store.readData("canonical"))
         val ppMerged = mergePairPred(ppExisting, pairPredAggregate(cNew)).localCheckpoint()
         val evPath = s"$root/type_evidence"
         val evExisting =
           if (fs.exists(new org.apache.hadoop.fs.Path(evPath, "_SUCCESS")))
             spark.read.parquet(evPath)
-          else typeEvidence(segmentDocs(asDocs(readStore("docs"))), dict)
+          else typeEvidence(segmentDocs(asDocs(store.readData("docs"))), dict)
         val ev = mergeTypeEvidence(evExisting, typeEvidence(sentsNew, dict)).localCheckpoint()
         store.appendStage(docsNew, "docs", Nil, bucketCol = Some("doc_id"))
         store.appendStage(tNew, "triples", Seq("sentences"), bucketCol = Some("doc_id"))
@@ -1317,13 +1299,12 @@ object Pipeline {
     * completeness check refuses (by design — compacting someone else's
     * half-written root would be data loss). */
   def compactRun(spark: SparkSession, checkpointRoot: String, fingerprint: String,
-                 withCoref: Boolean = false,
-                 maxRecordsPerFile: Long = 1L << 20): Seq[CompactionReport] = {
+                 withCoref: Boolean = false): Seq[CompactionReport] = {
     val store = new CheckpointStore(checkpointRoot, spark,
       fingerprint = s"$fingerprint,withCoref=$withCoref")
     // the work list is DERIVED from the store (every directory complete
     // under this fingerprint) — a stage added to the pipeline can never
     // silently escape compaction
-    store.completeStages.map(st => store.compact(st, maxRecordsPerFile))
+    store.completeStages.map(store.compact(_))
   }
 }

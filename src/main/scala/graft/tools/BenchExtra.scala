@@ -11,8 +11,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: runMain graft.tools.BenchExtra [--runs N] [--explain DIR]
   *        [--suffix S] [--noop] [query ...]
-  * With no query names, runs every declared query. Env contract matches
-  * Bench: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS.
+  * With no query names, runs every declared query. `--runs 0` only
+  * writes the plans (`--explain DIR`), timing nothing. Env contract
+  * matches Bench: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS.
   */
 object BenchExtra {
 
@@ -58,9 +59,11 @@ object BenchExtra {
           fn(spark, sfDir).count()
         (System.nanoTime() - t0) / 1e9
       }
-      val line = f"$name%-28s min=${times.min}%7.3f  runs=${times.map(t => f"$t%.3f").mkString(",")}"
-      println(line)
-      out.append(line).append('\n')
+      if (times.nonEmpty) {
+        val line = f"$name%-28s min=${times.min}%7.3f  runs=${times.map(t => f"$t%.3f").mkString(",")}"
+        println(line)
+        out.append(line).append('\n')
+      }
       spark.sparkContext.setJobDescription(null)
     }
     sys.env.get("BENCH_EXTRA_OUT").foreach(p =>

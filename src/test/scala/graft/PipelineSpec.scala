@@ -461,9 +461,8 @@ class PipelineSpec extends SparkSpecBase {
   test("resume of a complete non-empty stage never constructs its compute thunk") {
     // some computes (the weight derivations' capped materialization
     // under AQE) launch jobs at plan CONSTRUCTION — resume must read the
-    // stored parquet without ever building the thunk (readStage probes
-    // the filesystem BEFORE its schema fallback); the thunk may only be
-    // planned for an EMPTY stage's schema
+    // stored parquet under its recorded schema without ever building the
+    // thunk, empty or not
     val root = java.nio.file.Files.createTempDirectory("graft-resume-thunk").toString
     val store = new graft.pipeline.CheckpointStore(root, spark, fingerprint = "t=1")
     val pp = Seq(("a", "o1", "P", 2L), ("a", "o1", "Q", 1L))
@@ -474,7 +473,7 @@ class PipelineSpec extends SparkSpecBase {
     val resumed = store.runStageDF("w", bucketCol = Some("pred_src"))(
       sys.error("resume constructed the compute thunk"))
     assert(resumed.count() == 2L) // P→Q and Q→P over the one shared pair
-    // the EMPTY-stage corner still recovers its schema from the thunk
+    // the EMPTY-stage corner resumes under its recorded schema
     val empty = pp.filter($"support" < 0L)
     store.runStageDF("we", bucketCol = Some("pred_src"))(
       Pipeline.edgeWeightsFromPairPred(empty))
@@ -577,10 +576,71 @@ class PipelineSpec extends SparkSpecBase {
     val meta = new String(Files.readAllBytes(
       java.nio.file.Paths.get(s"$root/e/_graft_meta.json")), "UTF-8")
     assert(meta.contains("\"rows\":0,"), meta)
-    // resume path: inference has zero files to read — schema falls back
-    // to the (planned, never executed) compute
+    // resume path: zero files to infer from — the read takes the
+    // schema recorded in the meta
     val r2 = store.runStageDF("e", bucketCol = Some("k"))(empty)
     assert(r2.count() == 0 && r2.columns.toSeq == Seq("k", "v"))
+  }
+
+  test("an EMPTY stage resumes from its recorded schema without building its compute") {
+    val root = Files.createTempDirectory("graft-empty-resume").toString
+    val store = new graft.pipeline.CheckpointStore(root, spark, fingerprint = "e=2")
+    store.runStageDF("e", bucketCol = Some("k"))(Seq.empty[(String, Long)].toDF("k", "v"))
+    val resumed = store.runStageDF("e", bucketCol = Some("k"))(
+      sys.error("resume built the compute of an empty stage"))
+    assert(resumed.count() == 0 && resumed.columns.toSeq == Seq("k", "v"))
+  }
+
+  test("a meta without a recorded schema: a non-empty stage resumes, an empty one recomputes") {
+    import com.fasterxml.jackson.databind.node.ObjectNode
+    val root = Files.createTempDirectory("graft-meta-noschema").toString
+    val store = new graft.pipeline.CheckpointStore(root, spark, fingerprint = "s=1")
+    def full = (0L until 20L).map(i => (s"k$i", i)).toDF("k", "v")
+    def empty = Seq.empty[(String, Long)].toDF("k", "v")
+    store.runStageDF("full", bucketCol = Some("k"))(full)
+    store.runStageDF("empty", bucketCol = Some("k"))(empty)
+    // forge an older root: the meta as it was before schemas were recorded
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    for (st <- Seq("full", "empty")) {
+      val meta = java.nio.file.Paths.get(s"$root/$st/_graft_meta.json")
+      val node = mapper.readTree(Files.readAllBytes(meta)).asInstanceOf[ObjectNode]
+      assert(node.remove("schema") != null, s"$st: no recorded schema")
+      Files.write(meta, mapper.writeValueAsBytes(node))
+      Files.deleteIfExists(java.nio.file.Paths.get(s"$root/$st/._graft_meta.json.crc"))
+    }
+    assert(store.isComplete("full") && !store.isComplete("empty"))
+    val resumed = store.runStageDF("full", bucketCol = Some("k"))(
+      sys.error("recomputed a non-empty stage"))
+    assert(resumed.count() == 20L && resumed.columns.toSeq == Seq("k", "v"))
+    var computed = false
+    val recomputed = store.runStageDF("empty", bucketCol = Some("k")) { computed = true; empty }
+    assert(computed && recomputed.count() == 0L && store.isComplete("empty"))
+  }
+
+  test("an append whose columns drift from the recorded schema fails before writing") {
+    val root = Files.createTempDirectory("graft-append-drift").toString
+    val store = new graft.pipeline.CheckpointStore(root, spark, fingerprint = "d=1")
+    store.runStageDF("t", bucketCol = Some("k"))((0L until 10L).map(i => (i, s"v$i")).toDF("k", "v"))
+    def files() = {
+      def walk(f: java.io.File): Seq[(String, Long)] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+        else Seq(f.getPath -> f.lastModified())
+      walk(new java.io.File(root)).toSet
+    }
+    val before = files()
+    val extra = (10L until 12L).map(i => (i, s"v$i", 1)).toDF("k", "v", "extra")
+    val retyped = (10L until 12L).map(i => (i, i)).toDF("k", "v")
+    for (df <- Seq(extra, retyped)) {
+      val e = intercept[IllegalArgumentException](
+        store.appendStage(df, "t", Nil, bucketCol = Some("k")))
+      assert(e.getMessage.contains("appendStage(t)") &&
+        e.getMessage.contains("struct<k:bigint,v:string,_bucket:bigint>"), e.getMessage)
+      assert(files() == before, "a refused append must write nothing")
+    }
+    // column order is not part of the match
+    store.appendStage((10L until 12L).map(i => (s"v$i", i)).toDF("v", "k"),
+      "t", Nil, bucketCol = Some("k"))
+    assert(store.readData("t").count() == 12L)
   }
 
   test("a stage commit reads its output back once; a resume reads it once") {
@@ -598,11 +658,12 @@ class PipelineSpec extends SparkSpecBase {
     assert(freshPlain <= 3, s"fresh unbucketed commit ran $freshPlain jobs")
     assert(new java.io.File(root, "bucketed").listFiles()
       .count(_.getName.startsWith("_bucket=")) == 64)
-    // resume: one inference read (listing + schema)
+    // resume: a read under the recorded schema, no inference job; one
+    // listing (bucketed only)
     val resumedBucketed = jobs("resume-bucketed")(bucketed())
-    assert(resumedBucketed <= 2, s"bucketed resume ran $resumedBucketed jobs")
+    assert(resumedBucketed <= 1, s"bucketed resume ran $resumedBucketed jobs")
     val resumedPlain = jobs("resume-plain")(plain())
-    assert(resumedPlain <= 2, s"unbucketed resume ran $resumedPlain jobs")
+    assert(resumedPlain <= 0, s"unbucketed resume ran $resumedPlain jobs")
     assert(bucketed().collect().toSet == keyed.collect().toSet)
     assert(plain().count() == 1000L)
   }
@@ -615,8 +676,9 @@ class PipelineSpec extends SparkSpecBase {
     for (s <- graphStageNames)
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root, s))
     // the upstream stages resume; only the graph stages recompute. One
-    // pinned cap shared by the three stages runs 44 jobs here; capping
-    // once per stage (edges unpinned, both batteries pinned) ran 48
+    // pinned cap shared by the three stages runs 40 jobs here (44 while
+    // a resume inferred each stage's schema); capping once per stage
+    // (edges unpinned, both batteries pinned) ran 48
     val n = jobs("graph-stages")(Pipeline.run(spark, root, nDocs = nDocs))
     assert(n <= 46, s"recomputing the three graph stages ran $n jobs")
     for (s <- graphStageNames)
@@ -641,7 +703,8 @@ class PipelineSpec extends SparkSpecBase {
     assert(files() == before, "a no-op fold must write nothing")
     assert(new graft.pipeline.CheckpointStore(root, spark).rows("docs") == 250L)
     // one history anti-join, one segmentation of the new docs and one
-    // observed lineage write per append: 94 and 7 jobs here. Extracting
+    // observed lineage write per append: 91 and 6 jobs here (94 and 7
+    // while the history reads inferred their schema). Extracting
     // the whole slice, anti-joining all three stores and building the
     // merged aggregates before the no-op test ran 118 and 31
     assert(mutating <= 100, s"a mutating fold ran $mutating jobs")

@@ -395,7 +395,7 @@ class TypedWeightsSpec extends SparkSpecBase {
     assert(meta2.contains("\"rows\":55") && !meta2.contains("\"files\":"), meta2)
     // nothing to prune — every data file is recorded
     assert(store.pruneUnrecorded("t").isEmpty)
-    assert(store.readData("t", None).drop("_bucket").count() == 55L)
+    assert(store.readData("t").drop("_bucket").count() == 55L)
   }
 
   test("a stale meta-json total (lineage-append/meta-write crash window) self-heals on append") {
@@ -463,7 +463,7 @@ class TypedWeightsSpec extends SparkSpecBase {
     assert(meta.delete()); crc.delete()
     assert(store.pruneUnrecorded("t").isEmpty,
       "pruneUnrecorded must refuse a stage with lineage but no meta json")
-    assert(store.readData("t", None).drop("_bucket").count() == 60L,
+    assert(store.readData("t").drop("_bucket").count() == 60L,
       "no data file may be deleted in the refusal path")
   }
 }
