@@ -265,11 +265,14 @@ object PostProcess {
 
   /** processSentence + the reference's per-rule amendment counters and
     * V_CMP complement bucket (dudepparse.py:425-426,449) for the metrics
-    * aggregation. */
+    * aggregation — both are fields the amendment pass fills anyway. */
   def processSentenceWithMetrics(parse: DepParse,
                                  posTags: Option[Map[String, Seq[String]]],
-                                 ignorePostag: Boolean = false)
+                                 ignorePostag: Boolean = false,
+                                 addHalfCoarse: Boolean = false)
       : (SentenceRels, Map[String, Int], Map[String, Int]) = {
+    // one tree, two read-only extractors over it (the reference builds two
+    // identical trees, extract.py:71-73/:387-391 — pure duplication)
     val tree = new DepTree(parse)
     val fineRaw = new Extractor(tree, coarse = false).parse()
     val coarseExtractor = new Extractor(tree, coarse = true)
@@ -277,7 +280,7 @@ object PostProcess {
     val fine0 = tokenNormalize(translateNaryToBinaries(reformat(fineRaw)))
     val coarse0 = tokenNormalize(translateNaryToBinaries(reformat(coarseRaw)))
     val am = Amender.amendSentence(parse, fine0, coarse0, posTags, ignorePostag)
-    (finishSentence(parse, coarseExtractor, am), am.amendCounts, am.vcmpCounts)
+    (finishSentence(parse, coarseExtractor, am, addHalfCoarse), am.amendCounts, am.vcmpCounts)
   }
 
   /** Full per-sentence post-processing (reference post_processing,
@@ -290,25 +293,13 @@ object PostProcess {
   def processSentence(parse: DepParse,
                       posTags: Option[Map[String, Seq[String]]],
                       ignorePostag: Boolean = false,
-                      addHalfCoarse: Boolean = false): SentenceRels = {
-    // one tree, two read-only extractors over it (the reference builds two
-    // identical trees, extract.py:71-73/:387-391 — pure duplication)
-    val tree = new DepTree(parse)
-    val fineRaw = new Extractor(tree, coarse = false).parse()
-    val coarseExtractor = new Extractor(tree, coarse = true)
-    val coarseRaw = coarseExtractor.parse()
-
-    val fine0 = tokenNormalize(translateNaryToBinaries(reformat(fineRaw)))
-    val coarse0 = tokenNormalize(translateNaryToBinaries(reformat(coarseRaw)))
-
-    val am = Amender.amendSentence(parse, fine0, coarse0, posTags, ignorePostag)
-    finishSentence(parse, coarseExtractor, am, addHalfCoarse)
-  }
+                      addHalfCoarse: Boolean = false): SentenceRels =
+    processSentenceWithMetrics(parse, posTags, ignorePostag, addHalfCoarse)._1
 
   /** shared tail of post_processing after the amendment stage. */
   private def finishSentence(parse: DepParse, coarseExtractor: Extractor,
                              am: Amender.AmendResult,
-                             addHalfCoarse: Boolean = false): SentenceRels = {
+                             addHalfCoarse: Boolean): SentenceRels = {
     var fine = am.prunedFine
     var coarse = am.prunedCoarse
     var amendFine = am.amendFine

@@ -451,38 +451,6 @@ object MultimodalOps {
     }
   }
 
-  final case class ResizedAsset(doc_id: String, media_ref: String, kind: String,
-                                width: Int, height: Int, out_width: Int, out_height: Int)
-  final case class FrameSample(doc_id: String, media_ref: String, frame_idx: Int)
-
-  /** resize transform (aspect-preserving fit into maxDim). The geometry is
-    * real; producing the resized pixels is the same STUB seam as
-    * decodeHeader — a real codec writes the output payload here. */
-  def resize(assets: Dataset[MediaAsset], maxDim: Int = 256): Dataset[ResizedAsset] = {
-    import assets.sparkSession.implicits._
-    assets.mapPartitions { batch =>
-      batch.filter(a => a.kind == "image" || a.kind == "video").map { a =>
-        val (w, h, _, _) = decodePayload(a.payload, a.kind)
-        val scale = math.min(1.0, maxDim.toDouble / math.max(w, h))
-        ResizedAsset(a.doc_id, a.media_ref, a.kind, w, h,
-                     math.max(1, (w * scale).toInt), math.max(1, (h * scale).toInt))
-      }
-    }
-  }
-
-  /** uniform frame sampling for video assets: k frames evenly spaced over
-    * [0, n_frames) — the batch shape a real frame extractor uses. */
-  def frameSample(assets: Dataset[MediaAsset], k: Int = 8): Dataset[FrameSample] = {
-    import assets.sparkSession.implicits._
-    assets.mapPartitions { batch =>
-      batch.filter(_.kind == "video").flatMap { a =>
-        val (_, _, frames, _) = decodePayload(a.payload, a.kind)
-        val n = math.min(k, frames)
-        (0 until n).iterator.map(i => FrameSample(a.doc_id, a.media_ref, i * frames / math.max(n, 1)))
-      }
-    }
-  }
-
   /** exact media dedup: group identical payload BYTES by content hash
     * (md5 over the hex rendering — portable to the SQL oracle), keep the
     * smallest doc_id as keeper. The binary-column counterpart of

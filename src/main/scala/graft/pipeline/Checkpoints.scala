@@ -95,12 +95,12 @@ final class CheckpointStore(root: String, spark: SparkSession,
   private def recordedSchema(stage: String): Option[StructType] =
     metaField(stage, "schema").map(s => DataType.fromJson(s.toString).asInstanceOf[StructType])
 
-  /** a crashed incremental fold ([[graft.pipeline.Pipeline.incrementalFold]])
+  /** a crashed incremental fold ([[graft.pipeline.RunBook.incrementalFold]])
     * leaves this marker at the root; while it exists the stores may be
     * mutually inconsistent (e.g. triples holding a slice canonical lacks),
     * so NO stage under this root may be treated as complete — a one-shot
     * resume would otherwise silently reuse half-mutated data. The fold
-    * itself repairs forward; [[Pipeline.runFromDocs]] invalidates and
+    * itself repairs forward; [[RunBook.runFromDocs]] invalidates and
     * recomputes. */
   def foldInFlight: Boolean = fs.exists(new Path(root, "_fold_inflight"))
 
@@ -444,16 +444,16 @@ final class CheckpointStore(root: String, spark: SparkSession,
     }
   }
 
-  /** Rewrite a completed stage's data files into `maxRecordsPerFile`-sized
-    * files — the plain-parquet analogue of Iceberg's rewrite_data_files
+  /** Rewrite a completed stage's data files into files of at most 2^20
+    * rows — the plain-parquet analogue of Iceberg's rewrite_data_files
     * maintenance action. A 10^12-doc checkpointed run accumulates small
     * files (per-slice sinks, skewed buckets, streaming micro-batches);
     * compaction restores scan efficiency without recomputing the stage.
     *
     * Layout is preserved: a `_bucket=`-partitioned stage is rewritten
     * bucket-aligned (repartition on `_bucket`, so pruning keeps working);
-    * an unbucketed stage is rewritten to ceil(rows / maxRecordsPerFile)
-    * files. The rewrite's row COUNT is verified against the stage's
+    * an unbucketed stage is rewritten to ceil(rows / 2^20) files. The
+    * rewrite's row COUNT is verified against the stage's
     * recorded lineage (`"rows"` in `_graft_meta.json` — no pre-scan of a
     * TB-scale stage just to recount it) BEFORE the swap — on any failure
     * the original files stay untouched. The swap itself is
@@ -462,7 +462,7 @@ final class CheckpointStore(root: String, spark: SparkSession,
     * than silently half-compacted; in production this whole method is one
     * atomic Iceberg snapshot commit. Fingerprint and upstream lineage
     * carry through; only file lineage and snapshot id change. */
-  def compact(stage: String, maxRecordsPerFile: Long = 1L << 20): CompactionReport = {
+  def compact(stage: String): CompactionReport = {
     require(isComplete(stage), s"compact($stage): stage is not complete")
     val before = listDataFiles(stage)
     if (before.isEmpty) return CompactionReport(stage, 0L, 0L, 0, 0)
@@ -479,15 +479,16 @@ final class CheckpointStore(root: String, spark: SparkSession,
     val upstream = metaField(stage, "upstream").toSeq.flatMap(_.elements().asScala.map(_.asText))
     val tmp = new Path(root, s"$stage._compacting")
     fs.delete(tmp, true)
+    val perFile = 1L << 20 // rows per rewritten file
     import org.apache.spark.sql.functions.col
     if (bucketed)
       df.repartition(col("_bucket"))
-        .write.option("maxRecordsPerFile", maxRecordsPerFile)
+        .write.option("maxRecordsPerFile", perFile)
         .mode("overwrite").partitionBy("_bucket").parquet(tmp.toString)
     else {
-      val nFiles = math.max(1L, (rows + maxRecordsPerFile - 1) / maxRecordsPerFile).toInt
+      val nFiles = math.max(1L, (rows + perFile - 1) / perFile).toInt
       df.repartition(nFiles)
-        .write.option("maxRecordsPerFile", maxRecordsPerFile)
+        .write.option("maxRecordsPerFile", perFile)
         .mode("overwrite").parquet(tmp.toString)
     }
     val rowsAfter = spark.read.parquet(tmp.toString).count()

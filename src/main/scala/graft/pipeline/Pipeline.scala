@@ -26,6 +26,7 @@ import graft.synth.{FixtureParser, SynthDocs, Templates}
   * to a row, never become distributed joins (SURVEY.md §2.3). This is the
   * key 100 TB property: extraction cost scales linearly with input
   * partitions, with zero shuffle before the first aggregation.
+  * The run books that compose these transforms live in [[RunBook]].
   */
 object Pipeline {
 
@@ -366,7 +367,7 @@ object Pipeline {
     * BOUNDED (≤ k rows per argument pair, pairpred-sized ÷ cap), so a
     * `localCheckpoint` — the GraphOps iteration pattern — trades that
     * re-execution for one bounded in-memory/disk materialization. The
-    * defaults are THE cap of the run book ([[graphStages]]) and the
+    * defaults are THE cap of the run book ([[RunBook.graphStages]]) and the
     * stream path (`StreamingOps.writeEdgeSurfaces`). Loss story: lineage
     * is truncated, so a lost executor mid-derivation fails the job
     * instead of recomputing (same documented tradeoff as GraphOps'
@@ -420,7 +421,7 @@ object Pipeline {
     * pinned by default ([[cappedCheckpointed]]: the evidence core, the
     * per-pred marginals and the one-row total all read it;
     * `materializeCapped = false` restores the pure-lazy plan). The run
-    * book does not call this builder: [[graphStages]] caps once and
+    * book does not call this builder: [[RunBook.graphStages]] caps once and
     * derives this surface, the edges and the typed battery from that one
     * pinned table. */
   def edgeWeightsFromPairPred(pairPred: DataFrame, maxPredsPerPair: Int = 32,
@@ -431,7 +432,7 @@ object Pipeline {
 
   /** the weight derivation over an already-capped (ideally pinned)
     * pair-pred table — lets a caller that also needs the other surfaces
-    * ([[graphStages]], `StreamingOps.writeEdgeSurfaces`) derive them all
+    * ([[RunBook.graphStages]], `StreamingOps.writeEdgeSurfaces`) derive them all
     * from one capped materialization instead of re-running the cap per
     * surface. */
   private[graft] def edgeWeightsFromCapped(capped: DataFrame): DataFrame =
@@ -925,105 +926,11 @@ object Pipeline {
       .select(col("doc_id"), (col("spans_in") <=> col("spans_out")).as("preserved"))
   }
 
-  // ------------------------------------------------------------ full run
-  final case class RunResult(triples: DataFrame, edges: DataFrame, docsOut: Dataset[Doc])
-
-  /** end-to-end run with per-stage checkpoints over the synthetic corpus.
-    * The checkpoint store is fingerprinted with the run parameters:
-    * rerunning against the same root with different nDocs/sentsPerDoc
-    * recomputes instead of silently returning stale stage outputs. */
-  def run(spark: SparkSession, checkpointRoot: String, nDocs: Long,
-          sentsPerDoc: Int = SynthDocs.DefaultSentsPerDoc,
-          withCoref: Boolean = false): RunResult =
-    runFromDocs(spark, checkpointRoot, synthDocs(spark, nDocs, sentsPerDoc),
-                fingerprint = s"nDocs=$nDocs,sentsPerDoc=$sentsPerDoc,buckets=64",
-                aliases = None, withCoref = withCoref)
-
-  /** end-to-end run over an ARBITRARY docs table (corpus-reader output,
-    * Iceberg scan, …). `fingerprint` identifies the input + parameters for
-    * checkpoint invalidation; `aliases` defaults to the synthetic dict.
-    * `withCoref = true` adds the reference's coref second pass as its own
-    * checkpointed stage and merges the `*_corefed` relation lists into the
-    * canonicalized output (the reference's merged entry shape,
-    * merge_parsed_results.py + dudepparse.py:2149-2167) — the flag is
-    * folded into the store fingerprint so toggling it invalidates the
-    * downstream stages instead of silently reusing them. */
-  def runFromDocs(spark: SparkSession, checkpointRoot: String, inputDocs: Dataset[Doc],
-                  fingerprint: String,
-                  aliases: Option[Dataset[AliasRow]] = None,
-                  withCoref: Boolean = false): RunResult = {
-    import spark.implicits._
-    val store = new CheckpointStore(checkpointRoot, spark,
-      fingerprint = s"$fingerprint,withCoref=$withCoref")
-    // a crashed incremental fold left this root suspect: wipe completion
-    // metas + the fold-owned pairpred, clear the marker, recompute all
-    // (the store owns the layout — see CheckpointStore.recoverFoldCrash)
-    store.recoverFoldCrash()
-    val docs = store.runStage("docs", bucketCol = Some("doc_id"))(inputDocs)
-    val sentences = store.runStage("sentences", Seq("docs"))(segmentDocs(docs))
-    val base = store.runStage("triples", Seq("sentences"), bucketCol = Some("doc_id"))(
-      extractTriples(sentences))
-    val triples =
-      if (!withCoref) base
-      else base.unionByName(
-        store.runStage("coref_triples", Seq("docs"), bucketCol = Some("doc_id"))(
-          corefTriples(docs)))
-    // canonical is a DataFrame stage, checkpointed with the same
-    // explicit bucketed layout as the typed stages (by doc_id, co-located
-    // with triples)
-    val dict = aliases.getOrElse(synthAliases(spark))
-    val canonBack = store.runStageDF("canonical", Seq("triples"),
-      bucketCol = Some("doc_id"))(
-      canonicalize(triples, dict))
-    // the graph stages read the checkpointed canonical parquet, so the
-    // shared capped subtree's re-scans are cheap. Type evidence comes
-    // from the checkpointed sentences (entity-link mentions ⋈ annotator
-    // labels), derived inline — the fold maintains the SAME surface from
-    // its additive `type_evidence` aggregate ([[incrementalFold]])
-    val edgesBack = graphStages(store, pairPredAggregate(canonBack),
-      entityTypesFromEvidence(typeEvidence(sentences, dict)))
-    RunResult(canonBack, edgesBack, docs)
-  }
-
-  /** the three entailment-graph stages — `edges`, `edge_weights` and
-    * `typed_edge_weights` — derived from ONE pinned cap of the pair-pred
-    * aggregate ([[cappedCheckpointed]]): the edges select over the
-    * evidence core, the count battery, and the typed battery joining the
-    * entity types onto the capped rows ([[typedFromCapped]]). The cap is
-    * a `lazy val` and the entity types a thunk, so a stage that resumes
-    * never builds them and a fully resumed run materializes no pin.
-    * Shared by [[runFromDocs]] and [[incrementalFold]]; all three are
-    * bucketed by pred_src — the entailment-graph consumer reads by
-    * predicate, so bucket predicates prune its scans. Returns the edges
-    * stage. */
-  private def graphStages(store: CheckpointStore, pairPred: DataFrame,
-                          entityTypes: => DataFrame): DataFrame = {
-    def stage(name: String)(df: => DataFrame) =
-      store.runStageDF(name, Seq("canonical"), bucketCol = Some("pred_src"))(df)
-    lazy val capped = cappedCheckpointed(pairPred)
-    val edges = stage("edges")(edgesFromCapped(capped))
-    stage("edge_weights")(edgeWeightsFromCapped(capped))
-    stage("typed_edge_weights")(typedFromCapped(capped, entityTypes))
-    edges
-  }
-
-  // ------------------------------------------------------- incremental
-  /** `newDocs` = the docs this fold appended; `deltaRelTotals` = their
-    * triple rows' per-list counts (the ADDITIVE stats delta — rel totals
-    * are pure counts, so the caller merges them into the previous stats
-    * instead of rescanning the store); `repaired` = this fold found a
-    * crashed predecessor's marker and reconciled the stores first — the
-    * crashed fold's rows are in the stores but in NO recorded delta, so
-    * any additive derived state (stats.json) must be rebuilt from the
-    * stores, not incremented. Store totals (docs, edges) are the rows
-    * each stage's commit recorded ([[CheckpointStore.rows]]). */
-  final case class IncrementalResult(newDocs: Long,
-                                     deltaRelTotals: Seq[(String, Long)],
-                                     repaired: Boolean)
-
+  // ------------------------------------------------- fold root + pins
   /** the fold-root preconditions, callable BEFORE any corpus work — a
     * rejected --incremental invocation must not have scanned or written
-    * anything (Main checks this up front; incrementalFold re-checks). */
+    * anything (Main checks this up front; [[RunBook.incrementalFold]]
+    * re-checks). */
   def validateFoldRoot(spark: SparkSession, root: String,
                        aliasSpec: Option[String] = None): Unit = {
     val fs = new org.apache.hadoop.fs.Path(root)
@@ -1133,178 +1040,5 @@ object Pipeline {
     def path(pin: String) = pin match { case HashedPin(p) => p; case other => other }
     if (hashed(prev) && hashed(cur)) prev == cur
     else path(prev) == path(cur)
-  }
-
-  /** Incremental maintenance of an EXISTING run root: fold a fresh corpus
-    * slice into the maintained docs/triples/canonical stores (doc-
-    * granular, idempotent — a re-submitted or overlapping slice never
-    * duplicates a doc) and re-derive the entailment edges through the
-    * incremental aggregate path. This is the run-book surface of the
-    * operators the kg_slice_merge / kg_edges_incr oracles prove:
-    *
-    *   fresh docs ⋉̸ docs-store ids              (the ONE delta: new docs)
-    *   → segment the new docs once → extract → canonicalize
-    *   → pairPredAggregate(canonical delta) folded into the maintained
-    *     `pairpred` aggregate ([[mergePairPred]], additive, agg-sized),
-    *     the new docs' type evidence into `type_evidence` the same way
-    *   → APPEND to docs + triples + canonical IN THAT ORDER (same bucket
-    *     layout; history files untouched — Iceberg append, not rewrite;
-    *     the order maintains canonical ⊆ triples ⊆ docs under any crash)
-    *   → [[graphStages]] re-derived from the merged aggregates (the
-    *     non-additive cap/expansion — never rescans the corpus).
-    *
-    * PRECONDITION of the one delta: when it is computed, every stored doc
-    * has all its triple and canonical rows (canonical ⊆ triples ⊆ docs,
-    * doc-complete). A committed fold or one-shot run leaves the root so,
-    * and the repair pass below restores it after a crash — the
-    * `_fold_inflight` marker brackets the only window where it fails.
-    * So a doc id already stored has nothing left to append anywhere and
-    * is ignored, even if its content changed (existing rows win, as in
-    * [[mergeSliceIncrement]]). A slice with no new doc, and no repair,
-    * is a NO-OP: nothing is segmented, extracted, aggregated or written.
-    *
-    * CRASH SAFETY: parquet has no atomic multi-table commit (Iceberg
-    * does — that is the production seam), so the fold brackets its
-    * mutations with a `_fold_inflight` marker. A fold that finds the
-    * marker runs REPAIR first: docs missing from triples are
-    * re-extracted, triples missing from canonical re-canonicalized
-    * (both doc-granular appends), and the fold-owned `pairpred` and
-    * `type_evidence` aggregates are DROPPED, so the fold re-derives both
-    * from the reconciled stores as it would for a root that never had
-    * them (the repair path's only non-slice-sized cost; the normal path
-    * never pays it).
-    * Every mutation is individually idempotent, so repair + re-fold
-    * always converges to the one-shot result.
-    *
-    * The existing corpus is NEVER re-extracted or re-segmented on the
-    * normal path: at 100 TB the cost is the new docs' extraction + one
-    * doc-id column scan of history + aggregate-sized folds. A
-    * missing `pairpred` store (a root written before this path existed)
-    * is derived once from the canonical store and maintained from then
-    * on. The updated stages are re-stamped with THIS fingerprint, so a
-    * later rerun of the original one-shot command invalidates and
-    * recomputes instead of silently reusing the folded store.
-    *
-    * Restriction (ENFORCED): the root must have been built WITHOUT
-    * --coref — the fresh slice runs base extraction only, and folding
-    * base-only rows into a base+coref store would mix entry shapes per
-    * doc (new docs would permanently lack corefed contributions). */
-  def incrementalFold(spark: SparkSession, root: String, freshDocs: Dataset[Doc],
-                      fingerprint: String,
-                      aliases: Option[Dataset[AliasRow]] = None,
-                      beforeCommit: IncrementalResult => Unit = _ => ()): IncrementalResult = {
-    import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    validateFoldRoot(spark, root,
-      "aliases=([^,]*)".r.findFirstMatchIn(fingerprint)
-        .map(m => decodePin(m.group(1))))
-    val store = new CheckpointStore(root, spark, fingerprint = fingerprint)
-    val dict = aliases.getOrElse(synthAliases(spark))
-    val marker = new org.apache.hadoop.fs.Path(s"$root/_fold_inflight")
-    def storeIds(stage: String) =
-      store.readData(stage).select(col("doc_id")).distinct()
-    def asDocs(df: DataFrame) = df.select(col("doc_id"), col("spans")).as[Doc]
-
-    val repaired = fs.exists(marker)
-    if (repaired) {
-      // REPAIR: a previous fold died mid-mutation. FIRST drop any data
-      // files the crashed append committed but never recorded in lineage
-      // (a mid-job-commit crash can expose a SUBSET of an append's files,
-      // leaving a doc's rows PARTIALLY present — invisible to doc-level
-      // anti-joins; pruning restores the last recorded-consistent state,
-      // Iceberg's orphan-file semantics). THEN reconcile forward — append
-      // order guarantees canonical ⊆ triples ⊆ docs:
-      for (st <- Seq("docs", "triples", "canonical"))
-        store.pruneUnrecorded(st)
-      val docsMissingT = asDocs(store.readData("docs")
-        .join(storeIds("triples"), Seq("doc_id"), "left_anti"))
-      val repairT = extractTriples(segmentDocs(docsMissingT))
-        .toDF().localCheckpoint()
-      if (!repairT.isEmpty)
-        store.appendStage(repairT, "triples", Seq("sentences"), bucketCol = Some("doc_id"))
-      val missingC = store.readData("triples")
-        .join(storeIds("canonical"), Seq("doc_id"), "left_anti").localCheckpoint()
-      if (!missingC.isEmpty)
-        store.appendStage(canonicalize(missingC.as[TripleRow], dict),
-          "canonical", Seq("triples"), bucketCol = Some("doc_id"))
-      // the fold-owned aggregates are dropped; the mutating branch below
-      // re-derives each from the reconciled stores before the first append
-      store.dropFoldAggregates()
-      // marker stays until THIS fold completes
-    } else {
-      fs.create(marker, true).close()
-    }
-
-    // the ONE delta: the slice's docs the docs store lacks, pinned (eager
-    // localCheckpoint) before any append below mutates the store
-    val docsNew = freshDocs.toDF()
-      .join(storeIds("docs"), Seq("doc_id"), "left_anti").localCheckpoint()
-    val newDocs = docsNew.count()
-    val deltaRelTotals =
-      if (!repaired && newDocs == 0) Nil // NO-OP: build and write nothing
-      else {
-        // every delta and merged aggregate below is MATERIALIZED before
-        // the first append: the pre-aggregate fallbacks read the canonical
-        // and docs stores, which must not see the delta docs twice. The
-        // new docs are segmented ONCE, for extraction and type evidence
-        val sentsNew = segmentDocs(asDocs(docsNew)).localCheckpoint()
-        val tNew = extractTriples(sentsNew).toDF().localCheckpoint()
-        val cNew = canonicalize(tNew.as[TripleRow], dict).localCheckpoint()
-        // the maintained additive aggregates; a root written before one
-        // existed, or whose repair dropped it, derives it once from the
-        // stores and maintains it from then on. The pins also break each
-        // read/overwrite cycle
-        val ppPath = s"$root/pairpred"
-        val ppExisting =
-          if (fs.exists(new org.apache.hadoop.fs.Path(ppPath, "_SUCCESS")))
-            spark.read.parquet(ppPath)
-          else pairPredAggregate(store.readData("canonical"))
-        val ppMerged = mergePairPred(ppExisting, pairPredAggregate(cNew)).localCheckpoint()
-        val evPath = s"$root/type_evidence"
-        val evExisting =
-          if (fs.exists(new org.apache.hadoop.fs.Path(evPath, "_SUCCESS")))
-            spark.read.parquet(evPath)
-          else typeEvidence(segmentDocs(asDocs(store.readData("docs"))), dict)
-        val ev = mergeTypeEvidence(evExisting, typeEvidence(sentsNew, dict)).localCheckpoint()
-        store.appendStage(docsNew, "docs", Nil, bucketCol = Some("doc_id"))
-        store.appendStage(tNew, "triples", Seq("sentences"), bucketCol = Some("doc_id"))
-        store.appendStage(cNew, "canonical", Seq("triples"), bucketCol = Some("doc_id"))
-        ppMerged.write.mode("overwrite").parquet(ppPath)
-        ev.write.mode("overwrite").parquet(evPath)
-        // re-derive edges and both weight surfaces from the merged
-        // aggregates and overwrite the stages (runStageDF under THIS
-        // fingerprint re-stamps the meta; the standing marker keeps
-        // isComplete false here, which is what a mutating fold needs). A
-        // pre-weights root simply gains the weight stages on its first
-        // mutating fold
-        graphStages(store, ppMerged, entityTypesFromEvidence(ev))
-        tNew.groupBy(col("rel_list")).count()
-          .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      }
-    val result = IncrementalResult(newDocs, deltaRelTotals, repaired)
-    // derived-state refresh (stats.json) runs INSIDE the crash bracket:
-    // if it dies, the marker still stands and the next fold's repair
-    // rebuilds everything — no window where the stores committed but the
-    // derived state silently never catches up
-    beforeCommit(result)
-    fs.delete(marker, false) // fold committed
-    result
-  }
-
-  /** Compact every completed stage of a `runFromDocs` checkpoint root —
-    * the post-run maintenance pass (per-slice sinks and skewed buckets
-    * leave small files behind; see [[CheckpointStore.compact]]). Must be
-    * called with the SAME fingerprint/withCoref the run used, or the
-    * completeness check refuses (by design — compacting someone else's
-    * half-written root would be data loss). */
-  def compactRun(spark: SparkSession, checkpointRoot: String, fingerprint: String,
-                 withCoref: Boolean = false): Seq[CompactionReport] = {
-    val store = new CheckpointStore(checkpointRoot, spark,
-      fingerprint = s"$fingerprint,withCoref=$withCoref")
-    // the work list is DERIVED from the store (every directory complete
-    // under this fingerprint) — a stage added to the pipeline can never
-    // silently escape compaction
-    store.completeStages.map(store.compact(_))
   }
 }

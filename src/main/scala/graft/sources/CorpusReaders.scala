@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.types._
-import graft.model.SentenceRow
 import graft.segment.Segmenter
 
 /** Corpus-specific JSONL readers — the reference's three preprocessing
@@ -161,7 +160,7 @@ object CorpusReaders {
 
   /** preprocessed docs → the engine's interleaved-docs contract: one text
     * span per admitted sentence, offset = original-chunk lineage (media-
-    * free corpora). Feeds Pipeline.runFromDocs so a reference user can
+    * free corpora). Feeds RunBook.runFromDocs so a reference user can
     * run their corpus through the full checkpointed pipeline. */
   def toDocs(docs: Dataset[PreprocessedDoc]): Dataset[graft.model.Doc] = {
     import docs.sparkSession.implicits._
@@ -170,18 +169,6 @@ object CorpusReaders {
         d.splitted_text.zip(d.split_mapping).map {
           case (s, chunk) => graft.model.Span("text", s, null, chunk)
         })
-    }
-  }
-
-  /** preprocessed docs → the engine's sentences table; `split_mapping`
-    * survives as `span_offset` (original-chunk lineage). One narrow
-    * flatMap, no shuffle. */
-  def toSentences(docs: Dataset[PreprocessedDoc]): Dataset[SentenceRow] = {
-    import docs.sparkSession.implicits._
-    docs.flatMap { d =>
-      d.splitted_text.zip(d.split_mapping).zipWithIndex.map {
-        case ((sent, chunk), sid) => SentenceRow(d.doc_id, chunk, sid, sent)
-      }
     }
   }
 }

@@ -303,9 +303,9 @@ object StreamingOps {
     * pinned cap, the run book's ([[graft.pipeline.Pipeline.cappedCheckpointed]])
     * — deriving each through its public builder would re-run the cap
     * (window top-k) once per surface per batch. */
-  private def writeEdgeSurfaces(merged: DataFrame, edgesPath: String,
-                                weightsPath: Option[String],
-                                typed: Option[(DataFrame, String)] = None): Unit = {
+  private[graft] def writeEdgeSurfaces(merged: DataFrame, edgesPath: String,
+                                       weightsPath: Option[String],
+                                       typed: Option[(DataFrame, String)] = None): Unit = {
     import graft.pipeline.Pipeline
     val capped = Pipeline.cappedCheckpointed(merged)
     Pipeline.edgesFromCapped(capped).write.mode("overwrite").parquet(edgesPath)

@@ -74,7 +74,8 @@ class CorpusReaderSpec extends SparkSpecBase {
     assert(d.splitted_text.length == 3, d.splitted_text.toString)
     assert(d.split_mapping == Vector(3, 7, 7), d.split_mapping.toString)
     // and the lineage survives into the sentences table as span_offset
-    val sents = CorpusReaders.toSentences(out.docs).collect().sortBy(_.sent_id)
+    val sents = graft.pipeline.Pipeline.segmentDocs(CorpusReaders.toDocs(out.docs))
+      .collect().sortBy(_.sent_id)
     assert(sents.map(_.span_offset).toSeq == Seq(3, 7, 7))
     assert(sents.map(_.sent).toSeq == d.splitted_text)
   }
@@ -146,11 +147,11 @@ class CorpusReaderSpec extends SparkSpecBase {
       s"""{"uuid":"w2","title":"","text":${mapper.writeValueAsString(text)}}"""))
     val docs = CorpusReaders.toDocs(CorpusReaders.readWebhose(spark, dir).docs)
     val root = java.nio.file.Files.createTempDirectory("graft-reader-run").toString
-    val r1 = graft.pipeline.Pipeline.runFromDocs(spark, root, docs, fingerprint = "webhose-fixture")
+    val r1 = graft.pipeline.RunBook.runFromDocs(spark, root, docs, fingerprint = "webhose-fixture")
     assert(r1.triples.count() > 0)
     assert(r1.docsOut.count() == 2)
     // resume from checkpoints returns identical data
-    val r2 = graft.pipeline.Pipeline.runFromDocs(spark, root, docs, fingerprint = "webhose-fixture")
+    val r2 = graft.pipeline.RunBook.runFromDocs(spark, root, docs, fingerprint = "webhose-fixture")
     assert(r2.triples.count() == r1.triples.count())
   }
 
@@ -162,7 +163,8 @@ class CorpusReaderSpec extends SparkSpecBase {
     val mapper = new ObjectMapper()
     val dir = writeJsonl(Seq(
       s"""{"uuid":"w1","title":"","text":${mapper.writeValueAsString(text)}}"""))
-    val sents = CorpusReaders.toSentences(CorpusReaders.readWebhose(spark, dir).docs)
+    val sents = graft.pipeline.Pipeline.segmentDocs(
+      CorpusReaders.toDocs(CorpusReaders.readWebhose(spark, dir).docs))
     val triples = graft.pipeline.Pipeline.extractTriples(sents).collect()
     assert(triples.nonEmpty, "no triples extracted from reader output")
   }

@@ -37,6 +37,13 @@ class MainSpec extends SparkSpecBase {
     val excluded = spark.read.parquet(s"$out/excluded")
     assert(excluded.select("doc_id").collect().map(_.getString(0)).toSet == Set("m3"))
     assert(new java.io.File(s"$out/excluded/_graft_meta.json").exists())
+    // the exact fingerprint strings the metas record: the run's (reader,
+    // alias pin, coref flag) on every stage, the reader's alone on the
+    // excluded sink
+    def fingerprint(stage: String) = mapper.readTree(
+      Files.readString(Paths.get(s"$out/$stage/_graft_meta.json"))).get("fingerprint").asText
+    assert(fingerprint("docs") == s"reader=webhose,input=$in,aliases=synth,withCoref=true")
+    assert(fingerprint("excluded") == s"reader=webhose,input=$in")
     // stats.json parses and carries per-list totals
     val stats = mapper.readTree(Files.readString(Paths.get(s"$out/stats.json")))
     assert(stats.get("docs").asLong() == 2L)
@@ -423,19 +430,23 @@ class MainSpec extends SparkSpecBase {
     assert(spark.read.parquet(s"$out/edge_weights_typed_stream")
       .collect().map(_.toSeq).toSet == batchTyped,
       "stream-maintained TYPED weights diverged from batch")
-    // a store maintained BEFORE the weight surfaces existed (simulated by
-    // deleting them) is backfilled on the next drain even when no new
-    // batch arrives (foreachBatch never fires — the backfill reads the
-    // committed aggregate generations directly); the typed backfill
-    // reads BOTH generations
+    // a store that lost its derived surfaces (simulated by deleting
+    // them) is backfilled on the next drain even when no new batch
+    // arrives (foreachBatch never fires — the backfill reads the committed
+    // aggregate generations directly); the typed backfill reads BOTH
+    // generations
     locally {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
       }
+      rm(new java.io.File(s"$out/edges_stream"))
       rm(new java.io.File(s"$out/edge_weights_stream"))
       rm(new java.io.File(s"$out/edge_weights_typed_stream"))
       Main.main(Array("--reader", "docs-json", "--input", in, "--out", out,
                       "--stream-once"))
+      val refilledEdges = spark.read.parquet(s"$out/edges_stream")
+        .collect().map(_.toSeq).toSet
+      assert(refilledEdges == batch, "post-drain edge backfill diverged")
       val refilled = spark.read.parquet(s"$out/edge_weights_stream")
         .collect().map(_.toSeq).toSet
       assert(refilled == batchW, "post-drain weight backfill diverged")

@@ -384,20 +384,6 @@ class OpsSpec extends SparkSpecBase {
     assert(realFeats == stubFeats)
   }
 
-  test("multimodal resize and frame sampling honor geometry") {
-    val assets = MultimodalOps.mediaAssets(Pipeline.synthDocs(spark, 80))
-    val resized = MultimodalOps.resize(assets, maxDim = 200).collect()
-    assert(resized.nonEmpty)
-    assert(resized.forall(r => math.max(r.out_width, r.out_height) <= 200))
-    assert(resized.forall(r => r.out_width * r.height == r.out_height * r.width ||
-                               math.abs(r.out_width.toDouble / r.out_height - r.width.toDouble / r.height) < 0.1))
-    val frames = MultimodalOps.frameSample(assets, k = 4).collect()
-    assert(frames.nonEmpty)
-    val byRef = frames.groupBy(_.media_ref)
-    assert(byRef.values.forall(_.length <= 4))
-    assert(frames.forall(_.frame_idx >= 0))
-  }
-
   test("winnowing fingerprints are stable and text-sensitive") {
     val fp = DedupOps.winnowing(plantedDocs).collect()
     assert(fp.length == plantedDocs.count())

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import graft.amend.PostProcess
 import graft.model.TripleRow
-import graft.pipeline.Pipeline
+import graft.pipeline.{Pipeline, RunBook}
 import graft.synth.{FixtureParser, SynthDocs}
 
 /** End-to-end pipeline spec: docs → sentences → triples → canonical →
@@ -227,7 +227,7 @@ class PipelineSpec extends SparkSpecBase {
 
   test("withCoref run merges *_corefed lists into the canonicalized output and resumes") {
     val root = Files.createTempDirectory("graft-coref-run").toString
-    val r1 = Pipeline.run(spark, root, nDocs = 60, withCoref = true)
+    val r1 = RunBook.run(spark, root, nDocs = 60, withCoref = true)
     val lists = r1.triples.select($"rel_list").distinct().collect().map(_.getString(0)).toSet
     assert(lists.exists(_.endsWith("_corefed")), s"no corefed lists in $lists")
     // merged total = base pass + coref second pass (set-diff lists are disjoint)
@@ -237,20 +237,20 @@ class PipelineSpec extends SparkSpecBase {
     assert(coref > 0, "synth corpus must exercise the coref second pass")
     assert(r1.triples.count() == base + coref)
     // resume returns identical data without recompute
-    val r2 = Pipeline.run(spark, root, nDocs = 60, withCoref = true)
+    val r2 = RunBook.run(spark, root, nDocs = 60, withCoref = true)
     assert(r2.triples.count() == r1.triples.count())
     // toggling the flag INVALIDATES downstream stages instead of reusing them
-    val r3 = Pipeline.run(spark, root, nDocs = 60, withCoref = false)
+    val r3 = RunBook.run(spark, root, nDocs = 60, withCoref = false)
     assert(r3.triples.count() == base)
   }
 
   test("checkpointed run resumes without recomputation") {
     val root = Files.createTempDirectory("graft-ckpt").toString
-    val r1 = Pipeline.run(spark, root, nDocs = 50)
+    val r1 = RunBook.run(spark, root, nDocs = 50)
     val t1 = r1.triples.count()
     assert(t1 > 0)
     // resume: stage outputs already exist; run must return identical data
-    val r2 = Pipeline.run(spark, root, nDocs = 50)
+    val r2 = RunBook.run(spark, root, nDocs = 50)
     assert(r2.triples.count() == t1)
     assert(new java.io.File(s"$root/triples/_graft_meta.json").exists())
     // explicit bucketed layout on the keyed stages — including the
@@ -300,11 +300,11 @@ class PipelineSpec extends SparkSpecBase {
 
   test("a checkpoint from different run parameters is invalidated, not reused") {
     val root = Files.createTempDirectory("graft-ckpt-fp").toString
-    val r1 = Pipeline.run(spark, root, nDocs = 30)
+    val r1 = RunBook.run(spark, root, nDocs = 30)
     val d1 = r1.docsOut.count()
     assert(d1 == 30)
     // same root, different parameters: stale stages must be recomputed
-    val r2 = Pipeline.run(spark, root, nDocs = 45)
+    val r2 = RunBook.run(spark, root, nDocs = 45)
     assert(r2.docsOut.count() == 45,
            "stale docs checkpoint (nDocs=30) silently reused for nDocs=45")
     val meta = new String(Files.readAllBytes(
@@ -332,7 +332,7 @@ class PipelineSpec extends SparkSpecBase {
     import org.apache.spark.sql.functions.col
     // one-shot truth over docs [0, 20)
     val oneShot = Files.createTempDirectory("graft-seq-oneshot").toString
-    Pipeline.runFromDocs(spark, oneShot, Pipeline.synthDocs(spark, 20),
+    RunBook.runFromDocs(spark, oneShot, Pipeline.synthDocs(spark, 20),
       fingerprint = "seq-oneshot")
     def table(root: String, stage: String) =
       spark.read.parquet(s"$root/$stage").drop("_bucket")
@@ -344,11 +344,11 @@ class PipelineSpec extends SparkSpecBase {
       Seq((12L, 20L), (0L, 13L), (6L, 16L)))
     for ((slices, i) <- sequences.zipWithIndex) {
       val root = Files.createTempDirectory(s"graft-seq-$i").toString
-      Pipeline.runFromDocs(spark, root,
+      RunBook.runFromDocs(spark, root,
         Pipeline.synthDocsRange(spark, slices.head._1, slices.head._2),
         fingerprint = s"seq-$i-seed")
       for (((from, until), k) <- slices.tail.zipWithIndex)
-        Pipeline.incrementalFold(spark, root,
+        RunBook.incrementalFold(spark, root,
           Pipeline.synthDocsRange(spark, from, until),
           fingerprint = s"seq-$i-fold-$k")
       assert(table(root, "triples").exceptAll(table(oneShot, "triples")).isEmpty &&
@@ -553,7 +553,7 @@ class PipelineSpec extends SparkSpecBase {
     }
     val before = stage().collect().sorted.toSeq
     assert(computed == 1)
-    val rep = store.compact("nums", maxRecordsPerFile = 1000000L)
+    val rep = store.compact("nums")
     assert(rep.rowsBefore == 500 && rep.rowsAfter == 500)
     assert(rep.filesBefore == 16 && rep.filesAfter == 1,
            s"expected 16 -> 1 files, got ${rep.filesBefore} -> ${rep.filesAfter}")
@@ -672,14 +672,14 @@ class PipelineSpec extends SparkSpecBase {
 
   test("the three graph stages share one pinned cap: job budget of their recompute") {
     val root = Files.createTempDirectory("graft-graph-budget").toString
-    Pipeline.run(spark, root, nDocs = nDocs)
+    RunBook.run(spark, root, nDocs = nDocs)
     for (s <- graphStageNames)
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root, s))
     // the upstream stages resume; only the graph stages recompute. One
     // pinned cap shared by the three stages runs 40 jobs here (44 while
     // a resume inferred each stage's schema); capping once per stage
     // (edges unpinned, both batteries pinned) ran 48
-    val n = jobs("graph-stages")(Pipeline.run(spark, root, nDocs = nDocs))
+    val n = jobs("graph-stages")(RunBook.run(spark, root, nDocs = nDocs))
     assert(n <= 46, s"recomputing the three graph stages ran $n jobs")
     for (s <- graphStageNames)
       assert(new java.io.File(s"$root/$s/_graft_meta.json").exists(), s)
@@ -687,9 +687,9 @@ class PipelineSpec extends SparkSpecBase {
 
   test("a fold builds one delta: job budgets of a mutating fold and a no-op re-submission") {
     val root = Files.createTempDirectory("graft-fold-budget").toString
-    Pipeline.run(spark, root, nDocs = nDocs)
+    RunBook.run(spark, root, nDocs = nDocs)
     // half of the slice [150, 250) is already stored
-    def fold() = Pipeline.incrementalFold(spark, root,
+    def fold() = RunBook.incrementalFold(spark, root,
       Pipeline.synthDocsRange(spark, 150, 250), fingerprint = "fold-budget")
     def files() = {
       def walk(f: java.io.File): Seq[(String, Long)] =
@@ -714,7 +714,7 @@ class PipelineSpec extends SparkSpecBase {
   test("run-book graph stages == the public builders over the root's own canonical") {
     import org.apache.spark.sql.functions.col
     val root = Files.createTempDirectory("graft-graph-builders").toString
-    Pipeline.run(spark, root, nDocs = nDocs)
+    RunBook.run(spark, root, nDocs = nDocs)
     def stored(s: String) = spark.read.parquet(s"$root/$s").drop("_bucket")
     val pp = Pipeline.pairPredAggregate(stored("canonical"))
     val sentences = stored("sentences").as[graft.model.SentenceRow]
@@ -753,11 +753,11 @@ class PipelineSpec extends SparkSpecBase {
 
   test("a corrupted (incomplete) checkpoint stage is recomputed, not trusted") {
     val root = Files.createTempDirectory("graft-ckpt-corrupt").toString
-    val r1 = Pipeline.run(spark, root, nDocs = 30)
+    val r1 = RunBook.run(spark, root, nDocs = 30)
     val t1 = r1.triples.count()
     // simulate a killed writer: completeness marker gone mid-stage
     new java.io.File(s"$root/triples/_graft_meta.json").delete()
-    val r2 = Pipeline.run(spark, root, nDocs = 30)
+    val r2 = RunBook.run(spark, root, nDocs = 30)
     assert(r2.triples.count() == t1)
     assert(new java.io.File(s"$root/triples/_graft_meta.json").exists(),
            "recomputed stage must re-write its lineage meta")
