@@ -49,8 +49,8 @@ import graft.sources.CorpusReaders
   *                               source offsets
   *
   * Outputs under --out: docs/ sentences/ triples/ [coref_triples/]
-  * canonical/ edges/ edge_weights/ excluded/ [mentions/] stats.json —
-  * each stage a
+  * canonical/ pairpred/ type_evidence/ edges/ edge_weights/
+  * typed_edge_weights/ excluded/ [mentions/] stats.json — each stage a
   * fingerprinted checkpoint (a killed job resumes; changed inputs
   * invalidate). Under bare `sbt runMain` (no master configured) it
   * falls back to local[*]. */

@@ -8,9 +8,7 @@ import org.apache.spark.sql.functions._
   * (the driver's DuckDB oracle). Everything is derived from md5 hex
   * digests, the one cryptographic hash both engines expose identically.
   *
-  * Three primitives:
-  *  - hex windows of md5 as STRING hash values (min-hash over strings —
-  *    lexicographic min of uniform hex strings is a valid MinHash);
+  * Two primitives:
   *  - a 48-bit non-negative long from the first 12 hex chars (bit-level
   *    ops like SimHash; 48 bits keeps every value exact in a double, so
   *    no SQL engine loses precision);
@@ -23,14 +21,6 @@ import org.apache.spark.sql.functions._
 object PortableHash {
 
   // -------------------------------------------------------- Spark columns
-
-  /** 8-hex-char window `w` (0-based) of md5("<seed>:" ++ s) — a 32-bit
-    * hash value as a lowercase hex STRING. One md5 yields 4 windows. */
-  def md5Window(seed: Int, s: Column, w: Int): Column =
-    substring(md5(concat(lit(seed + ":"), s)), 1 + 8 * w, 8)
-
-  /** hash function #i of a family: seed = i/4, window = i%4. */
-  def familyHash(i: Int, s: Column): Column = md5Window(i / 4, s, i % 4)
 
   val Mask48 = 0xFFFFFFFFFFFFL
 

@@ -105,8 +105,9 @@ final class CheckpointStore(root: String, spark: SparkSession,
   def foldInFlight: Boolean = fs.exists(new Path(root, "_fold_inflight"))
 
   /** One-shot-path recovery from a crashed fold: wipe every stage's
-    * completion meta (forces full recompute), drop the fold-owned
-    * aggregates ([[dropFoldAggregates]]), clear the marker. Lives HERE because the meta
+    * completion meta (forces full recompute — the `pairpred` and
+    * `type_evidence` aggregates included, so the rerun overwrites them
+    * with the rest), clear the marker. Lives HERE because the meta
     * filename and layout are this store's implementation details — a
     * caller hand-deleting `_graft_meta.json` would silently stop working
     * if the name ever changed, turning the wipe into stale-data resume.
@@ -117,17 +118,9 @@ final class CheckpointStore(root: String, spark: SparkSession,
       fs.listStatus(new Path(root)).filter(_.isDirectory).foreach { d =>
         fs.delete(new Path(d.getPath, "_graft_meta.json"), false)
       }
-      dropFoldAggregates()
       fs.delete(new Path(root, "_fold_inflight"), false)
       true
     }
-
-  /** delete the fold-owned additive aggregates (`pairpred`,
-    * `type_evidence`); a fold whose root lacks one re-derives it from the
-    * stores. Both crash recoveries drop them: the one-shot rerun above and
-    * the incremental fold's repair. */
-  def dropFoldAggregates(): Unit =
-    Seq("pairpred", "type_evidence").foreach(d => fs.delete(new Path(root, d), true))
 
   /** Delete data files a crashed append left UNRECORDED in the stage's
     * lineage meta (Iceberg's orphan-file semantics: files no snapshot

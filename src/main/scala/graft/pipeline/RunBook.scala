@@ -53,9 +53,9 @@ object RunBook {
     import spark.implicits._
     val store = new CheckpointStore(checkpointRoot, spark,
       fingerprint = oneShotFingerprint(fingerprint, withCoref))
-    // a crashed incremental fold left this root suspect: wipe completion
-    // metas + the fold-owned pairpred, clear the marker, recompute all
-    // (the store owns the layout — see CheckpointStore.recoverFoldCrash)
+    // a crashed incremental fold left this root suspect: wipe every
+    // completion meta, clear the marker, recompute all (the store owns
+    // the layout — see CheckpointStore.recoverFoldCrash)
     store.recoverFoldCrash()
     val docs = store.runStage("docs", bucketCol = Some("doc_id"))(inputDocs)
     val sentences = store.runStage("sentences", Seq("docs"))(segmentDocs(docs))
@@ -73,35 +73,37 @@ object RunBook {
     val canonBack = store.runStageDF("canonical", Seq("triples"),
       bucketCol = Some("doc_id"))(
       canonicalize(triples, dict))
-    // the graph stages read the checkpointed canonical parquet, so the
-    // shared capped subtree's re-scans are cheap. Type evidence comes
-    // from the checkpointed sentences (entity-link mentions ⋈ annotator
-    // labels), derived inline — the fold maintains the SAME surface from
-    // its additive `type_evidence` aggregate ([[incrementalFold]])
+    // the aggregates the fold maintains are stages too, recomputed with
+    // canonical under a changed fingerprint — a later fold never finds
+    // one left over from another corpus
     val edgesBack = graphStages(store, pairPredAggregate(canonBack),
-      entityTypesFromEvidence(typeEvidence(sentences, dict)))
+      typeEvidence(sentences, dict))
     RunResult(canonBack, edgesBack, docs)
   }
 
-  /** the three entailment-graph stages — `edges`, `edge_weights` and
-    * `typed_edge_weights` — derived from ONE pinned cap of the pair-pred
-    * aggregate ([[Pipeline.cappedCheckpointed]]): the edges select over
-    * the evidence core, the count battery, and the typed battery joining
-    * the entity types onto the capped rows ([[Pipeline.typedFromCapped]]).
-    * The cap is a `lazy val` and the entity types a thunk, so a stage that
-    * resumes never builds them and a fully resumed run materializes no
-    * pin. Shared by [[runFromDocs]] and [[incrementalFold]]; all three are
-    * bucketed by pred_src — the entailment-graph consumer reads by
-    * predicate, so bucket predicates prune its scans. Returns the edges
-    * stage. */
-  private def graphStages(store: CheckpointStore, pairPred: DataFrame,
-                          entityTypes: => DataFrame): DataFrame = {
+  /** the two additive aggregate stages — `pairpred` and
+    * `type_evidence` — and the three entailment-graph stages derived from
+    * them, `edges`, `edge_weights` and `typed_edge_weights`, through ONE
+    * pinned cap of the stored pair-pred aggregate
+    * ([[Pipeline.cappedCheckpointed]]): the edges select over the
+    * evidence core, the count battery, and the typed battery joining the
+    * entity types onto the capped rows ([[Pipeline.typedFromCapped]]).
+    * The cap is a `lazy val`, so a stage that resumes never builds it and
+    * a fully resumed run materializes no pin. Shared by [[runFromDocs]]
+    * and [[incrementalFold]], so both derive the graph from the same
+    * stored inputs; the graph stages are bucketed by pred_src — the
+    * entailment-graph consumer reads by predicate, so bucket predicates
+    * prune its scans. Returns the edges stage. */
+  private def graphStages(store: CheckpointStore, pairPred: => DataFrame,
+                          evidence: => DataFrame): DataFrame = {
+    val pp = store.runStageDF("pairpred", Seq("canonical"))(pairPred)
+    val ev = store.runStageDF("type_evidence", Seq("sentences"))(evidence)
     def stage(name: String)(df: => DataFrame) =
       store.runStageDF(name, Seq("canonical"), bucketCol = Some("pred_src"))(df)
-    lazy val capped = cappedCheckpointed(pairPred)
+    lazy val capped = cappedCheckpointed(pp)
     val edges = stage("edges")(edgesFromCapped(capped))
     stage("edge_weights")(edgeWeightsFromCapped(capped))
-    stage("typed_edge_weights")(typedFromCapped(capped, entityTypes))
+    stage("typed_edge_weights")(typedFromCapped(capped, entityTypesFromEvidence(ev)))
     edges
   }
 
@@ -183,15 +185,16 @@ object RunBook {
     *
     *   fresh docs ⋉̸ docs-store ids              (the ONE delta: new docs)
     *   → segment the new docs once → extract → canonicalize
-    *   → pairPredAggregate(canonical delta) folded into the maintained
-    *     `pairpred` aggregate ([[Pipeline.mergePairPred]], additive,
-    *     agg-sized), the new docs' type evidence into `type_evidence` the
-    *     same way
+    *   → pairPredAggregate(canonical delta) folded into the stored
+    *     `pairpred` stage ([[Pipeline.mergePairPred]], additive,
+    *     agg-sized), the new docs' type evidence into the `type_evidence`
+    *     stage the same way
     *   → APPEND to docs + triples + canonical IN THAT ORDER (same bucket
     *     layout; history files untouched — Iceberg append, not rewrite;
     *     the order maintains canonical ⊆ triples ⊆ docs under any crash)
-    *   → [[graphStages]] re-derived from the merged aggregates (the
-    *     non-additive cap/expansion — never rescans the corpus).
+    *   → [[graphStages]]: both aggregate stages rewritten, the graph
+    *     re-derived from them (the non-additive cap/expansion — never
+    *     rescans the corpus).
     *
     * PRECONDITION of the one delta: when it is computed, every stored doc
     * has all its triple and canonical rows (canonical ⊆ triples ⊆ docs,
@@ -209,22 +212,25 @@ object RunBook {
     * mutations with a `_fold_inflight` marker. A fold that finds the
     * marker runs REPAIR first: docs missing from triples are
     * re-extracted, triples missing from canonical re-canonicalized
-    * (both doc-granular appends), and the fold-owned `pairpred` and
-    * `type_evidence` aggregates are DROPPED, so the fold re-derives both
-    * from the reconciled stores as it would for a root that never had
-    * them (the repair path's only non-slice-sized cost; the normal path
-    * never pays it).
+    * (both doc-granular appends), and the stored `pairpred` and
+    * `type_evidence` stages are IGNORED: the fold re-derives both from
+    * the reconciled stores (the repair path's only non-slice-sized cost;
+    * the normal path never pays it).
     * Every mutation is individually idempotent, so repair + re-fold
     * always converges to the one-shot result.
     *
     * The existing corpus is NEVER re-extracted or re-segmented on the
     * normal path: at 100 TB the cost is the new docs' extraction + one
-    * doc-id column scan of history + aggregate-sized folds. A
-    * missing `pairpred` store (a root written before this path existed)
-    * is derived once from the canonical store and maintained from then
-    * on. The updated stages are re-stamped with THIS fingerprint, so a
-    * later rerun of the original one-shot command invalidates and
-    * recomputes instead of silently reusing the folded store.
+    * doc-id column scan of history + aggregate-sized folds. Every writer
+    * of `canonical` — the one-shot and this fold — writes both aggregate
+    * stages right after it under the same fingerprint, so the fold reads
+    * a stored aggregate only when its fingerprint equals canonical's; a
+    * mismatch (a one-shot that crashed after canonical, a root written
+    * before the aggregates were stages) derives it from the stores, as
+    * repair does. The updated stages are re-stamped with THIS
+    * fingerprint, so a later rerun of the original one-shot command
+    * invalidates and recomputes instead of silently reusing the folded
+    * store.
     *
     * Restriction (ENFORCED): the root must have been built WITHOUT
     * --coref — the fresh slice runs base extraction only, and folding
@@ -268,9 +274,6 @@ object RunBook {
       if (!missingC.isEmpty)
         store.appendStage(canonicalize(missingC.as[TripleRow], dict),
           "canonical", Seq("triples"), bucketCol = Some("doc_id"))
-      // the fold-owned aggregates are dropped; the mutating branch below
-      // re-derives each from the reconciled stores before the first append
-      store.dropFoldAggregates()
       // marker stays until THIS fold completes
     } else {
       fs.create(marker, true).close()
@@ -291,32 +294,29 @@ object RunBook {
         val sentsNew = segmentDocs(asDocs(docsNew)).localCheckpoint()
         val tNew = extractTriples(sentsNew).toDF().localCheckpoint()
         val cNew = canonicalize(tNew.as[TripleRow], dict).localCheckpoint()
-        // the maintained additive aggregates; a root written before one
-        // existed, or whose repair dropped it, derives it once from the
-        // stores and maintains it from then on. The pins also break each
+        // the additive aggregates: the stored stage when the writer of
+        // canonical wrote it too (same fingerprint) and no repair ran,
+        // else derived from the stores. The pins also break each
         // read/overwrite cycle
-        val ppPath = s"$root/pairpred"
+        val canonFp = store.stageFingerprint("canonical")
+        def current(stage: String) =
+          !repaired && canonFp.isDefined && store.stageFingerprint(stage) == canonFp
         val ppExisting =
-          if (fs.exists(new Path(ppPath, "_SUCCESS"))) spark.read.parquet(ppPath)
+          if (current("pairpred")) store.readData("pairpred")
           else pairPredAggregate(store.readData("canonical"))
         val ppMerged = mergePairPred(ppExisting, pairPredAggregate(cNew)).localCheckpoint()
-        val evPath = s"$root/type_evidence"
         val evExisting =
-          if (fs.exists(new Path(evPath, "_SUCCESS"))) spark.read.parquet(evPath)
+          if (current("type_evidence")) store.readData("type_evidence")
           else typeEvidence(segmentDocs(asDocs(store.readData("docs"))), dict)
         val ev = mergeTypeEvidence(evExisting, typeEvidence(sentsNew, dict)).localCheckpoint()
         store.appendStage(docsNew, "docs", Nil, bucketCol = Some("doc_id"))
         store.appendStage(tNew, "triples", Seq("sentences"), bucketCol = Some("doc_id"))
         store.appendStage(cNew, "canonical", Seq("triples"), bucketCol = Some("doc_id"))
-        ppMerged.write.mode("overwrite").parquet(ppPath)
-        ev.write.mode("overwrite").parquet(evPath)
-        // re-derive edges and both weight surfaces from the merged
-        // aggregates and overwrite the stages (runStageDF under THIS
-        // fingerprint re-stamps the meta; the standing marker keeps
-        // isComplete false here, which is what a mutating fold needs). A
-        // pre-weights root simply gains the weight stages on its first
-        // mutating fold
-        graphStages(store, ppMerged, entityTypesFromEvidence(ev))
+        // overwrite both aggregates, then re-derive edges and both weight
+        // surfaces from them (runStageDF under THIS fingerprint re-stamps
+        // each meta; the standing marker keeps isComplete false here,
+        // which is what a mutating fold needs)
+        graphStages(store, ppMerged, ev)
         relTotals(tNew)
       }
     val result = IncrementalResult(newDocs, deltaRelTotals, repaired)

@@ -20,7 +20,8 @@ import graft.segment.Segmenter
   *
   * Every reader emits the same preprocessed-doc table and an excluded-docs
   * side output (entries whose admitted-sentence list is empty — the
-  * reference's *_excluded.jsonl sink, :219-224). Schema-first reads (no
+  * reference's *_excluded.jsonl sink, :219-224 — or whose id is missing
+  * or empty). Schema-first reads (no
   * inference pass over 100 TB); one narrow map per doc, no shuffle.
   */
 object CorpusReaders {
@@ -31,7 +32,8 @@ object CorpusReaders {
                                    splitted_text: Vector[String],
                                    split_mapping: Vector[Int])
 
-  /** an entry routed to the excluded sink (no admissible sentences). */
+  /** an entry routed to the excluded sink (no admissible sentences, or no
+    * id). */
   final case class ExcludedDoc(doc_id: String, raw_text: String)
 
   /** concrete routed row — Spark cannot encode/deserialize the abstract
@@ -49,14 +51,15 @@ object CorpusReaders {
     def uncache(): ReaderOutput = { routed.foreach(_.unpersist()); this }
   }
 
-  /** split → normalize → admit-or-exclude, shared by all readers. */
+  /** split → normalize → admit-or-exclude, shared by all readers. An
+    * entry without an id (missing or empty) is excluded unsegmented: two
+    * such entries would share the doc_id `''` and merge downstream. */
   def preprocess(docId: String, chunks: Seq[String],
                  mapping: Option[Seq[Int]] = None): Either[ExcludedDoc, PreprocessedDoc] = {
-    val pairs = mapping match {
-      case Some(m) => Segmenter.splitStr(chunks, m)
-      case None => Segmenter.splitStr(chunks)
-    }
-    val normed = Segmenter.tokNormWithMapping(pairs)
+    val normed =
+      if (docId.isEmpty) Vector.empty
+      else Segmenter.tokNormWithMapping(
+        Segmenter.splitStr(chunks, mapping.getOrElse(chunks.indices)))
     if (normed.isEmpty) Left(ExcludedDoc(docId, chunks.mkString("。")))
     else Right(PreprocessedDoc(docId, normed.map(_._1), normed.map(_._2)))
   }

@@ -52,6 +52,25 @@ class CorpusReaderSpec extends SparkSpecBase {
     assert(excluded == Set("w2"))
   }
 
+  test("a record with a missing or empty id is excluded, never merged under doc_id ''") {
+    val text = "这是第一句话呀。这是第二句话呀！"
+    val webhose = CorpusReaders.readWebhose(spark, writeJsonl(Seq(
+      s"""{"uuid":"w1","title":"t","text":"$text"}""",
+      s"""{"title":"t","text":"$text"}""",
+      s"""{"uuid":"","title":"t","text":"$text"}""")))
+    val clue = CorpusReaders.readClue(spark, writeJsonl(Seq(
+      s"""{"news_id":"c1","content":"$text"}""",
+      s"""{"content":"$text"}""")))
+    val newsspike = CorpusReaders.readNewsspike(spark, writeJsonl(Seq(
+      s"""{"id":"n1","splitted_text":["$text"],"split_mapping":[0]}""",
+      s"""{"splitted_text":["$text"],"split_mapping":[0]}""")))
+    for ((out, id, nIdless) <- Seq((webhose, "w1", 2), (clue, "c1", 1), (newsspike, "n1", 1))) {
+      assert(out.docs.collect().map(_.doc_id).toSeq == Seq(id))
+      val excluded = out.excluded.collect()
+      assert(excluded.length == nIdless && excluded.forall(_.doc_id == ""), excluded.toSeq)
+    }
+  }
+
   test("clue reader: content payload, news_id key") {
     val dir = writeJsonl(Seq(
       """{"news_id":"c1","title":"标题","content":"内容的第一句话呀。内容的第二句话呀。"}""",

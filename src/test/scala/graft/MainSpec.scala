@@ -352,12 +352,13 @@ class MainSpec extends SparkSpecBase {
     // in-flight marker is still standing
     val crashStore = new graft.pipeline.CheckpointStore(out, spark,
       fingerprint = "crashed-fold")
+    val P = graft.pipeline.Pipeline
+    val foreign = P.extractTriples(P.segmentDocs(P.synthDocsRange(spark, 30, 35)))
+    crashStore.appendStage(foreign.toDF(), "triples", Nil, bucketCol = Some("doc_id"))
+    // and the crashed fold's aggregate already counted them
     crashStore.appendStage(
-      graft.pipeline.Pipeline.extractTriples(graft.pipeline.Pipeline.segmentDocs(
-        graft.pipeline.Pipeline.synthDocsRange(spark, 30, 35))).toDF(),
-      "triples", Nil, bucketCol = Some("doc_id"))
+      P.pairPredAggregate(P.canonicalize(foreign, P.synthAliases(spark))), "pairpred")
     Files.createFile(Paths.get(out, "_fold_inflight"))
-    Files.createDirectories(Paths.get(out, "pairpred")) // stale fold-owned agg
     // rerunning the ORIGINAL one-shot command must recompute everything —
     // resuming would silently keep the foreign docs in triples while
     // canonical/edges lack them
@@ -367,7 +368,70 @@ class MainSpec extends SparkSpecBase {
     assert(triples.filter(col("doc_id") >=
       graft.synth.SynthDocs.docId(30)).count() == 0)
     assert(!new java.io.File(s"$out/_fold_inflight").exists())
-    assert(!new java.io.File(s"$out/pairpred").exists(), "stale pairpred must be dropped")
+    // the recovery run recomputed the aggregate stage with canonical
+    val pairpred = spark.read.parquet(s"$out/pairpred")
+    val truth = P.pairPredAggregate(spark.read.parquet(s"$out/canonical").drop("_bucket"))
+    assert(pairpred.exceptAll(truth).isEmpty && truth.exceptAll(pairpred).isEmpty,
+      "stale pairpred must be recomputed")
+  }
+
+  /** each of `stages` holds the same multiset of rows under `root` as
+    * under `truth`, and the two stats.json files are equal. */
+  private def assertSameOutputs(root: String, truth: String, stages: Seq[String]): Unit = {
+    for (stage <- stages) {
+      def table(r: String) = spark.read.parquet(s"$r/$stage").drop("_bucket")
+      assert(table(root).exceptAll(table(truth)).isEmpty &&
+             table(truth).exceptAll(table(root)).isEmpty,
+        s"$stage: ${table(root).count()} rows vs ${table(truth).count()}")
+    }
+    val mapper = new ObjectMapper()
+    def stats(r: String) = mapper.readTree(Files.readString(Paths.get(s"$r/stats.json")))
+    assert(stats(root) == stats(truth), s"stats.json: ${stats(root)} vs ${stats(truth)}")
+  }
+
+  private val graphOutputs = Seq("docs", "canonical", "edges", "edge_weights",
+    "typed_edge_weights", "pairpred", "type_evidence")
+
+  test("a fold after a one-shot over a folded root folds into the one-shot's aggregates") {
+    // one-shot [0,20), fold [20,30), then a one-shot over [40,60) — a new
+    // fingerprint, so every stage recomputes — and a fold of [60,66): the
+    // last fold must merge into [40,60)'s aggregates, not [0,30)'s
+    val out = Files.createTempDirectory("graft-refold").toString
+    def run(args: String*): Unit =
+      Main.main(Array("--reader", "synth", "--out", out) ++ args)
+    run("--docs", "20")
+    run("--docs", "30", "--docs-from", "20", "--incremental")
+    run("--docs", "60", "--docs-from", "40")
+    run("--docs", "66", "--docs-from", "60", "--incremental")
+    val clean = Files.createTempDirectory("graft-refold-clean").toString
+    Main.main(Array("--reader", "synth", "--docs", "66", "--docs-from", "40", "--out", clean))
+    assertSameOutputs(out, clean, graphOutputs)
+  }
+
+  test("a fold derives an aggregate whose fingerprint is not canonical's") {
+    // a one-shot that crashed after canonical leaves the previous run's
+    // aggregate stages behind: one-shot [0,20)'s pairpred and
+    // type_evidence (with their lineage) restored into a [0,25) root
+    val out = Files.createTempDirectory("graft-stale-agg").toString
+    val saved = Files.createTempDirectory("graft-stale-agg-saved").toString
+    val aggDirs = Seq("pairpred", "type_evidence", "_lineage/pairpred", "_lineage/type_evidence")
+    def copy(from: String, to: String): Unit = aggDirs.foreach { d =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(to, d))
+      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(from, d), new java.io.File(to, d))
+    }
+    Main.main(Array("--reader", "synth", "--docs", "20", "--out", out))
+    copy(out, saved)
+    Main.main(Array("--reader", "synth", "--docs", "25", "--out", out))
+    copy(saved, out)
+    val store = new graft.pipeline.CheckpointStore(out, spark)
+    for (agg <- Seq("pairpred", "type_evidence"))
+      assert(store.stageFingerprint(agg).isDefined &&
+             store.stageFingerprint(agg) != store.stageFingerprint("canonical"), agg)
+    Main.main(Array("--reader", "synth", "--docs", "40", "--docs-from", "25",
+                    "--out", out, "--incremental"))
+    val clean = Files.createTempDirectory("graft-stale-agg-clean").toString
+    Main.main(Array("--reader", "synth", "--docs", "40", "--out", clean))
+    assertSameOutputs(out, clean, graphOutputs)
   }
 
   test("--stream-once drains a docs stream and maintains the edge table incrementally") {
